@@ -1,11 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.agg.StatsPlan
+import graft.agg.{CloudFractionAgg, StatsPlan}
 import graft.expr.GridExprs
-import graft.model.JobConfig
+import graft.model.{JobConfig, VarSpec}
 
 /** The engine's one canonical pipeline (reference query lifecycle, SURVEY §3):
   *
@@ -46,51 +46,51 @@ object GridAggregation {
       .filter(GridExprs.cellInGrid(col("cell"), g))
   }
 
-  /** Per-cell statistics for all configured variables (A1-A7). One shuffle,
-    * keyed by cell; everything before it is map-side.
+  /** The reference's pseudo-variable that asks for the cloud fraction
+    * (A8/A9) of the cloud mask rather than statistics of a data column.
+    */
+  val CloudFractionVar = "cloud_fraction_CM"
+
+  /** The L3 grid in ONE `groupBy(cell)`: the [[StatsPlan]] partials of
+    * every data variable (A1-A7) and, when the config lists
+    * [[CloudFractionVar]], the [[CloudFractionAgg]] beside them (A8/A9:
+    * `cloud_fraction_{Minimum,Maximum,Mean,Pixel_Counts}` + `GRID_Counts`).
+    * One scan, one shuffle keyed by cell; everything before it is map-side.
+    *
+    * A joint-histogram partner must be a real data column; the reference
+    * would KeyError on a jhist spec pointing at the cloud_fraction_CM
+    * pseudo-variable (its `data` dict never holds that key), so the engine
+    * rejects the same configs by dropping the unusable joint spec.
     */
   def aggregate(pixels: DataFrame, cfg: JobConfig, cols: PixelCols = PixelCols()): DataFrame = {
-    require(cfg.vars.nonEmpty, "JobConfig.vars must not be empty")
-    val cellged = withCell(pixels, cfg, cols)
-    val partials = cfg.vars.flatMap(v => StatsPlan.partialAggs(v, cfg.stats))
-    val grouped = cellged.groupBy(col("cell")).agg(partials.head, partials.tail: _*)
-    val outs = col("cell") +: cfg.vars.flatMap(v => StatsPlan.finalizeCols(v, cfg.stats))
+    val dataVars = cfg.vars.filterNot(_.name == CloudFractionVar).map { v =>
+      if (v.joint.exists(_.jointVar == CloudFractionVar)) v.copy(joint = None) else v
+    }
+    val wantCf = cfg.vars.exists(_.name == CloudFractionVar)
+    val cf = s"${CloudFractionVar}__agg"
+    val partials = dataVars.flatMap(v => StatsPlan.partialAggs(v, cfg.stats)) ++
+      (if (wantCf) Seq(CloudFractionAgg.cloudFraction(col(cols.cmFlag), col(cols.granule)).as(cf))
+      else Nil)
+    require(partials.nonEmpty, "JobConfig.vars must list a variable with a statistic to compute")
+    val grouped = withCell(pixels, cfg, cols).groupBy(col("cell"))
+      .agg(partials.head, partials.tail: _*)
+    val cfOuts = if (!wantCf) Nil else Seq(
+      "cloud_fraction_Minimum" -> "min", "cloud_fraction_Maximum" -> "max",
+      "cloud_fraction_Mean" -> "mean", "cloud_fraction_Pixel_Counts" -> "pixel_counts",
+      "GRID_Counts" -> "grid_counts").map { case (out, field) => col(s"$cf.$field").as(out) }
+    val outs = col("cell") +: (dataVars.flatMap(v => StatsPlan.finalizeCols(v, cfg.stats)) ++ cfOuts)
     grouped.select(outs: _*)
   }
 
-  /** Cloud-fraction two-level aggregation (reference A9,
-    * `aggregate_functions.py:365-380`): per (cell, granule) compute
-    * `TOT = #(0 <= flag <= 3)`, `CLD = #(0 <= flag <= 1)`,
-    * `Fraction = CLD/TOT`; then per cell:
-    *
-    *   - Mean = sum(CLD)/sum(TOT)  (pixel-weighted, NOT mean of fractions)
-    *   - Min/Max over the per-granule fractions
-    *   - Pixel_Counts = sum(TOT)
-    *   - GRID_Counts = #granules contributing >= 1 determined pixel (A8)
-    *
-    * Two `groupBy`s = granule-level partials then a tiny cell-keyed merge —
-    * the same shape as the reference's per-granule pre-aggregation, and the
-    * second shuffle carries only (cells x granules-per-cell) rows.
+  /** Cloud fraction alone (reference A9, `aggregate_functions.py:365-380`):
+    * [[aggregate]] with only [[CloudFractionVar]] configured — per cell the
+    * pixel-weighted Mean = sum(CLD)/sum(TOT) (NOT a mean of fractions),
+    * Min/Max over the per-granule fractions CLD/TOT, Pixel_Counts =
+    * sum(TOT) and GRID_Counts = #granules with >= 1 determined pixel (A8),
+    * where TOT = #(0 <= flag <= 3) and CLD = #(0 <= flag <= 1).
     */
-  def cloudFraction(pixels: DataFrame, cfg: JobConfig, cols: PixelCols = PixelCols()): DataFrame = {
-    val cm = col(cols.cmFlag)
-    val perGranule = withCell(pixels, cfg, cols)
-      .groupBy(col("cell"), col(cols.granule))
-      .agg(
-        sum(when(cm >= 0 && cm <= 3, 1L).otherwise(0L)).as("tot_pix"),
-        sum(when(cm >= 0 && cm <= 1, 1L).otherwise(0L)).as("cld_pix"))
-      // TOT==0 -> NULL fraction (reference 0/0 -> NaN, skipped by min/max)
-      .withColumn("fraction", col("cld_pix") / nullif(col("tot_pix"), lit(0L)))
-    perGranule
-      .groupBy(col("cell"))
-      .agg(
-        min(col("fraction")).as("cloud_fraction_Minimum"),
-        max(col("fraction")).as("cloud_fraction_Maximum"),
-        (sum(col("cld_pix")) / nullif(sum(col("tot_pix")), lit(0L)))
-          .as("cloud_fraction_Mean"),
-        sum(col("tot_pix")).as("cloud_fraction_Pixel_Counts"),
-        count(when(col("tot_pix") > 0, 1)).as("GRID_Counts"))
-  }
+  def cloudFraction(pixels: DataFrame, cfg: JobConfig, cols: PixelCols = PixelCols()): DataFrame =
+    aggregate(pixels, cfg.copy(vars = Seq(VarSpec(CloudFractionVar))), cols)
 
   /** Granule-coverage count per cell for one variable (reference A8,
     * `GRID_Counts`, `aggregate_functions.py:245-247`): the number of

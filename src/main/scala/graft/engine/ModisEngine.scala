@@ -8,21 +8,19 @@ import graft.expr.GridExprs
 import graft.model.JobConfig
 
 /** Full reference-pipeline orchestration (SURVEY §3): one call from pixel
-  * frame to the complete L3 grid frame, combining
+  * frame to the complete L3 grid frame —
   *
   *   - the day-definition correction (P4) on every measured variable and
   *     the cloud mask,
-  *   - per-variable statistics (A1-A7) via [[GridAggregation.aggregate]],
-  *   - the cloud-fraction two-level aggregation (A8/A9) when the config
-  *     lists the reference's pseudo-variable `cloud_fraction_CM`,
-  *
-  * joined on the grid cell. The join is cell-keyed over <= grid-cell-count
-  * rows — broadcast-size by construction, so combining the aggregates never
-  * re-shuffles pixel-scale data.
+  *   - systematic sampling,
+  *   - ONE cell-keyed aggregation ([[GridAggregation.aggregate]]) holding
+  *     the per-variable statistics (A1-A7) and, when the config lists the
+  *     reference's pseudo-variable `cloud_fraction_CM`, the cloud fraction
+  *     (A8/A9) beside them: one scan, one shuffle, no join.
   */
 object ModisEngine {
 
-  val CloudFractionVar = "cloud_fraction_CM"
+  val CloudFractionVar: String = GridAggregation.CloudFractionVar
 
   /** Apply the day-definition null-out to all measured variables and the
     * cloud-mask flag (reference applies it to every `data[key]` and CM,
@@ -63,30 +61,7 @@ object ModisEngine {
         corrected.filter(GridExprs.systematicSample(col("row"), col("col"), cfg.sampling))
       else corrected
 
-    // A joint-histogram partner must be a real data column; the reference
-    // would KeyError on a jhist spec pointing at the cloud_fraction_CM
-    // pseudo-variable (its `data` dict never holds that key), so the engine
-    // rejects the same configs by dropping the unusable joint spec.
-    val dataVars = cfg.vars.filterNot(_.name == CloudFractionVar).map { v =>
-      if (v.joint.exists(_.jointVar == CloudFractionVar)) v.copy(joint = None) else v
-    }
-    val wantCf = cfg.vars.exists(_.name == CloudFractionVar)
-
-    val statsOpt =
-      if (dataVars.nonEmpty)
-        Some(GridAggregation.aggregate(sampled, cfg.copy(vars = dataVars), cols))
-      else None
-    val cfOpt =
-      if (wantCf) Some(GridAggregation.cloudFraction(sampled, cfg, cols))
-      else None
-
-    (statsOpt, cfOpt) match {
-      case (Some(s), Some(c)) => s.join(c, Seq("cell"), "full_outer")
-      case (Some(s), None) => s
-      case (None, Some(c)) => c
-      case (None, None) =>
-        throw new IllegalArgumentException("JobConfig.vars is empty")
-    }
+    GridAggregation.aggregate(sampled, cfg, cols)
   }
 
   /** Multi-day (e.g. monthly) L3 aggregation in ONE distributed pass —

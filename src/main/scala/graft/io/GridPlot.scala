@@ -164,13 +164,7 @@ object GridPlot {
       levels: Int = 10,
       cellPx: Int = 2,
       mode: SaveMode = SaveMode.ErrorIfExists): Array[Array[Double]] = {
-    val file = new java.io.File(path)
-    if (file.exists()) {
-      if (mode == SaveMode.ErrorIfExists)
-        throw new IllegalStateException(
-          s"output path $path already exists (reference output-exists guard)")
-      if (mode == SaveMode.Ignore) return Array.empty
-    }
+    if (!L3Writer.mayWrite(path, mode)) return Array.empty
     val nLat = cfg.grid.gridLat
     val nLon = cfg.grid.gridLon
     val cells = Array.fill(nLat, nLon)(Double.NaN)
@@ -187,7 +181,7 @@ object GridPlot {
         cells(lat)(lon) = if (row.isNullAt(2)) Double.NaN else row.getDouble(2)
       }
     val img = renderGrid(cells, vmin, vmax, levels, cellPx)
-    java.nio.file.Files.write(file.toPath, pngBytes(img))
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), pngBytes(img))
     cells
   }
 }

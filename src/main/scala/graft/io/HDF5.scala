@@ -322,7 +322,7 @@ object HDF5 {
     val eof = dataAddrs.last
     require(eof <= Int.MaxValue,
       s"file size $eof exceeds the driver-side 2 GiB bound (L3 grids are " +
-        "driver-small by design; the distributed sink is L3Writer.writeL3)")
+        "driver-small by design; the distributed sink is L3Writer.write)")
 
     val bb = ByteBuffer.allocate(eof.toInt).order(ByteOrder.LITTLE_ENDIAN)
 

@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.engine.GridAggregation
 import graft.model.JobConfig
@@ -9,11 +10,12 @@ import graft.model.JobConfig
 /** L3 gridded sink (S4, reference `addGridEntry`
   * `aggregate_functions.py:413-453` + sink loop `:724-757`).
   *
-  * Primary sink is Parquet of the grid frame — one row per cell with
-  * `lat_idx/lon_idx/lat_center/lon_center` plus all statistic columns; the
-  * dense (lat, lon) array layout of the reference's HDF5 is a presentation
-  * concern left to consumers (the grid is at most tens of thousands of
-  * rows — driver-small — while the engine output stays distributed).
+  * The reference's own container is the `.h5` ([[writeH5]]); [[writeNetcdf]]
+  * writes the same grid as netCDF-3 classic and [[write]] as one Parquet
+  * file of grid rows (one row per cell with `lat_idx/lon_idx/lat_center/
+  * lon_center` plus every statistic column). The two binary sinks collect
+  * the driver-small grid ONCE and share one densifier ([[densify]]); each
+  * keeps only its own encoder.
   *
   * Reference packing/naming rules reproduced:
   *   - int-packing `round(value/scale + offset)` with NaN/Inf/NULL -> fill
@@ -48,18 +50,23 @@ object L3Writer {
     * (counts, histograms, indexes). Cloud-fraction columns default to the
     * forced reference packing when not explicitly listed.
     */
-  def packGrid(grid: DataFrame, packings: Map[String, Packing]): DataFrame = {
-    val outCols = grid.columns.map { c =>
-      val p = packings.get(c).orElse {
-        if (c.startsWith("cloud_fraction") &&
-          !c.endsWith("_Pixel_Counts") && c != "GRID_Counts")
-          Some(DefaultCloudFractionPacking)
-        else None
-      }
-      p.fold(col(c).as(outputName(c)))(pk => pack(col(c), pk).as(outputName(c)))
+  def packGrid(grid: DataFrame, packings: Map[String, Packing]): DataFrame =
+    grid.select(packedCols(grid.columns.toSeq, packings): _*)
+
+  private def packedCols(cols: Seq[String], packings: Map[String, Packing]): Seq[Column] =
+    cols.map { c =>
+      packingOf(c, packings).fold(col(c))(pk => pack(col(c), pk)).as(outputName(c))
     }
-    grid.select(outCols.toIndexedSeq: _*)
-  }
+
+  /** A cloud-fraction statistic (not a count): forced packing (`:741-744`),
+    * float64 in the `.h5` (`:438-444`).
+    */
+  private def isCloudFractionStat(c: String): Boolean =
+    c.startsWith("cloud_fraction") && !c.endsWith("_Pixel_Counts")
+
+  private def packingOf(c: String, packings: Map[String, Packing]): Option[Packing] =
+    packings.get(c).orElse(
+      if (isCloudFractionStat(c)) Some(DefaultCloudFractionPacking) else None)
 
   /** Write the L3 grid. Default mode reproduces the reference's
     * "output already exists" abort.
@@ -120,9 +127,7 @@ object L3Writer {
               "scale_factor" -> "1.0", "add_offset" -> "0.0",
               "_FillValue" -> a.fold("-9999.0")(_.fillValue.toString))
           else {
-            val p = packings.get(c).orElse {
-              if (c.startsWith("cloud_fraction")) Some(DefaultCloudFractionPacking) else None
-            }
+            val p = packingOf(c, packings)
             Map("units" -> a.fold("none")(_.units), "long_name" -> a.fold("")(_.longName),
               "scale_factor" -> p.fold(a.fold(1.0)(_.scaleFactor))(_.scale).toString,
               "add_offset" -> p.fold(a.fold(0.0)(_.addOffset))(_.offset).toString,
@@ -133,53 +138,147 @@ object L3Writer {
     axis ++ data
   }
 
-  /** Full L3 export in the reference's HDF5 SHAPE (no HDF5 library exists
-    * in this environment, so the container is a directory):
-    *
-    *   `path/grid/`     packed grid parquet (one row per cell)
-    *   `path/lat_bnd/`  latitude axis parquet (lat_idx, lat_bnd)
-    *   `path/lon_bnd/`  longitude axis parquet (lon_idx, lon_bnd)
-    *   `path/cf_attrs.json`  per-dataset CF attributes ([[cfAttrs]])
-    *
-    * A consumer (or a thin h5py script outside this sandbox) can assemble
-    * the exact reference file from these four pieces; every value, name,
-    * packing rule and attribute matches `aggregate_functions.py:413-453`,
-    * `:724-757`.
+  private val IndexCols = Set("cell", "lat_idx", "lon_idx", "lat_center", "lon_center")
+
+  /** One statistic of the collected grid as a dense row-major
+    * `[lat, lon(, bins...)]` array — what the `.h5` and `.nc` encoders share.
     */
-  def writeL3(
+  private[io] sealed trait DenseVar { def name: String }
+  /** Integers: packed statistics, counts, histograms (`bins` = their extra dims). */
+  private[io] final case class DenseLongs(name: String, bins: Seq[Int], data: Array[Long])
+      extends DenseVar
+  /** Unpacked floating statistics (no packing listed). */
+  private[io] final case class DenseDoubles(name: String, data: Array[Double]) extends DenseVar
+  /** A cloud-fraction statistic both int-packed and as the reference's
+    * unrounded `value/scale + offset` (non-finite and absent -> fill).
+    */
+  private[io] final case class DenseCloudFraction(
+      name: String, packed: Array[Long], unrounded: Array[Double]) extends DenseVar
+
+  private[io] final case class DenseL3(
+      nLat: Int,
+      nLon: Int,
+      attrs: Map[String, Map[String, String]],
+      vars: Seq[DenseVar])
+
+  /** Collect the grid ONCE and densify every statistic column, in column
+    * order, under its output name. The projection holds the packed columns
+    * ([[packGrid]]) plus the raw value of each cloud-fraction statistic.
+    *
+    * Cells absent from the (possibly sparse) grid frame surface as
+    * `_FillValue` for statistics and 0 for counts/histograms — the
+    * reference's init values (`+inf -> fill` / zeros) after packing.
+    * Histogram bin counts come from the job's bin edges, else from the
+    * first non-null row; every row's shape is checked against them.
+    *
+    * The grid is collected to the driver: at most gridLat x gridLon cells
+    * (64,800 at 1 degree) — the same driver-small bound the reference's
+    * `h5py` writes rely on.
+    */
+  private[io] def densify(
       grid: DataFrame,
       cfg: JobConfig,
-      path: String,
-      packings: Map[String, Packing] = Map.empty,
-      varAttrs: Map[String, PixelSource.VarAttrs] = Map.empty,
-      mode: SaveMode = SaveMode.ErrorIfExists): Unit = {
-    if (mode == SaveMode.ErrorIfExists && new java.io.File(path).exists())
-      throw new IllegalStateException(
-        s"output path $path already exists (reference output-exists guard)")
-    val spark = grid.sparkSession
-    import spark.implicits._
+      packings: Map[String, Packing],
+      varAttrs: Map[String, PixelSource.VarAttrs]): DenseL3 = {
+    val nLat = cfg.grid.gridLat
+    val nLon = cfg.grid.gridLon
     val indexed = GridAggregation.withGridIndexes(grid, cfg)
-    val packed = packGrid(indexed, packings)
-    packed.coalesce(1).write.mode(mode).parquet(s"$path/grid")
-    latBounds(cfg).zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("lat_idx", "lat_bnd")
-      .coalesce(1).write.mode(mode).parquet(s"$path/lat_bnd")
-    lonBounds(cfg).zipWithIndex.map { case (v, i) => (i, v) }
-      .toDF("lon_idx", "lon_bnd")
-      .coalesce(1).write.mode(mode).parquet(s"$path/lon_bnd")
-    // attrs are derived from PRE-packing names (packings/varAttrs keys);
-    // cfAttrs emits them under the output (_1km-stripped) dataset names
+    val stats = indexed.columns.toSeq.filterNot(IndexCols)
+    val cfStats = stats.filter(isCloudFractionStat)
+    val projection = indexed.select(packedCols(indexed.columns.toSeq, packings) ++
+      cfStats.map(c => col(c).as(s"__raw_$c")): _*)
+    val rows = projection.collect()
+    val schema = projection.schema
     val attrs = cfAttrs(indexed.columns.toSeq, packings, varAttrs)
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val json = attrs.toSeq.sortBy(_._1).map { case (ds, kv) =>
-      q(ds) + ": " + kv.toSeq.sortBy(_._1)
-        .map { case (k, v) => q(k) + ": " + q(v) }.mkString("{", ", ", "}")
-    }.mkString("{\n", ",\n", "\n}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "cf_attrs.json"), json)
+
+    val latI = schema.fieldIndex("lat_idx")
+    val lonI = schema.fieldIndex("lon_idx")
+    val cells = rows.map { r =>
+      val lat = r.getAs[Number](latI).intValue()
+      val lon = r.getAs[Number](lonI).intValue()
+      require(lat >= 0 && lat < nLat && lon >= 0 && lon < nLon,
+        s"grid index ($lat, $lon) outside ${nLat}x$nLon")
+      lat * nLon + lon
+    }
+    def dense[A: scala.reflect.ClassTag](i: Int, init: A)(value: Any => A): Array[A] = {
+      val out = Array.fill(nLat * nLon)(init)
+      var k = 0
+      while (k < rows.length) {
+        if (!rows(k).isNullAt(i)) out(cells(k)) = value(rows(k).get(i))
+        k += 1
+      }
+      out
+    }
+    def number(v: Any): Number = v.asInstanceOf[Number]
+    def seq(v: Any): scala.collection.Seq[Any] = v.asInstanceOf[scala.collection.Seq[Any]]
+    // histograms: [lat, lon, bins...] int64, zero where no pixel fell; a
+    // joint (rank-2) histogram is the row-major [x][y] nest
+    def histogram(c: String, i: Int, rank: Int, binsOfSpec: Option[Seq[Int]]): DenseLongs = {
+      def shape(h: scala.collection.Seq[Any]): Seq[Int] =
+        if (rank == 1) Seq(h.size) else Seq(h.size, h.headOption.fold(0)(seq(_).size))
+      val bins = binsOfSpec
+        .orElse(rows.find(!_.isNullAt(i)).map(r => shape(seq(r.get(i)))))
+        .getOrElse(throw new IllegalArgumentException(s"$c: cannot infer bin count"))
+      val width = bins.product
+      val out = new Array[Long](nLat * nLon * width)
+      for (k <- rows.indices if !rows(k).isNullAt(i)) {
+        val h = seq(rows(k).get(i))
+        require(h.size == bins.head && (rank == 1 || h.forall(seq(_).size == bins(1))),
+          s"$c: histogram shape ${shape(h).mkString(" x ")} != ${bins.mkString(" x ")}")
+        val flat = if (rank == 1) h else h.flatMap(seq)
+        val base = cells(k) * width
+        flat.iterator.zipWithIndex.foreach { case (n, x) => out(base + x) = number(n).longValue() }
+      }
+      DenseLongs(c, bins, out)
+    }
+
+    val vars = stats.map { raw =>
+      val c = outputName(raw)
+      val i = schema.fieldIndex(c)
+      // bin counts for histogram columns, from the job spec (output names
+      // are _1km-stripped, so match on stripped var names too)
+      val v = cfg.vars.find(v => c.startsWith(outputName(v.name)))
+      def fill = attrs.get(c).flatMap(_.get("_FillValue")).map(_.toDouble).getOrElse(-9999.0)
+      if (isCloudFractionStat(raw)) {
+        val p = packingOf(raw, packings).get
+        val f = p.fill.toDouble
+        DenseCloudFraction(c, dense(i, fill.toLong)(number(_).longValue()),
+          dense(schema.fieldIndex(s"__raw_$raw"), f) { x =>
+            val d = number(x).doubleValue()
+            if (d.isNaN || d.isInfinite) f else d / p.scale + p.offset
+          })
+      } else schema(i).dataType match {
+        case LongType | IntegerType =>
+          val isCount = c == "GRID_Counts" || c.contains("Pixel_Counts")
+          DenseLongs(c, Nil, dense(i, if (isCount) 0L else fill.toLong)(number(_).longValue()))
+        // DecimalType: user parquet (DuckDB/Hive writers) routinely types
+        // arithmetic results DECIMAL; stats over them surface here too
+        case DoubleType | FloatType | _: DecimalType =>
+          DenseDoubles(c, dense(i, fill)(number(_).doubleValue()))
+        case ArrayType(ArrayType(LongType | IntegerType, _), _) =>
+          val nx = v.map(_.binEdges.size - 1)
+          val ny = v.flatMap(_.joint).map(_.jointEdges.size - 1)
+          histogram(c, i, rank = 2, nx.zip(ny).map { case (x, y) => Seq(x, y) })
+        case ArrayType(LongType | IntegerType, _) =>
+          histogram(c, i, rank = 1, v.map(x => Seq(x.binEdges.size - 1)))
+        case other =>
+          throw new IllegalArgumentException(
+            s"$c: unsupported grid column type $other for L3 export")
+      }
+    }
+    DenseL3(nLat, nLon, attrs, vars)
   }
 
-  private val IndexCols = Set("cell", "lat_idx", "lon_idx", "lat_center", "lon_center")
+  /** The single-file sinks' output-exists guard (S5, `:610-617`): throws
+    * under `ErrorIfExists`; false = skip the write (`Ignore`).
+    */
+  private[io] def mayWrite(path: String, mode: SaveMode): Boolean = {
+    val exists = new java.io.File(path).exists()
+    if (exists && mode == SaveMode.ErrorIfExists)
+      throw new IllegalStateException(
+        s"output path $path already exists (reference output-exists guard)")
+    !(exists && mode == SaveMode.Ignore)
+  }
 
   /** Full L3 export as a REAL netCDF-3 classic file — the binary,
     * self-describing equivalent of the reference's HDF5 sink
@@ -198,13 +297,6 @@ object L3Writer {
     *   - per-variable `units`, `long_name`, `_FillValue`, `scale_factor`,
     *     `add_offset` attributes ([[cfAttrs]] = reference `:446-453`).
     *
-    * Cells absent from the (possibly sparse) grid frame surface as
-    * `_FillValue` for packed statistics and 0 for counts/histograms —
-    * the reference's init values (`+inf -> fill` / zeros) after packing.
-    *
-    * The grid is collected to the driver: at most gridLat x gridLon cells
-    * (64,800 at 1 degree) — the same driver-small bound the reference's
-    * `h5py` writes rely on; the distributed output path is [[writeL3]].
     * netCDF-3 classic has no 64-bit integer type, so packed/count values
     * must fit Int32 (checked; the reference's own packing guarantees it
     * for every canonical variable).
@@ -217,52 +309,24 @@ object L3Writer {
       varAttrs: Map[String, PixelSource.VarAttrs] = Map.empty,
       mode: SaveMode = SaveMode.ErrorIfExists): Unit = {
     import NetCDF3._
-    val file = new java.io.File(path)
-    if (file.exists()) {
-      if (mode == SaveMode.ErrorIfExists)
-        throw new IllegalStateException(
-          s"output path $path already exists (reference output-exists guard)")
-      if (mode == SaveMode.Ignore) return
-    }
-    val nLat = cfg.grid.gridLat
-    val nLon = cfg.grid.gridLon
-    val indexed = GridAggregation.withGridIndexes(grid, cfg)
-    val packed = packGrid(indexed, packings)
-    val rows = packed.collect()
-    val schema = packed.schema
-    val attrs = cfAttrs(indexed.columns.toSeq, packings, varAttrs)
-
-    def attD(name: String, key: String, dflt: Double): Double =
-      attrs.get(name).flatMap(_.get(key)).map(_.toDouble).getOrElse(dflt)
-    def isCount(c: String) = c == "GRID_Counts" || c.contains("Pixel_Counts")
-    def checkedInt(c: String, v: Long): Int = {
-      require(v >= Int.MinValue && v <= Int.MaxValue,
-        s"$c: packed value $v exceeds netCDF-3 classic Int32 range")
-      v.toInt
-    }
-    def cellOf(r: org.apache.spark.sql.Row): Int = {
-      val lat = r.getAs[Number]("lat_idx").intValue()
-      val lon = r.getAs[Number]("lon_idx").intValue()
-      require(lat >= 0 && lat < nLat && lon >= 0 && lon < nLon,
-        s"grid index ($lat, $lon) outside ${nLat}x$nLon")
-      lat * nLon + lon
-    }
-    // bin counts for histogram columns, from the job spec (output names
-    // are _1km-stripped, so match on stripped var names too)
-    def varFor(c: String): Option[graft.model.VarSpec] =
-      cfg.vars.find(v => c.startsWith(outputName(v.name)))
+    if (!mayWrite(path, mode)) return
+    val l3 = densify(grid, cfg, packings, varAttrs)
 
     val dims = scala.collection.mutable.ArrayBuffer(
-      Dim("lat_bnd", nLat), Dim("lon_bnd", nLon))
+      Dim("lat_bnd", l3.nLat), Dim("lon_bnd", l3.nLon))
     def dimId(d: Dim): Int = {
       val i = dims.indexWhere(_.name == d.name)
       if (i >= 0) { require(dims(i).length == d.length,
         s"dim ${d.name} redefined with a different length"); i }
       else { dims += d; dims.length - 1 }
     }
-
-    def commonAtts(c: String, fillAsInt: Boolean): Seq[Att] = {
-      val m = attrs.getOrElse(c, Map.empty)
+    def ints(c: String, vs: Array[Long]): Array[Int] = vs.map { v =>
+      require(v >= Int.MinValue && v <= Int.MaxValue,
+        s"$c: packed value $v exceeds netCDF-3 classic Int32 range")
+      v.toInt
+    }
+    def atts(c: String, fillAsInt: Boolean): Seq[Att] = {
+      val m = l3.attrs.getOrElse(c, Map.empty)
       Seq(
         m.get("units").map(u => Att("units", CharAtt(u))),
         m.get("long_name").filter(_.nonEmpty).map(l => Att("long_name", CharAtt(l))),
@@ -275,84 +339,19 @@ object L3Writer {
       ).flatten
     }
 
-    import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType, IntegerType, LongType}
-    val dataVars: Seq[Var] = schema.fields.filterNot(f => IndexCols(f.name)).map { f =>
-      val c = f.name
-      f.dataType match {
-        case LongType | IntegerType =>
-          val init = if (isCount(c)) 0 else attD(c, "_FillValue", -9999.0).toInt
-          val dense = Array.fill(nLat * nLon)(init)
-          rows.foreach { r =>
-            if (!r.isNullAt(r.fieldIndex(c)))
-              dense(cellOf(r)) = checkedInt(c, r.getAs[Number](c).longValue())
-          }
-          Var(c, Seq(0, 1), NcInt, commonAtts(c, fillAsInt = true), dense)
-        // DecimalType: user parquet (DuckDB/Hive writers) routinely types
-        // arithmetic results DECIMAL; stats over them surface here too
-        case DoubleType | FloatType | _: DecimalType =>
-          val init = attD(c, "_FillValue", -9999.0)
-          val dense = Array.fill(nLat * nLon)(init)
-          rows.foreach { r =>
-            if (!r.isNullAt(r.fieldIndex(c)))
-              dense(cellOf(r)) = r.getAs[Number](c).doubleValue()
-          }
-          Var(c, Seq(0, 1), NcDouble, commonAtts(c, fillAsInt = false), dense)
-        case ArrayType(ArrayType(LongType | IntegerType, _), _) =>
-          val v = varFor(c)
-          val bx = v.map(_.binEdges.size - 1)
-          val by = v.flatMap(_.joint).map(_.jointEdges.size - 1)
-          val sample = rows.iterator.map(r => r.fieldIndex(c) -> r)
-            .collectFirst { case (i, r) if !r.isNullAt(i) =>
-              r.getSeq[scala.collection.Seq[Long]](i) }
-          val nx = bx.orElse(sample.map(_.size)).getOrElse(
-            throw new IllegalArgumentException(s"$c: cannot infer bin count"))
-          val ny = by.orElse(sample.map(_.head.size)).getOrElse(
-            throw new IllegalArgumentException(s"$c: cannot infer joint bin count"))
-          val dense = new Array[Int](nLat * nLon * nx * ny)
-          rows.foreach { r =>
-            val i = r.fieldIndex(c)
-            if (!r.isNullAt(i)) {
-              val base = cellOf(r) * nx * ny
-              val m = r.getSeq[scala.collection.Seq[Long]](i)
-              require(m.size == nx && m.forall(_.size == ny),
-                s"$c: ragged 2-D histogram (${m.size} x ?) != $nx x $ny")
-              var x = 0
-              while (x < nx) {
-                var y = 0
-                while (y < ny) {
-                  dense(base + x * ny + y) = checkedInt(c, m(x)(y)); y += 1
-                }
-                x += 1
-              }
-            }
-          }
-          val dx = dimId(Dim(s"${c}_bin_x", nx))
-          val dy = dimId(Dim(s"${c}_bin_y", ny))
-          Var(c, Seq(0, 1, dx, dy), NcInt, commonAtts(c, fillAsInt = true), dense)
-        case ArrayType(LongType | IntegerType, _) =>
-          val nb = varFor(c).map(_.binEdges.size - 1).orElse {
-            rows.iterator.map(r => r.fieldIndex(c) -> r)
-              .collectFirst { case (i, r) if !r.isNullAt(i) => r.getSeq[Long](i).size }
-          }.getOrElse(
-            throw new IllegalArgumentException(s"$c: cannot infer bin count"))
-          val dense = new Array[Int](nLat * nLon * nb)
-          rows.foreach { r =>
-            val i = r.fieldIndex(c)
-            if (!r.isNullAt(i)) {
-              val base = cellOf(r) * nb
-              val h = r.getSeq[Long](i)
-              require(h.size == nb, s"$c: histogram length ${h.size} != $nb")
-              var x = 0
-              while (x < nb) { dense(base + x) = checkedInt(c, h(x)); x += 1 }
-            }
-          }
-          val db = dimId(Dim(s"${c}_bin", nb))
-          Var(c, Seq(0, 1, db), NcInt, commonAtts(c, fillAsInt = true), dense)
-        case other =>
-          throw new IllegalArgumentException(
-            s"$c: unsupported grid column type $other for netCDF export")
-      }
-    }.toSeq
+    val dataVars = l3.vars.map {
+      case DenseLongs(c, bins, data) =>
+        val binDims = bins match {
+          case Seq(nb) => Seq(Dim(s"${c}_bin", nb))
+          case Seq(nx, ny) => Seq(Dim(s"${c}_bin_x", nx), Dim(s"${c}_bin_y", ny))
+          case _ => Nil
+        }
+        Var(c, Seq(0, 1) ++ binDims.map(dimId), NcInt, atts(c, fillAsInt = true), ints(c, data))
+      case DenseDoubles(c, data) =>
+        Var(c, Seq(0, 1), NcDouble, atts(c, fillAsInt = false), data)
+      case DenseCloudFraction(c, packed, _) =>
+        Var(c, Seq(0, 1), NcInt, atts(c, fillAsInt = true), ints(c, packed))
+    }
 
     val axisVars = Seq(
       Var("lat_bnd", Seq(0), NcDouble,
@@ -395,10 +394,8 @@ object L3Writer {
     * the `lon_bnd` dataset (`:736-741`) — so the genuine reference file
     * mislabels `lon_bnd` and leaves `GRID_Counts` attribute-less. This
     * export follows the evident intent (attrs on `GRID_Counts`), matching
-    * [[writeNetcdf]] and `cf_attrs.json`.
+    * [[writeNetcdf]].
     *
-    * Same driver-small bound as [[writeNetcdf]]: the grid is at most
-    * gridLat x gridLon cells; the distributed output path is [[writeL3]].
     * Unlike netCDF-3 classic, HDF5 carries int64 natively, so no Int32
     * range check applies.
     */
@@ -410,46 +407,14 @@ object L3Writer {
       varAttrs: Map[String, PixelSource.VarAttrs] = Map.empty,
       mode: SaveMode = SaveMode.ErrorIfExists): Unit = {
     import HDF5._
-    val file = new java.io.File(path)
-    if (file.exists()) {
-      if (mode == SaveMode.ErrorIfExists)
-        throw new IllegalStateException(
-          s"output path $path already exists (reference output-exists guard)")
-      if (mode == SaveMode.Ignore) return
-    }
-    val nLat = cfg.grid.gridLat
-    val nLon = cfg.grid.gridLon
-    val indexed = GridAggregation.withGridIndexes(grid, cfg)
-    val packed = packGrid(indexed, packings)
-    val packedRows = packed.collect()
-    val attrs = cfAttrs(indexed.columns.toSeq, packings, varAttrs)
+    if (!mayWrite(path, mode)) return
+    val l3 = densify(grid, cfg, packings, varAttrs)
+    val latLon = Seq(l3.nLat, l3.nLon)
 
-    def attD(name: String, key: String, dflt: Double): Double =
-      attrs.get(name).flatMap(_.get(key)).map(_.toDouble).getOrElse(dflt)
-    def isCount(c: String) = c == "GRID_Counts" || c.contains("Pixel_Counts")
-    def cellOf(r: org.apache.spark.sql.Row): Int = {
-      val lat = r.getAs[Number]("lat_idx").intValue()
-      val lon = r.getAs[Number]("lon_idx").intValue()
-      require(lat >= 0 && lat < nLat && lon >= 0 && lon < nLon,
-        s"grid index ($lat, $lon) outside ${nLat}x$nLon")
-      lat * nLon + lon
-    }
-    def varFor(c: String): Option[graft.model.VarSpec] =
-      cfg.vars.find(v => c.startsWith(outputName(v.name)))
-    // float64 CF datasets (the reference's un-cast branch); the packed
-    // frame already holds them as longs, so re-derive from the RAW grid
-    def isFloatCf(c: String) =
-      c.startsWith("cloud_fraction") && !isCount(c) && c != "GRID_Counts"
-    lazy val rawRows = indexed.collect()
-    lazy val rawSchema = indexed.schema
-
-    def labels(rank: Int): Att =
-      Att("DIMENSION_LABELS",
-        StrArrayAtt(Seq("lat_bnd", "lon_bnd").padTo(rank, "")))
-    def commonAtts(c: String, rank: Int, fillAsLong: Boolean): Seq[Att] = {
-      val m = attrs.getOrElse(c, Map.empty)
+    def atts(c: String, rank: Int, fillAsLong: Boolean): Seq[Att] = {
+      val m = l3.attrs.getOrElse(c, Map.empty)
       Seq(
-        Some(labels(rank)),
+        Some(Att("DIMENSION_LABELS", StrArrayAtt(Seq("lat_bnd", "lon_bnd").padTo(rank, "")))),
         m.get("units").map(u => Att("units", StrAtt(u))),
         m.get("long_name").filter(_.nonEmpty).map(l => Att("long_name", StrAtt(l))),
         m.get("_FillValue").map { f =>
@@ -461,108 +426,21 @@ object L3Writer {
       ).flatten
     }
 
-    import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType, IntegerType, LongType}
-    val dataSets: Seq[Dataset] = packed.schema.fields
-      .filterNot(f => IndexCols(f.name)).map { f =>
-        val c = f.name
-        if (isFloatCf(c)) {
-          // reference CF branch: value/1e-4 + 0 as float64, NaN/NULL -> fill
-          val p = packings.getOrElse(c,
-            if (c.startsWith("cloud_fraction")) DefaultCloudFractionPacking
-            else Packing(1.0, 0.0, -9999L))
-          val fill = p.fill.toDouble
-          val dense = Array.fill(nLat * nLon)(fill)
-          val rawIdx = rawSchema.fieldIndex(c)
-          rawRows.foreach { r =>
-            if (!r.isNullAt(rawIdx)) {
-              val v = r.getAs[Number](c).doubleValue()
-              dense(cellOf(r)) =
-                if (v.isNaN || v.isInfinite) fill else v / p.scale + p.offset
-            }
-          }
-          Dataset(c, Seq(nLat, nLon), H5Float64,
-            commonAtts(c, 2, fillAsLong = false), dense)
-        } else f.dataType match {
-          case LongType | IntegerType =>
-            val init = if (isCount(c)) 0L else attD(c, "_FillValue", -9999.0).toLong
-            val dense = Array.fill(nLat * nLon)(init)
-            packedRows.foreach { r =>
-              if (!r.isNullAt(r.fieldIndex(c)))
-                dense(cellOf(r)) = r.getAs[Number](c).longValue()
-            }
-            Dataset(c, Seq(nLat, nLon), H5Int64,
-              commonAtts(c, 2, fillAsLong = true), dense)
-          // DecimalType: user parquet (DuckDB/Hive writers) routinely
-          // types arithmetic results DECIMAL
-          case DoubleType | FloatType | _: DecimalType =>
-            val init = attD(c, "_FillValue", -9999.0)
-            val dense = Array.fill(nLat * nLon)(init)
-            packedRows.foreach { r =>
-              if (!r.isNullAt(r.fieldIndex(c)))
-                dense(cellOf(r)) = r.getAs[Number](c).doubleValue()
-            }
-            Dataset(c, Seq(nLat, nLon), H5Float64,
-              commonAtts(c, 2, fillAsLong = false), dense)
-          case ArrayType(ArrayType(LongType | IntegerType, _), _) =>
-            val v = varFor(c)
-            val bx = v.map(_.binEdges.size - 1)
-            val by = v.flatMap(_.joint).map(_.jointEdges.size - 1)
-            val sample = packedRows.iterator.map(r => r.fieldIndex(c) -> r)
-              .collectFirst { case (i, r) if !r.isNullAt(i) =>
-                r.getSeq[scala.collection.Seq[Long]](i) }
-            val nx = bx.orElse(sample.map(_.size)).getOrElse(
-              throw new IllegalArgumentException(s"$c: cannot infer bin count"))
-            val ny = by.orElse(sample.map(_.head.size)).getOrElse(
-              throw new IllegalArgumentException(s"$c: cannot infer joint bin count"))
-            val dense = new Array[Long](nLat * nLon * nx * ny)
-            packedRows.foreach { r =>
-              val i = r.fieldIndex(c)
-              if (!r.isNullAt(i)) {
-                val base = cellOf(r) * nx * ny
-                val m = r.getSeq[scala.collection.Seq[Long]](i)
-                require(m.size == nx && m.forall(_.size == ny),
-                  s"$c: ragged 2-D histogram (${m.size} x ?) != $nx x $ny")
-                var x = 0
-                while (x < nx) {
-                  var y = 0
-                  while (y < ny) { dense(base + x * ny + y) = m(x)(y); y += 1 }
-                  x += 1
-                }
-              }
-            }
-            Dataset(c, Seq(nLat, nLon, nx, ny), H5Int64,
-              commonAtts(c, 4, fillAsLong = true), dense)
-          case ArrayType(LongType | IntegerType, _) =>
-            val nb = varFor(c).map(_.binEdges.size - 1).orElse {
-              packedRows.iterator.map(r => r.fieldIndex(c) -> r)
-                .collectFirst { case (i, r) if !r.isNullAt(i) => r.getSeq[Long](i).size }
-            }.getOrElse(
-              throw new IllegalArgumentException(s"$c: cannot infer bin count"))
-            val dense = new Array[Long](nLat * nLon * nb)
-            packedRows.foreach { r =>
-              val i = r.fieldIndex(c)
-              if (!r.isNullAt(i)) {
-                val base = cellOf(r) * nb
-                val h = r.getSeq[Long](i)
-                require(h.size == nb, s"$c: histogram length ${h.size} != $nb")
-                var x = 0
-                while (x < nb) { dense(base + x) = h(x); x += 1 }
-              }
-            }
-            Dataset(c, Seq(nLat, nLon, nb), H5Int64,
-              commonAtts(c, 3, fillAsLong = true), dense)
-          case other =>
-            throw new IllegalArgumentException(
-              s"$c: unsupported grid column type $other for HDF5 export")
-        }
-      }.toSeq
+    val dataSets = l3.vars.map {
+      case DenseLongs(c, bins, data) =>
+        Dataset(c, latLon ++ bins, H5Int64, atts(c, 2 + bins.size, fillAsLong = true), data)
+      case DenseDoubles(c, data) =>
+        Dataset(c, latLon, H5Float64, atts(c, 2, fillAsLong = false), data)
+      case DenseCloudFraction(c, _, unrounded) =>
+        Dataset(c, latLon, H5Float64, atts(c, 2, fillAsLong = false), unrounded)
+    }
 
     val axes = Seq(
-      Dataset("lat_bnd", Seq(nLat), H5Float64,
+      Dataset("lat_bnd", Seq(l3.nLat), H5Float64,
         Seq(Att("units", StrAtt("degrees")),
           Att("long_name", StrAtt("Latitude_boundaries"))),
         latBounds(cfg).toArray),
-      Dataset("lon_bnd", Seq(nLon), H5Float64,
+      Dataset("lon_bnd", Seq(l3.nLon), H5Float64,
         Seq(Att("units", StrAtt("degrees")),
           Att("long_name", StrAtt("Longitude_boundaries"))),
         lonBounds(cfg).toArray))

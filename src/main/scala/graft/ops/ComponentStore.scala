@@ -168,22 +168,11 @@ object ComponentStore {
     // repartition by the bucket key first: partitionBy from N shuffle
     // partitions otherwise writes up to N files into EVERY bucket dir
     // (64xN small files per segment — measured as the dominant refresh
-    // cost at sf0.1). Bucket-only repartition caps the write at 64 tasks
-    // at ANY corpus size; spark.graft.store.writeSalt (default 1 = one
-    // file per bucket per segment, the local/bench layout) adds a
-    // doc-hash secondary key so a corpus-scale segment writes <= salt
-    // files per bucket from up to 64*salt tasks (bounded by
-    // spark.sql.shuffle.partitions, and hash collisions can co-locate
-    // distinct (bucket, salt) pairs on one task). Readers never see the
-    // salt (it is a partitioning key, not a column) and sb stays the only
+    // cost at sf0.1): one file per bucket per segment. sb stays the only
     // partition dir, so bucket pruning is untouched.
-    val salt = IndexOps.writeSalt(spark)
-    val keyed = newIdx.withColumn("sb", pmod(col("sh"), lit(64L)))
-    val laid =
-      if (salt == 1) keyed.repartition(col("sb"))
-      else keyed.repartition(col("sb"),
-        pmod(xxhash64(col("doc_id")), lit(salt.toLong)))
-    laid.write.partitionBy("sb").mode("append").parquet(s"$storeDir/shingles")
+    newIdx.withColumn("sb", pmod(col("sh"), lit(64L)))
+      .repartition(col("sb"))
+      .write.partitionBy("sb").mode("append").parquet(s"$storeDir/shingles")
     newSizes.coalesce(4).write.mode("append").parquet(s"$storeDir/sizes")
     newIdx.unpersist(false)
     newSizes.unpersist(false)

@@ -52,23 +52,6 @@ object IndexOps {
   private def exists(path: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(path))
 
-  /** The `spark.graft.store.writeSalt` secondary write-parallelism key
-    * shared by [[refreshPostings]] and [[ComponentStore.refresh]]: salt>1
-    * splits each bucket's write into up to `salt` tasks/files for
-    * corpus-scale segments (default 1 = one file per bucket per segment,
-    * the local/bench layout). Malformed values fail naming the conf key.
-    */
-  private[ops] def writeSalt(spark: SparkSession): Int = {
-    val key = "spark.graft.store.writeSalt"
-    val salt = spark.conf.getOption(key).map { v =>
-      try v.trim.toInt
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(s"$key must be an integer, got '$v'") }
-    }.getOrElse(1)
-    require(salt >= 1, s"$key must be >= 1, got $salt")
-    salt
-  }
-
   private def ledgerDir(indexDir: String, kind: String): java.nio.file.Path =
     java.nio.file.Paths.get(
       s"$indexDir/segments/.ledger", // dot-dir: invisible to the parquet reader
@@ -151,17 +134,11 @@ object IndexOps {
     // input task writes a file into every bucket dir it touches — file
     // count M*64 follows the INPUT partitioning instead of the layout
     // (and a near-single-partition input serializes the encode on one
-    // task). One file per bucket per segment; spark.graft.store.writeSalt
-    // (default 1) splits each bucket's write across up to salt tasks for
-    // corpus-scale segments, invisible to readers and bucket pruning.
-    val salt = writeSalt(spark)
-    val keyed = SearchOps.positionalPostings(docs, idCol, textCol)
+    // task). One file per bucket per segment.
+    SearchOps.positionalPostings(docs, idCol, textCol)
       .withColumn("tb", postingsBucket(col("token")))
-    val laid =
-      if (salt == 1) keyed.repartition(col("tb"))
-      else keyed.repartition(col("tb"),
-        pmod(xxhash64(col("doc_id")), lit(salt.toLong)))
-    laid.write.partitionBy("tb").mode("append").parquet(s"$indexDir/postings")
+      .repartition(col("tb"))
+      .write.partitionBy("tb").mode("append").parquet(s"$indexDir/postings")
     recordSegment(spark, indexDir, "postings", segment)
   }
 

@@ -143,6 +143,26 @@ class GraftCliSpec extends SparkSpec {
     assert(java.util.Arrays.equals(bytes1, bytes2))
   }
 
+  test("--format granule Example-1 runs as ONE SQL execution (one scan, one collect)") {
+    val outDir = Files.createTempDirectory("cliout-once").toString
+    val (dp, vf, jf) = writeConfigs("/unused-in-granule-mode", outDir)
+    val cli = GraftCli.parse(Array("--format", "granule") ++ exampleArgs(dp, vf, jf))
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = executions.incrementAndGet()
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = executions.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      GraftCli.run(spark, cli)
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(executions.get == 1)
+  }
+
   test("argv errors match the reference's aborts") {
     val pixels = writePixels()
     val outDir = Files.createTempDirectory("cliout2").toString

@@ -69,6 +69,29 @@ class GridAggregationSpec extends SparkSpec {
     assert(r.getLong(5) == 2L) //                          grid counts
   }
 
+  test("cloud fraction == the two-level groupBy for string, long and null ids, any partitioning") {
+    val rnd = new scala.util.Random(11)
+    val base = (1 to 3000).map { _ =>
+      val g = rnd.nextInt(10)
+      (rnd.nextDouble() * 12 - 1, rnd.nextDouble() * 12 - 1,
+        if (g == 9) None else Some(g.toLong), rnd.nextInt(6) - 1)
+    }.toDF("lat", "lon", "gid", "cm_flag")
+    val cfg = JobConfig(grid = grid, stats = StatSwitches())
+    // reference plan: per (cell, granule) counts, then a cell-keyed merge
+    def twoLevel(px: org.apache.spark.sql.DataFrame) =
+      GridAggregation.withCell(px, cfg).groupBy($"cell", $"granule_id")
+        .agg(sum(when($"cm_flag".between(0, 3), 1L).otherwise(0L)).as("tot"),
+          sum(when($"cm_flag".between(0, 1), 1L).otherwise(0L)).as("cld"))
+        .groupBy($"cell")
+        .agg(min($"cld" / nullif($"tot", lit(0L))), max($"cld" / nullif($"tot", lit(0L))),
+          sum($"cld") / nullif(sum($"tot"), lit(0L)), sum($"tot"), count(when($"tot" > 0, 1)))
+    for (id <- Seq($"gid", concat(lit("A2008001."), $"gid".cast("string"))); parts <- Seq(1, 8)) {
+      val px = base.withColumn("granule_id", id).repartition(parts)
+      assert(GridAggregation.cloudFraction(px, cfg).collect().toSet ==
+        twoLevel(px).collect().toSet, s"$id at $parts partitions")
+    }
+  }
+
   test("gridCounts counts granules with >=1 non-null pixel") {
     val pixels = Seq[(Double, Double, String, java.lang.Double)](
       (1.0, 1.0, "g1", 5.0),

@@ -101,4 +101,31 @@ class ModisEngineSpec extends SparkSpec {
     assert(out.length == 1)
     assert(out.head.getLong(out.head.fieldIndex("Cloud_Top_Pressure_Pixel_Counts")) == 2L)
   }
+
+  test("rangeL3 over GranuleSource: one scan, no join, one cell-keyed shuffle") {
+    // statistics, histograms, a joint histogram and the cloud fraction all
+    // ride ONE groupBy(cell): the granules are read once
+    val jcfg = JobConfig(
+      grid = GridSpec(Region(-90, 90, -180, 180), 30.0, 30.0),
+      stats = StatSwitches.All,
+      vars = Seq(
+        VarSpec("Cloud_Top_Pressure", binEdges = Seq(0.0, 300.0, 700.0, 1100.0),
+          joint = Some(JointSpec("Cloud_Top_Temperature", Seq(180.0, 240.0, 310.0)))),
+        VarSpec("Cloud_Top_Temperature", binEdges = Seq(180.0, 240.0, 310.0)),
+        VarSpec(ModisEngine.CloudFractionVar)))
+    val granules = spark.read.format("graft.sources.GranuleSource")
+      .option("granules", "A2008005.0005,A2008005.1205,A2008006.0105")
+      .option("rows", "16").option("cols", "16")
+      .load()
+      .withColumn("cm_flag", graft.expr.GridExprs.cloudMaskFlag(col("cm_byte")))
+    val l3 = ModisEngine.rangeL3(granules, jcfg, dStart = 5, dEnd = 5)
+    l3.collect() // materialize so AQE settles on the final plan
+    // final plan only, shuffle exchanges only (QueryPlanSpec.countOf)
+    val plan = l3.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    def countOf(pattern: String): Int = pattern.r.findAllMatchIn(plan).size
+    assert(countOf("BatchScan") == 1, s"one granule scan:\n$plan")
+    assert(countOf("Join") == 0, s"no join:\n$plan")
+    assert(countOf("(?<!Broadcast)(?<!Reused)Exchange") == 1, s"one shuffle:\n$plan")
+    assert(countOf("Exchange hashpartitioning\\(cell#") == 1, s"keyed by cell:\n$plan")
+  }
 }

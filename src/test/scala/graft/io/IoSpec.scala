@@ -147,51 +147,6 @@ class IoSpec extends SparkSpec {
     assert(lons.length == 360 && lons.head == -179.5 && lons.last == 179.5)
   }
 
-  test("writeL3 exports grid + axis frames + CF attrs in the reference shape") {
-    val cfg = JobConfig(grid = GridSpec(Region(-90, 90, -180, 180), 30.0, 30.0))
-    val grid = Seq(
-      (0L, 812.5, 10L, 0.25),
-      (13L, 401.0, 4L, 0.5))
-      .toDF("cell", "Cloud_Top_Pressure_1km_Mean",
-        "Cloud_Top_Pressure_1km_Pixel_Counts", "cloud_fraction_Mean")
-    val ctpAttrs = PixelSource.VarAttrs(
-      units = "hPa", longName = "Cloud Top Pressure",
-      fillValue = -32768, scaleFactor = 0.1, addOffset = -15000.0)
-    val out = Files.createTempDirectory("l3x").resolve("out").toString
-    L3Writer.writeL3(grid, cfg,
-      out, packings = Map("Cloud_Top_Pressure_1km_Mean" -> L3Writer.Packing(0.1, -15000.0, -32768L)),
-      varAttrs = Map("Cloud_Top_Pressure_1km" -> ctpAttrs))
-
-    // axis frames equal the reference meshgrid (aggregate_functions.py:532-536)
-    val lats = spark.read.parquet(s"$out/lat_bnd").orderBy($"lat_idx")
-      .select($"lat_bnd").as[Double].collect().toSeq
-    assert(lats == (0 until 6).map(i => -90.0 + 15.0 + i * 30.0))
-    val lons = spark.read.parquet(s"$out/lon_bnd").orderBy($"lon_idx")
-      .select($"lon_bnd").as[Double].collect().toSeq
-    assert(lons == (0 until 12).map(i => -180.0 + 15.0 + i * 30.0))
-
-    // grid is packed and renamed; indexes present for the dense pivot
-    val g = spark.read.parquet(s"$out/grid")
-    assert(g.columns.contains("Cloud_Top_Pressure_Mean") &&
-      g.columns.contains("lat_idx") && g.columns.contains("lon_idx"))
-    val packedMean = g.orderBy($"cell").select($"Cloud_Top_Pressure_Mean")
-      .as[Long].collect()
-    assert(packedMean.head == math.round(812.5 / 0.1 + -15000.0))
-
-    // CF attrs: forced cloud-fraction packing, counts integer, var attrs
-    val json = new String(Files.readAllBytes(
-      java.nio.file.Paths.get(out, "cf_attrs.json")))
-    assert(json.contains("\"cloud_fraction_Mean\"") && json.contains("1.0E-4"))
-    assert(json.contains("\"Cloud_Top_Pressure_Mean\"") && json.contains("hPa"))
-    assert(json.contains("\"Cloud_Top_Pressure_Pixel_Counts\""))
-    assert(json.contains("\"scale_factor\": \"1.0\"")) // counts stay integer
-    assert(json.contains("\"lat_bnd\"") && json.contains("Latitude_boundaries"))
-    assert(json.contains("\"dims\": \"lat_bnd,lon_bnd\""))
-
-    // output-exists guard applies to the whole container
-    intercept[Exception] { L3Writer.writeL3(grid, cfg, out) }
-  }
-
   test("writeNetcdf emits the reference-shaped binary L3 file (netCDF-3 classic)") {
     import graft.io.NetCDF3._
     // 6 x 12 grid (30-degree cells) with a scalar stat, counts, a 3-bin
@@ -366,20 +321,34 @@ class IoSpec extends SparkSpec {
     assert(jd.slice(0, 9).toSeq == Seq(1L, 0L, 2L, 0L, 3L, 4L, 5L, 0L, 0L))
     assert(jd.slice(13 * 9, 13 * 9 + 9).toSeq == Seq(0L, 1L, 0L, 2L, 0L, 1L, 0L, 0L, 6L))
 
-    // grid content matches the writeL3 parquet path through the container:
-    // every packed non-CF cell value equals the parquet grid's value
-    val pq = Files.createTempDirectory("h5pq").resolve("l3").toString
-    L3Writer.writeL3(grid, cfg, pq,
+    // counts stay integer: unscaled attrs (reference :424-427)
+    val cntAtts = d("Cloud_Top_Pressure_Pixel_Counts").atts
+    assert(cntAtts.contains(Att("scale_factor", DoubleAtt(1.0))) &&
+      cntAtts.contains(Att("add_offset", DoubleAtt(0.0))))
+
+    // the .nc sink densifies the same grid: every dataset but the float64
+    // cloud fraction holds the same values in the same layout there
+    val ncPath = Files.createTempDirectory("h5nc").resolve("l3.nc").toString
+    L3Writer.writeNetcdf(grid, cfg, ncPath,
       packings = Map("Cloud_Top_Pressure_1km_Mean" ->
         L3Writer.Packing(0.1, -15000.0, -32768L)),
       varAttrs = Map("Cloud_Top_Pressure_1km" -> ctpAttrs))
-    val gridPq = spark.read.parquet(s"$pq/grid")
-      .select("lat_idx", "lon_idx", "Cloud_Top_Pressure_Mean")
-      .collect()
-    gridPq.foreach { r =>
-      val cell = r.getAs[Number]("lat_idx").intValue() * 12 +
-        r.getAs[Number]("lon_idx").intValue()
-      assert(md(cell) == r.getAs[Long]("Cloud_Top_Pressure_Mean"))
+    val nc = NetCDF3.read(ncPath)
+    val compared = h5.datasets.filterNot(_.name.startsWith("cloud_fraction"))
+    assert(compared.map(_.name).sorted ==
+      nc.vars.map(_.name).filterNot(_.startsWith("cloud_fraction")).sorted)
+    compared.foreach { ds =>
+      val v = nc.vars.find(_.name == ds.name).get
+      assert(v.dimIds.map(nc.dims(_).length) == ds.dims, ds.name)
+      val ncVals = v.data match {
+        case a: Array[Int] => a.toSeq.map(_.toDouble)
+        case a: Array[Double] => a.toSeq
+      }
+      val h5Vals = ds.data match {
+        case a: Array[Long] => a.toSeq.map(_.toDouble)
+        case a: Array[Double] => a.toSeq
+      }
+      assert(h5Vals == ncVals, ds.name)
     }
 
     // the file really is HDF5: signature + re-write identity

@@ -143,52 +143,6 @@ class ComponentStoreSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("writeSalt > 1: salted postings layout is read-equivalent — " +
-    "cross-segment probe and final assignment bit-equal to from-scratch") {
-    def parquetFiles(root: String): Seq[java.nio.file.Path] = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
-      } finally s.close()
-    }
-    val plain = tmp("saltref")
-    val salted = tmp("salt")
-    val even = docs.filter(col("doc_id") % 2 === 0)
-    val odd = docs.filter(col("doc_id") % 2 =!= 0)
-    ComponentStore.refresh(even, plain, "base")
-    spark.conf.set("spark.graft.store.writeSalt", "4")
-    try {
-      ComponentStore.refresh(even, salted, "base")
-      // POSITIVE split assertion (the <= cap alone would pass even if the
-      // salt key were silently dropped): the same segment under salt=4
-      // must write MORE part files than the plain one-file-per-bucket
-      // layout — i.e. some bucket's write really did split across tasks.
-      assert(parquetFiles(s"$salted/shingles").length >
-        parquetFiles(s"$plain/shingles").length,
-        "salt=4 must split at least one bucket's write into multiple files")
-      // the delta probes the SALTED base shingles — the merge must land on
-      // the same from-scratch assignment as ever
-      ComponentStore.refresh(odd, salted, "delta")
-    } finally spark.conf.unset("spark.graft.store.writeSalt")
-    assert(stored(salted).sameElements(fromScratch(docs)))
-    // same rows in the store regardless of layout...
-    val a = spark.read.parquet(s"$plain/shingles")
-      .select(col("doc_id").cast("long"), col("sh").cast("long"))
-      .as[(Long, Long)].collect().sorted
-    val b = spark.read.parquet(s"$salted/shingles")
-      .filter(col("doc_id") % 2 === 0)
-      .select(col("doc_id").cast("long"), col("sh").cast("long"))
-      .as[(Long, Long)].collect().sorted
-    assert(a.sameElements(b))
-    // ...spread over at least as many part files (the salt splits bucket
-    // writes; per-bucket file count stays <= salt per segment)
-    val perBucketPerSegment = parquetFiles(s"$salted/shingles")
-      .groupBy(_.getParent).values.map(_.length)
-    assert(perBucketPerSegment.forall(_ <= 2 * 4),
-      "a bucket dir holds at most salt files per segment")
-  }
-
   test("weights off the artifact == dedupWeights shape off from-scratch") {
     val store = tmp("w")
     ComponentStore.refresh(docs.filter(col("doc_id") % 3 === 0), store, "s0")

@@ -113,35 +113,6 @@ class IndexOpsSpec extends SparkSpec {
     assert(IndexOps.coveredSegments(spark, idx, "bloom").isEmpty)
   }
 
-  test("writeSalt > 1: salted postings lake is read-equivalent and caps " +
-    "per-bucket file counts at salt per segment") {
-    val plain = tmp("idxsalt0_")
-    val salted = tmp("idxsalt_")
-    IndexOps.refreshPostings(docs, plain, "base")
-    spark.conf.set("spark.graft.store.writeSalt", "4")
-    try IndexOps.refreshPostings(docs, salted, "base")
-    finally spark.conf.unset("spark.graft.store.writeSalt")
-    val a = IndexOps.readPostings(spark, plain)
-      .select("doc_id", "pos", "token")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    val b = IndexOps.readPostings(spark, salted)
-      .select("doc_id", "pos", "token")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(a == b)
-    val perBucket = filesWithSize(s"$salted/postings").toSeq
-      .map(_._1).filter(_.toString.endsWith(".parquet"))
-      .groupBy(_.getParent).values.map(_.length)
-    assert(perBucket.nonEmpty && perBucket.forall(_ <= 4),
-      "a bucket dir holds at most salt files per segment")
-    // POSITIVE split assertion (the <= cap alone would pass even if the
-    // salt key were silently dropped): under salt=4 the same segment must
-    // write MORE part files than the plain one-file-per-bucket layout
-    val plainFiles = filesWithSize(s"$plain/postings").toSeq
-      .map(_._1).count(_.toString.endsWith(".parquet"))
-    assert(perBucket.sum > plainFiles,
-      "salt=4 must split at least one bucket's write into multiple files")
-  }
-
   test("phraseSearch through the lake equals search over raw postings") {
     val idx = tmp("idxq_")
     IndexOps.refreshPostings(docs.filter(col("doc_id") % 3 =!= 0), idx, "base")
