@@ -169,11 +169,9 @@ object GraftCli {
     */
   def run(spark: SparkSession, cli: Cli): String = {
     val outPath = new java.io.File(cli.outDir, cli.l3Name).getPath
-    // reference STEP 6: abort on an existing output BEFORE any compute
-    if (new java.io.File(outPath).exists())
-      throw new IllegalStateException(
-        s"output HDF file $outPath already exists (reference guard " +
-          "aggregate_functions.py:613-617)")
+    // reference STEP 6 (`:613-617`): abort on an existing output BEFORE
+    // any compute — the parquet read below already starts a Spark job
+    L3Writer.requireAbsent(outPath)
     require(cli.start.getYear == cli.end.getYear,
       "date ranges crossing a year boundary are not expressible in the " +
         "reference's day-of-year window either")

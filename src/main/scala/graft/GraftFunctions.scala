@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-import graft.agg.{Histogram1DAgg, Histogram2DAgg}
+import graft.agg.HistogramAgg
 import graft.expr.{LshPlanesBucket, ShingleHashes, ShingleMinHash, SortedIntersectCount, SubwordEstimate, TokenSetHits, VecDot}
 
 /** SQL surface for the engine's custom expressions: after
@@ -58,13 +58,13 @@ object GraftFunctions {
     "hist1d" -> ("hist1d(value, edges) - np.histogram-semantics bin counts",
       exprs => {
         require(exprs.length == 2, "hist1d(value, edges)")
-        Histogram1DAgg(dbl(exprs(0)), edgesOf(exprs(1), "hist1d"))
+        HistogramAgg(Seq(dbl(exprs(0))), Seq(edgesOf(exprs(1), "hist1d")))
       }),
     "hist2d" -> ("hist2d(x, y, xEdges, yEdges) - joint histogram counts",
       exprs => {
         require(exprs.length == 4, "hist2d(x, y, xEdges, yEdges)")
-        Histogram2DAgg(dbl(exprs(0)), dbl(exprs(1)),
-          edgesOf(exprs(2), "hist2d"), edgesOf(exprs(3), "hist2d"))
+        HistogramAgg(Seq(dbl(exprs(0)), dbl(exprs(1))),
+          Seq(edgesOf(exprs(2), "hist2d"), edgesOf(exprs(3), "hist2d")))
       }),
     "shingle_minhash" -> ("shingle_minhash(tokens, k, numHashes) - row-local MinHash signature",
       exprs => {

@@ -10,177 +10,111 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Fixed-bin 1-D histogram aggregate (reference A6, `Histogram_Counts`:
-  * `aggregate_functions.py:257-263` — per-cell
-  * `np.histogram(pixels_nonNaN, bins=edges)[0]`, merged across granules /
-  * workers by elementwise add, Dask merge `MODIS_Aggregation_DASK.py:132`).
+/** Fixed-bin histogram aggregate over one or two axes:
   *
-  * `TypedImperativeAggregate[Array[Long]]`: the count vector is the buffer,
-  * serialized to a compact byte array between partial and final aggregation —
-  * i.e. it rides Spark's standard two-phase hash aggregation exactly like the
-  * reference's commutative-monoid merge, and scales to any partition count.
+  *   - 1 axis, `hist1d` (reference A6, `Histogram_Counts`:
+  *     `aggregate_functions.py:257-263` — per-cell
+  *     `np.histogram(pixels_nonNaN, bins=edges)[0]`), output `ARRAY<BIGINT>`;
+  *   - 2 axes, `hist2d` (reference A7, `Jhisto_vs_<Y>`: `:266-277` —
+  *     per-cell `np.histogram2d(X_nonNaN, Y_nonNaN, bins=(edgesX,
+  *     edgesY))[0]`), output `ARRAY<ARRAY<BIGINT>>` indexed `[xBin][yBin]`.
+  *
+  * `TypedImperativeAggregate[Array[Long]]`: the flattened row-major count
+  * array is the buffer, serialized to a compact byte array between partial
+  * and final aggregation — i.e. it rides Spark's standard two-phase hash
+  * aggregation exactly like the reference's commutative-monoid merge
+  * (elementwise add, Dask merge `MODIS_Aggregation_DASK.py:132`), and
+  * scales to any partition count.
   *
   * Bin semantics = `np.histogram` (see [[Binning]]): left-closed bins, last
-  * bin closed, NULL/NaN/out-of-range dropped.
+  * bin closed, NULL/NaN/out-of-range dropped. A row counts iff EVERY axis
+  * value is non-null, non-NaN and in range.
   *
-  * Parity note: the reference SKIPS histogram accumulation for cells whose
-  * granule contributed exactly one pixel (`aggregate_functions.py:259-260`,
-  * an `all_val.size == 1` early-out that adds nothing) — a bug, not a
-  * semantic. This engine counts single-pixel cells (SURVEY §7.4 "sane
-  * semantics" decision).
+  * Parity notes (SURVEY §7.4 "sane semantics"):
+  *   - the reference SKIPS 1-D accumulation for cells whose granule
+  *     contributed exactly one pixel (`:259-260`, an `all_val.size == 1`
+  *     early-out that adds nothing) — a bug, not a semantic; this engine
+  *     counts single-pixel cells;
+  *   - the reference NaN-compresses X and Y independently and pairs them
+  *     positionally (skipping the cell when the non-NaN counts differ,
+  *     `:273-274`); the per-row rule above coincides with it whenever X
+  *     and Y share a NaN mask (the only case the reference accumulates
+  *     consistently).
   */
-case class Histogram1DAgg(
-    child: Expression,
-    edges: Seq[Double],
+case class HistogramAgg(
+    children: Seq[Expression],
+    edges: Seq[Seq[Double]],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[Array[Long]] {
 
-  require(edges.length >= 2, s"hist1d needs >= 2 bin edges, got $edges")
+  require(Set(1, 2)(children.length) && edges.length == children.length,
+    s"a histogram has 1 or 2 axes with one edge list each, got ${children.length} " +
+      s"axes and ${edges.length} edge lists")
+  require(edges.forall(_.length >= 2),
+    s"$prettyName needs >= 2 bin edges per axis, got ${edges.mkString(" / ")}")
 
-  private val edgeArr: Array[Double] = edges.toArray
-  private val numBins: Int = edgeArr.length - 1
+  private val axes: Array[Expression] = children.toArray
+  private val edgeArrs: Array[Array[Double]] = edges.map(_.toArray).toArray
+  private val bins: Array[Int] = edgeArrs.map(_.length - 1)
+  private val size: Int = bins.product
 
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](numBins)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val idx = Binning.binIndexScala(v.asInstanceOf[Double], edgeArr)
-      if (idx >= 0) buf(idx) += 1
-    }
-    buf
-  }
-
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < numBins) { b1(i) += b2(i); i += 1 }
-    b1
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * numBins)
-    var i = 0
-    while (i < numBins) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](numBins)
-    var i = 0
-    while (i < numBins) { buf(i) = bb.getLong(); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): Histogram1DAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): Histogram1DAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Histogram1DAgg =
-    copy(child = newChildren.head)
-  override def prettyName: String = "hist1d"
-}
-
-/** Fixed-bin 2-D (joint) histogram aggregate (reference A7,
-  * `Jhisto_vs_<Y>`: `aggregate_functions.py:266-277` — per-cell
-  * `np.histogram2d(X_nonNaN, Y_nonNaN, bins=(edgesX, edgesY))[0]`).
-  *
-  * Buffer is the flattened `binsX * binsY` count matrix; output is
-  * `ARRAY<ARRAY<BIGINT>>` indexed `[xBin][yBin]`.
-  *
-  * Parity note: the reference NaN-compresses X and Y independently and pairs
-  * them positionally (and skips the cell when the non-NaN counts differ,
-  * `:273-274`). This engine uses the sane per-row semantics — a pixel counts
-  * iff BOTH X and Y are non-null/non-NaN and in range (SURVEY §7.4) — which
-  * coincides with the reference whenever X and Y share a NaN mask (the only
-  * case the reference actually accumulates consistently).
-  */
-case class Histogram2DAgg(
-    xChild: Expression,
-    yChild: Expression,
-    xEdges: Seq[Double],
-    yEdges: Seq[Double],
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
-
-  require(xEdges.length >= 2 && yEdges.length >= 2,
-    s"hist2d needs >= 2 edges per axis, got x=$xEdges y=$yEdges")
-
-  private val xArr: Array[Double] = xEdges.toArray
-  private val yArr: Array[Double] = yEdges.toArray
-  private val xBins: Int = xArr.length - 1
-  private val yBins: Int = yArr.length - 1
-
-  override def children: Seq[Expression] = Seq(xChild, yChild)
   override def nullable: Boolean = false
   override def dataType: DataType =
-    ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
+    if (bins.length == 1) ArrayType(LongType, containsNull = false)
+    else ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](xBins * yBins)
+  override def createAggregationBuffer(): Array[Long] = new Array[Long](size)
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val xv = xChild.eval(input)
-    val yv = yChild.eval(input)
-    if (xv != null && yv != null) {
-      val xi = Binning.binIndexScala(xv.asInstanceOf[Double], xArr)
-      if (xi >= 0) {
-        val yi = Binning.binIndexScala(yv.asInstanceOf[Double], yArr)
-        if (yi >= 0) buf(xi * yBins + yi) += 1
-      }
+    var idx = 0
+    var a = 0
+    while (a < axes.length) {
+      val v = axes(a).eval(input)
+      val b = if (v == null) -1 else Binning.binIndexScala(v.asInstanceOf[Double], edgeArrs(a))
+      if (b < 0) return buf
+      idx = idx * bins(a) + b
+      a += 1
     }
+    buf(idx) += 1
     buf
   }
 
   override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
     var i = 0
-    while (i < b1.length) { b1(i) += b2(i); i += 1 }
+    while (i < size) { b1(i) += b2(i); i += 1 }
     b1
   }
 
-  override def eval(buf: Array[Long]): Any = {
-    val rows = new Array[Any](xBins)
-    var xi = 0
-    while (xi < xBins) {
-      val row = new Array[Long](yBins)
-      System.arraycopy(buf, xi * yBins, row, 0, yBins)
-      rows(xi) = new GenericArrayData(row)
-      xi += 1
-    }
-    new GenericArrayData(rows)
-  }
+  override def eval(buf: Array[Long]): Any =
+    if (bins.length == 1) new GenericArrayData(buf)
+    else new GenericArrayData(Array.tabulate[Any](bins(0)) { x =>
+      new GenericArrayData(java.util.Arrays.copyOfRange(buf, x * bins(1), (x + 1) * bins(1)))
+    })
 
   override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buf.length)
+    val bb = ByteBuffer.allocate(8 * size)
     var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
+    while (i < size) { bb.putLong(buf(i)); i += 1 }
     bb.array()
   }
 
   override def deserialize(bytes: Array[Byte]): Array[Long] = {
     val bb = ByteBuffer.wrap(bytes)
-    val buf = new Array[Long](xBins * yBins)
+    val buf = new Array[Long](size)
     var i = 0
-    while (i < buf.length) { buf(i) = bb.getLong(); i += 1 }
+    while (i < size) { buf(i) = bb.getLong(); i += 1 }
     buf
   }
 
-  override def withNewMutableAggBufferOffset(o: Int): Histogram2DAgg =
+  override def withNewMutableAggBufferOffset(o: Int): HistogramAgg =
     copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): Histogram2DAgg =
+  override def withNewInputAggBufferOffset(o: Int): HistogramAgg =
     copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Histogram2DAgg =
-    copy(xChild = newChildren(0), yChild = newChildren(1))
-  override def prettyName: String = "hist2d"
+      newChildren: IndexedSeq[Expression]): HistogramAgg =
+    copy(children = newChildren)
+  override def prettyName: String = if (children.length == 1) "hist1d" else "hist2d"
 }
 
 /** User-facing Column constructors for the histogram aggregates. */
@@ -189,12 +123,12 @@ object HistogramFunctions {
   /** `ARRAY<BIGINT>` of per-bin counts of `v` over `edges`. */
   def histogram1d(v: Column, edges: Seq[Double]): Column =
     Bridge.aggColumn(
-      Histogram1DAgg(cast(Bridge.expression(v)), edges))
+      HistogramAgg(Seq(cast(Bridge.expression(v))), Seq(edges)))
 
   /** `ARRAY<ARRAY<BIGINT>>` joint counts of `(x, y)`, indexed `[xBin][yBin]`. */
   def histogram2d(x: Column, y: Column, xEdges: Seq[Double], yEdges: Seq[Double]): Column =
     Bridge.aggColumn(
-      Histogram2DAgg(cast(Bridge.expression(x)), cast(Bridge.expression(y)), xEdges, yEdges))
+      HistogramAgg(Seq(x, y).map(c => cast(Bridge.expression(c))), Seq(xEdges, yEdges)))
 
   // Unconditional cast: the child may still be unresolved here (dataType
   // would throw), and Catalyst elides a double-to-double Cast anyway.

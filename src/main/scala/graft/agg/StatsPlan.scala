@@ -48,27 +48,54 @@ object StatsPlan {
   }
 
   /** Final output columns for one variable, canonical reference names
-    * (`aggregate_functions.py:479-484` + sink naming `:745-750`).
+    * (`aggregate_functions.py:479-484` + sink naming `:745-750`), each
+    * with its kind; histogram bin counts come from the variable's edges.
     */
-  def finalizeCols(v: VarSpec, s: StatSwitches): Seq[Column] = {
+  def finalizeCols(v: VarSpec, s: StatSwitches): Seq[GridColumn] = {
     val sum_ = col(s"${v.name}__sum")
     val cnt = col(s"${v.name}__cnt")
     val mean = sum_ / cnt
+    def out(stat: String, kind: Kind, value: Column) =
+      GridColumn(s"${v.name}_$stat", v.name, kind, value)
     Seq(
-      if (s.min) Some(col(s"${v.name}__min").as(s"${v.name}_Minimum")) else None,
-      if (s.max) Some(col(s"${v.name}__max").as(s"${v.name}_Maximum")) else None,
-      if (s.mean) Some(mean.as(s"${v.name}_Mean")) else None,
-      if (s.count) Some(cnt.as(s"${v.name}_Pixel_Counts")) else None,
+      if (s.min) Some(out("Minimum", Statistic, col(s"${v.name}__min"))) else None,
+      if (s.max) Some(out("Maximum", Statistic, col(s"${v.name}__max"))) else None,
+      if (s.mean) Some(out("Mean", Statistic, mean)) else None,
+      if (s.count) Some(out("Pixel_Counts", PixelCount, cnt)) else None,
       if (s.std)
         // population std, algebraically identical to the reference finalize
-        Some(sqrt(col(s"${v.name}__sumsq") / cnt - mean * mean)
-          .as(s"${v.name}_Standard_Deviation"))
+        Some(out("Standard_Deviation", Statistic,
+          sqrt(col(s"${v.name}__sumsq") / cnt - mean * mean)))
       else None,
       if (s.hist && v.binEdges.nonEmpty)
-        Some(col(s"${v.name}__hist").as(s"${v.name}_Histogram_Counts"))
+        Some(out("Histogram_Counts", Histogram(Seq(v.binEdges.size - 1)),
+          col(s"${v.name}__hist")))
       else None,
       v.joint.filter(_ => s.jhist).map(j =>
-        col(s"${v.name}__jhist_${j.jointVar}").as(s"${v.name}_Jhisto_vs_${j.jointVar}"))
+        out(s"Jhisto_vs_${j.jointVar}",
+          Histogram(Seq(v.binEdges.size - 1, j.jointEdges.size - 1)),
+          col(s"${v.name}__jhist_${j.jointVar}")))
     ).flatten
   }
+
+  /** What an L3 output column holds — the one fact every sink needs to
+    * pack, initialize, shape and label its dataset.
+    */
+  sealed trait Kind
+  /** Min/Max/Mean/Standard_Deviation: packed when a packing is listed. */
+  case object Statistic extends Kind
+  /** Per-cell count of non-null pixels: integer, 0 where absent. */
+  case object PixelCount extends Kind
+  /** Per-cell bin counts, `bins` = one size per axis (1-D or 2-D). */
+  final case class Histogram(bins: Seq[Int]) extends Kind
+  /** Cloud-fraction Min/Max/Mean: forced reference packing (`:741-744`). */
+  case object CloudFraction extends Kind
+  /** Granules per cell (A8): integer, 0 where absent. */
+  case object GridCounts extends Kind
+
+  /** One output column of the L3 grid: its name, the configured variable
+    * it summarizes, its [[Kind]] and the expression over the aggregate
+    * buffers that computes it.
+    */
+  final case class GridColumn(name: String, variable: String, kind: Kind, value: Column)
 }

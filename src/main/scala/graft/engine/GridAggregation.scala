@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.agg.{CloudFractionAgg, StatsPlan}
+import graft.agg.StatsPlan.{CloudFraction, GridColumn, GridCounts, PixelCount}
 import graft.expr.GridExprs
 import graft.model.{JobConfig, VarSpec}
 
@@ -53,34 +54,54 @@ object GridAggregation {
 
   /** The L3 grid in ONE `groupBy(cell)`: the [[StatsPlan]] partials of
     * every data variable (A1-A7) and, when the config lists
-    * [[CloudFractionVar]], the [[CloudFractionAgg]] beside them (A8/A9:
-    * `cloud_fraction_{Minimum,Maximum,Mean,Pixel_Counts}` + `GRID_Counts`).
+    * [[CloudFractionVar]], the [[CloudFractionAgg]] beside them (A8/A9).
     * One scan, one shuffle keyed by cell; everything before it is map-side.
-    *
-    * A joint-histogram partner must be a real data column; the reference
-    * would KeyError on a jhist spec pointing at the cloud_fraction_CM
-    * pseudo-variable (its `data` dict never holds that key), so the engine
-    * rejects the same configs by dropping the unusable joint spec.
+    * The result is `cell` followed by the [[layout]] columns, in order.
     */
   def aggregate(pixels: DataFrame, cfg: JobConfig, cols: PixelCols = PixelCols()): DataFrame = {
-    val dataVars = cfg.vars.filterNot(_.name == CloudFractionVar).map { v =>
-      if (v.joint.exists(_.jointVar == CloudFractionVar)) v.copy(joint = None) else v
-    }
-    val wantCf = cfg.vars.exists(_.name == CloudFractionVar)
-    val cf = s"${CloudFractionVar}__agg"
-    val partials = dataVars.flatMap(v => StatsPlan.partialAggs(v, cfg.stats)) ++
-      (if (wantCf) Seq(CloudFractionAgg.cloudFraction(col(cols.cmFlag), col(cols.granule)).as(cf))
+    val partials = dataVars(cfg).flatMap(v => StatsPlan.partialAggs(v, cfg.stats)) ++
+      (if (wantsCloudFraction(cfg))
+        Seq(CloudFractionAgg.cloudFraction(col(cols.cmFlag), col(cols.granule)).as(CfBuffer))
       else Nil)
     require(partials.nonEmpty, "JobConfig.vars must list a variable with a statistic to compute")
-    val grouped = withCell(pixels, cfg, cols).groupBy(col("cell"))
+    withCell(pixels, cfg, cols).groupBy(col("cell"))
       .agg(partials.head, partials.tail: _*)
-    val cfOuts = if (!wantCf) Nil else Seq(
-      "cloud_fraction_Minimum" -> "min", "cloud_fraction_Maximum" -> "max",
-      "cloud_fraction_Mean" -> "mean", "cloud_fraction_Pixel_Counts" -> "pixel_counts",
-      "GRID_Counts" -> "grid_counts").map { case (out, field) => col(s"$cf.$field").as(out) }
-    val outs = col("cell") +: (dataVars.flatMap(v => StatsPlan.finalizeCols(v, cfg.stats)) ++ cfOuts)
-    grouped.select(outs: _*)
+      .select(col("cell") +: layout(cfg).map(c => c.value.as(c.name)): _*)
   }
+
+  /** The L3 layout: every output column of [[aggregate]] after `cell`, in
+    * order, with the variable it summarizes and its kind. This is the one
+    * place the layout is decided; the sinks read it instead of the names.
+    * `cloud_fraction_{Minimum,Maximum,Mean,Pixel_Counts}` and
+    * `GRID_Counts` close it when the config lists [[CloudFractionVar]].
+    */
+  def layout(cfg: JobConfig): Seq[GridColumn] = {
+    val cf = if (!wantsCloudFraction(cfg)) Nil else Seq(
+      "cloud_fraction_Minimum" -> ("min", CloudFraction),
+      "cloud_fraction_Maximum" -> ("max", CloudFraction),
+      "cloud_fraction_Mean" -> ("mean", CloudFraction),
+      "cloud_fraction_Pixel_Counts" -> ("pixel_counts", PixelCount),
+      "GRID_Counts" -> ("grid_counts", GridCounts)).map { case (name, (field, kind)) =>
+      GridColumn(name, CloudFractionVar, kind, col(s"$CfBuffer.$field"))
+    }
+    dataVars(cfg).flatMap(v => StatsPlan.finalizeCols(v, cfg.stats)) ++ cf
+  }
+
+  private val CfBuffer = s"${CloudFractionVar}__agg"
+
+  private def wantsCloudFraction(cfg: JobConfig): Boolean =
+    cfg.vars.exists(_.name == CloudFractionVar)
+
+  /** The configured data variables. A joint-histogram partner must be a
+    * real data column; the reference would KeyError on a jhist spec
+    * pointing at the cloud_fraction_CM pseudo-variable (its `data` dict
+    * never holds that key), so the engine rejects the same configs by
+    * dropping the unusable joint spec.
+    */
+  private def dataVars(cfg: JobConfig): Seq[VarSpec] =
+    cfg.vars.filterNot(_.name == CloudFractionVar).map { v =>
+      if (v.joint.exists(_.jointVar == CloudFractionVar)) v.copy(joint = None) else v
+    }
 
   /** Cloud fraction alone (reference A9, `aggregate_functions.py:365-380`):
     * [[aggregate]] with only [[CloudFractionVar]] configured — per cell the
@@ -144,18 +165,5 @@ object GridAggregation {
       .filter(col("n") > 0)
       .groupBy(col("cell"), col("bin"))
       .agg(sum(col("n")).as("bin_count"))
-  }
-
-  /** Expand the flat cell id into grid indices and cell-center coordinates
-    * for the L3 sink (reference reshape + meshgrid,
-    * `aggregate_functions.py:532-536`, `:701-716`).
-    */
-  def withGridIndexes(agged: DataFrame, cfg: JobConfig): DataFrame = {
-    val g = cfg.grid
-    agged
-      .withColumn("lat_idx", GridExprs.latIdx(col("cell"), g))
-      .withColumn("lon_idx", GridExprs.lonIdx(col("cell"), g))
-      .withColumn("lat_center", GridExprs.cellLat(col("cell"), g))
-      .withColumn("lon_center", GridExprs.cellLon(col("cell"), g))
   }
 }

@@ -62,6 +62,14 @@ object GridExprs {
   def cellLon(cell: Column, g: GridSpec): Column =
     lonIdx(cell, g) * g.lonGap + lit(g.region.lonMin + g.lonGap / 2)
 
+  /** `lat_idx`, `lon_idx`, `lat_center`, `lon_center` of a cell id: the
+    * reference's reshape + meshgrid (`aggregate_functions.py:532-536`,
+    * `:701-716`) as named columns.
+    */
+  def gridIndexCols(cell: Column, g: GridSpec): Seq[Column] = Seq(
+    latIdx(cell, g).as("lat_idx"), lonIdx(cell, g).as("lon_idx"),
+    cellLat(cell, g).as("lat_center"), cellLon(cell, g).as("lon_center"))
+
   /** Systematic (deterministic) decimation: keep every n-th pixel starting
     * at (rowOff, colOff). Defaults reproduce the reference's DATA sampling
     * `[2::n, 3::n]` (`aggregate_functions.py:120`); its GEOLOCATION arrays

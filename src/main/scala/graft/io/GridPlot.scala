@@ -2,10 +2,9 @@ package graft.io
 
 import java.awt.image.BufferedImage
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.GridAggregation
 import graft.model.JobConfig
 
 /** PNG rendering of L3 grids — the plotting half of the reference's legacy
@@ -149,8 +148,10 @@ object GridPlot {
 
   /** The reference's `displayOutput`: take an aggregated grid frame
     * (cell-keyed, like every sink input), pick one value column, and
-    * write the contourf-style PNG. Honors the output-exists guard the
-    * reference applies to all its sinks (S5).
+    * write the contourf-style PNG. Each row lands at its `cell`
+    * (= `lat_idx * gridLon + lon_idx`). An existing `path` is an error
+    * ([[L3Writer.requireAbsent]], the guard the reference applies to all
+    * its sinks, S5).
     *
     * Returns the dense grid actually rendered (for spec/inspection).
     */
@@ -162,23 +163,19 @@ object GridPlot {
       vmin: Double = 0.0,
       vmax: Double = 1.0,
       levels: Int = 10,
-      cellPx: Int = 2,
-      mode: SaveMode = SaveMode.ErrorIfExists): Array[Array[Double]] = {
-    if (!L3Writer.mayWrite(path, mode)) return Array.empty
+      cellPx: Int = 2): Array[Array[Double]] = {
+    L3Writer.requireAbsent(path)
     val nLat = cfg.grid.gridLat
     val nLon = cfg.grid.gridLon
     val cells = Array.fill(nLat, nLon)(Double.NaN)
     // driver-small by construction: ≤ nLat×nLon rows (the sink bound)
-    GridAggregation.withGridIndexes(grid, cfg)
-      .select(col("lat_idx"), col("lon_idx"),
-        col(valueCol).cast("double").as("v"))
+    grid.select(col("cell"), col(valueCol).cast("double"))
       .collect()
       .foreach { row =>
-        val lat = row.getAs[Number]("lat_idx").intValue()
-        val lon = row.getAs[Number]("lon_idx").intValue()
-        require(lat >= 0 && lat < nLat && lon >= 0 && lon < nLon,
-          s"grid index ($lat, $lon) outside ${nLat}x$nLon")
-        cells(lat)(lon) = if (row.isNullAt(2)) Double.NaN else row.getDouble(2)
+        val cell = row.getAs[Number](0).longValue()
+        require(cell >= 0 && cell < nLat.toLong * nLon, s"grid cell $cell outside ${nLat}x$nLon")
+        cells((cell / nLon).toInt)((cell % nLon).toInt) =
+          if (row.isNullAt(1)) Double.NaN else row.getDouble(1)
       }
     val img = renderGrid(cells, vmin, vmax, levels, cellPx)
     java.nio.file.Files.write(java.nio.file.Paths.get(path), pngBytes(img))

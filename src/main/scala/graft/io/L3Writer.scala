@@ -1,32 +1,40 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.agg.StatsPlan._
 import graft.engine.GridAggregation
+import graft.expr.GridExprs
 import graft.model.JobConfig
 
 /** L3 gridded sink (S4, reference `addGridEntry`
   * `aggregate_functions.py:413-453` + sink loop `:724-757`).
   *
+  * Every sink takes the grid frame [[GridAggregation.aggregate]] builds —
+  * `cell` plus the columns of [[GridAggregation.layout]] for the same job
+  * config — and reads that layout, never the column names, to decide how
+  * each column is packed, initialized, shaped and labelled. A grid column
+  * the layout does not list, or a layout column the grid lacks, is an
+  * `IllegalArgumentException` naming the column.
+  *
   * The reference's own container is the `.h5` ([[writeH5]]); [[writeNetcdf]]
   * writes the same grid as netCDF-3 classic and [[write]] as one Parquet
-  * file of grid rows (one row per cell with `lat_idx/lon_idx/lat_center/
-  * lon_center` plus every statistic column). The two binary sinks collect
-  * the driver-small grid ONCE and share one densifier ([[densify]]); each
-  * keeps only its own encoder.
+  * file of grid rows (`cell`, every layout column, then `lat_idx/lon_idx/
+  * lat_center/lon_center`). The two binary sinks collect the driver-small
+  * grid ONCE and share one densifier ([[densify]]); each keeps only its
+  * own encoder.
   *
   * Reference packing/naming rules reproduced:
   *   - int-packing `round(value/scale + offset)` with NaN/Inf/NULL -> fill
   *     (`:428-435`);
   *   - counts and histograms stay integer (scale 1, `:424-427`);
-  *   - `Cloud_Fraction*` datasets are forced to scale 1e-4, offset 0,
+  *   - cloud-fraction statistics are forced to scale 1e-4, offset 0,
   *     fill -9999 (`:741-744`);
   *   - `_1km` is stripped from output dataset names (`:745-748`);
-  *   - an existing output path is a hard error — the reference's
-  *     output-exists shell guard (S5, `:610-617`) becomes
-  *     `SaveMode.ErrorIfExists`.
+  *   - an existing output path is a hard error ([[requireAbsent]], the
+  *     reference's output-exists shell guard, S5, `:610-617`).
   */
 object L3Writer {
 
@@ -45,42 +53,55 @@ object L3Writer {
   /** Output name for a statistic column: strip `_1km`. */
   def outputName(col: String): String = col.replace("_1km", "")
 
-  /** Apply packing + naming to a grid frame. `packings` maps statistic
-    * column name -> packing; unlisted columns pass through unpacked
-    * (counts, histograms, indexes). Cloud-fraction columns default to the
-    * forced reference packing when not explicitly listed.
+  /** The output-exists guard (S5, `:610-617`) of every sink, and of
+    * [[graft.GraftCli.run]] before it reads any input.
     */
-  def packGrid(grid: DataFrame, packings: Map[String, Packing]): DataFrame =
-    grid.select(packedCols(grid.columns.toSeq, packings): _*)
+  def requireAbsent(path: String): Unit =
+    if (new java.io.File(path).exists())
+      throw new IllegalStateException(
+        s"output path $path already exists (reference output-exists guard)")
 
-  private def packedCols(cols: Seq[String], packings: Map[String, Packing]): Seq[Column] =
-    cols.map { c =>
-      packingOf(c, packings).fold(col(c))(pk => pack(col(c), pk)).as(outputName(c))
+  /** The job's L3 layout, checked column for column against the grid. */
+  private def layoutOf(grid: DataFrame, cfg: JobConfig): Seq[GridColumn] = {
+    val layout = GridAggregation.layout(cfg)
+    val listed = layout.map(_.name).toSet
+    val present = grid.columns.toSet
+    require(present("cell"), "L3 grid has no cell column")
+    for (c <- grid.columns if c != "cell")
+      require(listed(c), s"grid column $c is not in the job config's L3 layout")
+    for (c <- layout)
+      require(present(c.name), s"L3 layout column ${c.name} is missing from the grid")
+    layout
+  }
+
+  /** Statistics are packed when `packings` lists them (by grid column
+    * name); cloud-fraction statistics always are, at the forced reference
+    * packing unless listed; counts and histograms never.
+    */
+  private def packingOf(c: GridColumn, packings: Map[String, Packing]): Option[Packing] =
+    c.kind match {
+      case Statistic => packings.get(c.name)
+      case CloudFraction => Some(packings.getOrElse(c.name, DefaultCloudFractionPacking))
+      case _ => None
     }
 
-  /** A cloud-fraction statistic (not a count): forced packing (`:741-744`),
-    * float64 in the `.h5` (`:438-444`).
-    */
-  private def isCloudFractionStat(c: String): Boolean =
-    c.startsWith("cloud_fraction") && !c.endsWith("_Pixel_Counts")
+  private def packed(c: GridColumn, packings: Map[String, Packing]): Column =
+    packingOf(c, packings).fold(col(c.name))(pack(col(c.name), _)).as(outputName(c.name))
 
-  private def packingOf(c: String, packings: Map[String, Packing]): Option[Packing] =
-    packings.get(c).orElse(
-      if (isCloudFractionStat(c)) Some(DefaultCloudFractionPacking) else None)
-
-  /** Write the L3 grid. Default mode reproduces the reference's
-    * "output already exists" abort.
-    */
+  /** Write the L3 grid as one Parquet file of packed grid rows. */
   def write(
       grid: DataFrame,
       cfg: JobConfig,
       path: String,
-      packings: Map[String, Packing] = Map.empty,
-      mode: SaveMode = SaveMode.ErrorIfExists): Unit =
-    packGrid(GridAggregation.withGridIndexes(grid, cfg), packings)
+      packings: Map[String, Packing] = Map.empty): Unit = {
+    requireAbsent(path)
+    val cell = col("cell")
+    grid.select((cell +: layoutOf(grid, cfg).map(packed(_, packings))) ++
+      GridExprs.gridIndexCols(cell, cfg.grid): _*)
       // single file: the grid is <= grid_lat*grid_lon rows (tiny by design)
       .coalesce(1)
-      .write.mode(mode).parquet(path)
+      .write.parquet(path)
+  }
 
   /** Axis vectors `lat_bnd`/`lon_bnd` (cell-center coordinates, reference
     * `:532-536`, `:728-733`) — driver-side tiny frames.
@@ -92,53 +113,49 @@ object L3Writer {
     (0 until cfg.grid.gridLon).map(i =>
       cfg.grid.region.lonMin + cfg.grid.lonGap / 2 + i * cfg.grid.lonGap)
 
-  /** CF attribute set for every output dataset, mirroring the reference's
-    * HDF5 attrs (`addGridEntry`, `aggregate_functions.py:446-453`, and the
-    * axis/GRID_Counts datasets `:727-741`):
+  /** CF attribute set for every output dataset, by layout kind, mirroring
+    * the reference's HDF5 attrs (`addGridEntry`, `aggregate_functions.py:
+    * 446-453`, and the axis/GRID_Counts datasets `:727-741`):
     *
     *   - axis datasets: `units=degrees`, `long_name=*_boundaries`;
     *   - `GRID_Counts`: `units=none`, `long_name=grid_point_counts`;
     *   - counts/histograms: integer, `scale_factor=1, add_offset=0`
     *     (`:424-427`);
-    *   - `cloud_fraction*`: forced `scale=1e-4, offset=0, fill=-9999`
-    *     (`:438-444`);
-    *   - packed statistics: the packing's scale/offset/fill plus the
-    *     variable's units/long_name from `varAttrs`;
+    *   - cloud-fraction statistics: forced `scale=1e-4, offset=0,
+    *     fill=-9999` (`:438-444`);
+    *   - other statistics: the packing's scale/offset/fill, else the
+    *     variable's own;
+    *   - units/long_name are those `varAttrs` holds for the column's
+    *     variable;
     *   - every gridded dataset's dims are labelled lat_bnd/lon_bnd
     *     (`:447-448`).
     */
   def cfAttrs(
-      outCols: Seq[String],
+      layout: Seq[GridColumn],
       packings: Map[String, Packing],
       varAttrs: Map[String, PixelSource.VarAttrs]): Map[String, Map[String, String]] = {
     val axis = Map(
       "lat_bnd" -> Map("units" -> "degrees", "long_name" -> "Latitude_boundaries"),
       "lon_bnd" -> Map("units" -> "degrees", "long_name" -> "Longitude_boundaries"))
-    val data = outCols.filterNot(Set("cell", "lat_idx", "lon_idx", "lat_center", "lon_center"))
-      .map { c =>
-        val base = Map("dims" -> "lat_bnd,lon_bnd")
-        val a = varAttrs.collectFirst { case (v, at) if c.startsWith(v) => at }
-        val body =
-          if (c == "GRID_Counts")
-            Map("units" -> "none", "long_name" -> "grid_point_counts")
-          else if (c.contains("Pixel_Counts") || c.contains("Histogram_Counts") ||
-            c.contains("Jhisto_vs_"))
-            Map("units" -> a.fold("none")(_.units), "long_name" -> a.fold("")(_.longName),
-              "scale_factor" -> "1.0", "add_offset" -> "0.0",
-              "_FillValue" -> a.fold("-9999.0")(_.fillValue.toString))
-          else {
-            val p = packingOf(c, packings)
-            Map("units" -> a.fold("none")(_.units), "long_name" -> a.fold("")(_.longName),
-              "scale_factor" -> p.fold(a.fold(1.0)(_.scaleFactor))(_.scale).toString,
-              "add_offset" -> p.fold(a.fold(0.0)(_.addOffset))(_.offset).toString,
-              "_FillValue" -> p.fold(a.fold(-9999.0)(_.fillValue))(_.fill.toDouble).toString)
-          }
-        outputName(c) -> (base ++ body)
-      }.toMap
+    val data = layout.map { c =>
+      val a = varAttrs.get(c.variable)
+      val named = Map("units" -> a.fold("none")(_.units), "long_name" -> a.fold("")(_.longName))
+      val body = c.kind match {
+        case GridCounts => Map("units" -> "none", "long_name" -> "grid_point_counts")
+        case PixelCount | Histogram(_) =>
+          named ++ Map("scale_factor" -> "1.0", "add_offset" -> "0.0",
+            "_FillValue" -> a.fold("-9999.0")(_.fillValue.toString))
+        case Statistic | CloudFraction =>
+          val p = packingOf(c, packings)
+          named ++ Map(
+            "scale_factor" -> p.fold(a.fold(1.0)(_.scaleFactor))(_.scale).toString,
+            "add_offset" -> p.fold(a.fold(0.0)(_.addOffset))(_.offset).toString,
+            "_FillValue" -> p.fold(a.fold(-9999.0)(_.fillValue))(_.fill.toDouble).toString)
+      }
+      outputName(c.name) -> (Map("dims" -> "lat_bnd,lon_bnd") ++ body)
+    }.toMap
     axis ++ data
   }
-
-  private val IndexCols = Set("cell", "lat_idx", "lon_idx", "lat_center", "lon_center")
 
   /** One statistic of the collected grid as a dense row-major
     * `[lat, lon(, bins...)]` array — what the `.h5` and `.nc` encoders share.
@@ -161,15 +178,18 @@ object L3Writer {
       attrs: Map[String, Map[String, String]],
       vars: Seq[DenseVar])
 
-  /** Collect the grid ONCE and densify every statistic column, in column
-    * order, under its output name. The projection holds the packed columns
-    * ([[packGrid]]) plus the raw value of each cloud-fraction statistic.
+  /** Collect the grid ONCE and densify every layout column, in layout
+    * order, under its output name. The projection holds `cell`, the packed
+    * columns and the raw value of each cloud-fraction statistic; each row
+    * lands at its `cell` (= `lat_idx * gridLon + lon_idx`).
     *
-    * Cells absent from the (possibly sparse) grid frame surface as
-    * `_FillValue` for statistics and 0 for counts/histograms — the
-    * reference's init values (`+inf -> fill` / zeros) after packing.
-    * Histogram bin counts come from the job's bin edges, else from the
-    * first non-null row; every row's shape is checked against them.
+    * Each column's kind decides its dense form: cells absent from the
+    * (possibly sparse) grid frame surface as `_FillValue` for statistics
+    * and 0 for counts/histograms — the reference's init values
+    * (`+inf -> fill` / zeros) after packing. Histograms take their bin
+    * counts from the layout, and every row's shape is checked against them.
+    * An unpacked statistic keeps its Spark type: integral -> int64,
+    * fractional or decimal -> float64.
     *
     * The grid is collected to the driver: at most gridLat x gridLon cells
     * (64,800 at 1 degree) — the same driver-small bound the reference's
@@ -182,23 +202,18 @@ object L3Writer {
       varAttrs: Map[String, PixelSource.VarAttrs]): DenseL3 = {
     val nLat = cfg.grid.gridLat
     val nLon = cfg.grid.gridLon
-    val indexed = GridAggregation.withGridIndexes(grid, cfg)
-    val stats = indexed.columns.toSeq.filterNot(IndexCols)
-    val cfStats = stats.filter(isCloudFractionStat)
-    val projection = indexed.select(packedCols(indexed.columns.toSeq, packings) ++
-      cfStats.map(c => col(c).as(s"__raw_$c")): _*)
+    val layout = layoutOf(grid, cfg)
+    val projection = grid.select((col("cell") +: layout.map(packed(_, packings))) ++
+      layout.filter(_.kind == CloudFraction).map(c => col(c.name).as(s"__raw_${c.name}")): _*)
     val rows = projection.collect()
     val schema = projection.schema
-    val attrs = cfAttrs(indexed.columns.toSeq, packings, varAttrs)
+    val attrs = cfAttrs(layout, packings, varAttrs)
 
-    val latI = schema.fieldIndex("lat_idx")
-    val lonI = schema.fieldIndex("lon_idx")
     val cells = rows.map { r =>
-      val lat = r.getAs[Number](latI).intValue()
-      val lon = r.getAs[Number](lonI).intValue()
-      require(lat >= 0 && lat < nLat && lon >= 0 && lon < nLon,
-        s"grid index ($lat, $lon) outside ${nLat}x$nLon")
-      lat * nLon + lon
+      require(!r.isNullAt(0), "grid cell is NULL")
+      val cell = r.getAs[Number](0).longValue()
+      require(cell >= 0 && cell < nLat.toLong * nLon, s"grid cell $cell outside ${nLat}x$nLon")
+      cell.toInt
     }
     def dense[A: scala.reflect.ClassTag](i: Int, init: A)(value: Any => A): Array[A] = {
       val out = Array.fill(nLat * nLon)(init)
@@ -213,71 +228,52 @@ object L3Writer {
     def seq(v: Any): scala.collection.Seq[Any] = v.asInstanceOf[scala.collection.Seq[Any]]
     // histograms: [lat, lon, bins...] int64, zero where no pixel fell; a
     // joint (rank-2) histogram is the row-major [x][y] nest
-    def histogram(c: String, i: Int, rank: Int, binsOfSpec: Option[Seq[Int]]): DenseLongs = {
+    def histogram(c: String, i: Int, bins: Seq[Int]): DenseLongs = {
       def shape(h: scala.collection.Seq[Any]): Seq[Int] =
-        if (rank == 1) Seq(h.size) else Seq(h.size, h.headOption.fold(0)(seq(_).size))
-      val bins = binsOfSpec
-        .orElse(rows.find(!_.isNullAt(i)).map(r => shape(seq(r.get(i)))))
-        .getOrElse(throw new IllegalArgumentException(s"$c: cannot infer bin count"))
+        if (bins.size == 1) Seq(h.size) else Seq(h.size, h.headOption.fold(0)(seq(_).size))
       val width = bins.product
       val out = new Array[Long](nLat * nLon * width)
       for (k <- rows.indices if !rows(k).isNullAt(i)) {
         val h = seq(rows(k).get(i))
-        require(h.size == bins.head && (rank == 1 || h.forall(seq(_).size == bins(1))),
+        require(h.size == bins.head && (bins.size == 1 || h.forall(seq(_).size == bins(1))),
           s"$c: histogram shape ${shape(h).mkString(" x ")} != ${bins.mkString(" x ")}")
-        val flat = if (rank == 1) h else h.flatMap(seq)
+        val flat = if (bins.size == 1) h else h.flatMap(seq)
         val base = cells(k) * width
         flat.iterator.zipWithIndex.foreach { case (n, x) => out(base + x) = number(n).longValue() }
       }
       DenseLongs(c, bins, out)
     }
 
-    val vars = stats.map { raw =>
-      val c = outputName(raw)
-      val i = schema.fieldIndex(c)
-      // bin counts for histogram columns, from the job spec (output names
-      // are _1km-stripped, so match on stripped var names too)
-      val v = cfg.vars.find(v => c.startsWith(outputName(v.name)))
-      def fill = attrs.get(c).flatMap(_.get("_FillValue")).map(_.toDouble).getOrElse(-9999.0)
-      if (isCloudFractionStat(raw)) {
-        val p = packingOf(raw, packings).get
-        val f = p.fill.toDouble
-        DenseCloudFraction(c, dense(i, fill.toLong)(number(_).longValue()),
-          dense(schema.fieldIndex(s"__raw_$raw"), f) { x =>
-            val d = number(x).doubleValue()
-            if (d.isNaN || d.isInfinite) f else d / p.scale + p.offset
-          })
-      } else schema(i).dataType match {
-        case LongType | IntegerType =>
-          val isCount = c == "GRID_Counts" || c.contains("Pixel_Counts")
-          DenseLongs(c, Nil, dense(i, if (isCount) 0L else fill.toLong)(number(_).longValue()))
+    val vars = layout.zipWithIndex.map { case (gc, k) =>
+      val c = outputName(gc.name)
+      val i = k + 1
+      def fill = attrs(c)("_FillValue").toDouble
+      def longs(init: Long) = DenseLongs(c, Nil, dense(i, init)(number(_).longValue()))
+      (gc.kind, schema(i).dataType) match {
+        case (CloudFraction, _) =>
+          val p = packingOf(gc, packings).get
+          val f = p.fill.toDouble
+          DenseCloudFraction(c, dense(i, p.fill)(number(_).longValue()),
+            dense(schema.fieldIndex(s"__raw_${gc.name}"), f) { x =>
+              val d = number(x).doubleValue()
+              if (d.isNaN || d.isInfinite) f else d / p.scale + p.offset
+            })
+        case (PixelCount | GridCounts, LongType | IntegerType) => longs(0L)
+        case (Statistic, LongType | IntegerType) => longs(fill.toLong)
         // DecimalType: user parquet (DuckDB/Hive writers) routinely types
         // arithmetic results DECIMAL; stats over them surface here too
-        case DoubleType | FloatType | _: DecimalType =>
+        case (Statistic, DoubleType | FloatType | _: DecimalType) =>
           DenseDoubles(c, dense(i, fill)(number(_).doubleValue()))
-        case ArrayType(ArrayType(LongType | IntegerType, _), _) =>
-          val nx = v.map(_.binEdges.size - 1)
-          val ny = v.flatMap(_.joint).map(_.jointEdges.size - 1)
-          histogram(c, i, rank = 2, nx.zip(ny).map { case (x, y) => Seq(x, y) })
-        case ArrayType(LongType | IntegerType, _) =>
-          histogram(c, i, rank = 1, v.map(x => Seq(x.binEdges.size - 1)))
-        case other =>
+        case (Histogram(bins @ Seq(_)), ArrayType(LongType | IntegerType, _)) =>
+          histogram(c, i, bins)
+        case (Histogram(bins @ Seq(_, _)), ArrayType(ArrayType(LongType | IntegerType, _), _)) =>
+          histogram(c, i, bins)
+        case (kind, other) =>
           throw new IllegalArgumentException(
-            s"$c: unsupported grid column type $other for L3 export")
+            s"$c: unsupported grid column type $other for a $kind column in L3 export")
       }
     }
     DenseL3(nLat, nLon, attrs, vars)
-  }
-
-  /** The single-file sinks' output-exists guard (S5, `:610-617`): throws
-    * under `ErrorIfExists`; false = skip the write (`Ignore`).
-    */
-  private[io] def mayWrite(path: String, mode: SaveMode): Boolean = {
-    val exists = new java.io.File(path).exists()
-    if (exists && mode == SaveMode.ErrorIfExists)
-      throw new IllegalStateException(
-        s"output path $path already exists (reference output-exists guard)")
-    !(exists && mode == SaveMode.Ignore)
   }
 
   /** Full L3 export as a REAL netCDF-3 classic file — the binary,
@@ -289,7 +285,7 @@ object L3Writer {
     *     which are also the DIMENSION names of every gridded variable —
     *     netCDF's native form of the reference's `dims[i].label` calls;
     *   - one dense `[lat_bnd, lon_bnd]` variable per statistic, int-packed
-    *     by [[packGrid]] with `_1km` stripped (`:745-748`), cloud-fraction
+    *     ([[pack]]) with `_1km` stripped (`:745-748`), cloud-fraction
     *     scaling forced (`:741-744`);
     *   - 1-D/2-D histograms as `[lat_bnd, lon_bnd, <name>_bin(_x/_y)]`
     *     variables (the reference's `reshape([lat, lon, bins...])`,
@@ -306,10 +302,9 @@ object L3Writer {
       cfg: JobConfig,
       path: String,
       packings: Map[String, Packing] = Map.empty,
-      varAttrs: Map[String, PixelSource.VarAttrs] = Map.empty,
-      mode: SaveMode = SaveMode.ErrorIfExists): Unit = {
+      varAttrs: Map[String, PixelSource.VarAttrs] = Map.empty): Unit = {
     import NetCDF3._
-    if (!mayWrite(path, mode)) return
+    requireAbsent(path)
     val l3 = densify(grid, cfg, packings, varAttrs)
 
     val dims = scala.collection.mutable.ArrayBuffer(
@@ -377,7 +372,7 @@ object L3Writer {
     *   - `GRID_Counts`: int64 `[lat, lon]` coverage counts (`:736`);
     *   - one dataset per statistic, `_1km` stripped (`:745-748`):
     *     counts/histograms int64 unscaled (`:424-427`); packed statistics
-    *     int64 via [[packGrid]]; `Cloud_Fraction*` statistics FLOAT64 at
+    *     int64 via [[pack]]; cloud-fraction statistics FLOAT64 at
     *     the forced 1e-4 scaling WITHOUT the integer cast — the reference's
     *     CF branch (`:438-444`) assigns `tmp_data` before `astype`, so the
     *     file genuinely holds unrounded `value/1e-4` doubles;
@@ -404,10 +399,9 @@ object L3Writer {
       cfg: JobConfig,
       path: String,
       packings: Map[String, Packing] = Map.empty,
-      varAttrs: Map[String, PixelSource.VarAttrs] = Map.empty,
-      mode: SaveMode = SaveMode.ErrorIfExists): Unit = {
+      varAttrs: Map[String, PixelSource.VarAttrs] = Map.empty): Unit = {
     import HDF5._
-    if (!mayWrite(path, mode)) return
+    requireAbsent(path)
     val l3 = densify(grid, cfg, packings, varAttrs)
     val latLon = Seq(l3.nLat, l3.nLon)
 

@@ -46,17 +46,6 @@ import graft.ops.Lineage.LineageOps
   */
 object ComponentStore {
 
-  private def exists(path: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
-
-  private def hasParquet(path: String): Boolean = {
-    val root = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(root)) return false
-    val s = java.nio.file.Files.walk(root)
-    try s.anyMatch(p => p.toString.endsWith(".parquet"))
-    finally s.close()
-  }
-
   /** Qualifying Jaccard edges between two shingle indexes: exact
     * intersection counts off the 8-byte-hash equi-join, the single IEEE
     * division of [[DedupOps.ngramJaccardPairs]]. `selfJoin` restricts to
@@ -105,7 +94,7 @@ object ComponentStore {
 
     val asgPath = s"$storeDir/assignment"
     val next: DataFrame =
-      if (!hasParquet(asgPath)) {
+      if (!IndexOps.hasParquet(asgPath)) {
         // first segment: plain components over the internal pair graph
         val edges = jaccardEdges(newIdx, newSizes, newIdx, newSizes,
           threshold, selfJoin = true)
@@ -183,7 +172,7 @@ object ComponentStore {
   // zero-row segment writes no parquet part files, so schema inference
   // has nothing to read — fall back to typed empty frames.
   private def readShingles(spark: SparkSession, storeDir: String): DataFrame =
-    if (hasParquet(s"$storeDir/shingles"))
+    if (IndexOps.hasParquet(s"$storeDir/shingles"))
       spark.read.parquet(s"$storeDir/shingles")
     else {
       import spark.implicits._
@@ -191,7 +180,7 @@ object ComponentStore {
     }
 
   private def readSizes(spark: SparkSession, storeDir: String): DataFrame =
-    if (hasParquet(s"$storeDir/sizes"))
+    if (IndexOps.hasParquet(s"$storeDir/sizes"))
       spark.read.parquet(s"$storeDir/sizes")
     else {
       import spark.implicits._
@@ -204,7 +193,7 @@ object ComponentStore {
     * zero rows) degrades to the typed empty frame.
     */
   def assignment(spark: SparkSession, storeDir: String): DataFrame =
-    if (hasParquet(s"$storeDir/assignment"))
+    if (IndexOps.hasParquet(s"$storeDir/assignment"))
       spark.read.parquet(s"$storeDir/assignment")
     else {
       import spark.implicits._

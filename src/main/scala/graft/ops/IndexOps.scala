@@ -86,7 +86,9 @@ object IndexOps {
 
   private def coveredSegmentsParquet(
       spark: SparkSession, indexDir: String, kind: String): Set[String] =
-    if (!exists(s"$indexDir/segments")) Set.empty
+    // a crash between recordSegment's first marker and its first parquet
+    // append leaves `segments/` holding only `.ledger/`
+    if (!hasParquet(s"$indexDir/segments")) Set.empty
     else spark.read.parquet(s"$indexDir/segments")
       .filter(col("kind") === kind)
       .select("segment").collect().map(_.getString(0)).toSet
@@ -169,14 +171,25 @@ object IndexOps {
     recordSegment(spark, indexDir, "bloom", segment)
   }
 
-  /** True when the dataset dir holds at least one parquet part file.
-    * A segment of ZERO postings writes no partition dirs (partitionBy on
-    * an empty frame), leaving schema inference nothing to read. */
-  private def hasParquet(path: String): Boolean = {
+  /** True when the dataset dir holds at least one parquet part file the
+    * parquet reader would see: files and dirs under it named `.*` or `_*`
+    * (the segment ledger's markers, commit metadata; `_*=*` partition
+    * dirs excepted) are hidden from schema inference, so they do not
+    * count. A segment of ZERO postings writes no partition dirs
+    * (partitionBy on an empty frame), leaving schema inference nothing to
+    * read. */
+  private[ops] def hasParquet(path: String): Boolean = {
     val root = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.exists(root)) return false
     val s = java.nio.file.Files.walk(root)
-    try s.anyMatch(p => p.toString.endsWith(".parquet"))
+    try s.anyMatch { p =>
+      val rel = root.relativize(p)
+      p.toString.endsWith(".parquet") && java.nio.file.Files.isRegularFile(p) &&
+        (0 until rel.getNameCount).forall { i =>
+          val n = rel.getName(i).toString // Spark's hidden-path rule
+          !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
+        }
+    }
     finally s.close()
   }
 

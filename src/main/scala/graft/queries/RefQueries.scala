@@ -290,9 +290,8 @@ object RefQueries {
       val a = GridAggregation.aggregate(
         pixels(s, dir),
         cfg(StatSwitches(std = false), VarSpec("l_quantity")))
-      GridAggregation.withGridIndexes(a, cfg(StatSwitches()))
-        .select(col("cell"), col("lat_idx"), col("lon_idx"),
-          col("lat_center"), col("lon_center"), col("l_quantity_Mean"))
+      a.select((col("cell") +: GridExprs.gridIndexCols(col("cell"), cfg(StatSwitches()).grid)) :+
+        col("l_quantity_Mean"): _*)
     })
   )
 

@@ -59,10 +59,10 @@ object GranuleSource {
   val granuleCols: Set[String] = Set("granule_id", "day_of_year", "hour")
 
   /** Evaluate a pushed filter against `get`, SQL three-valued semantics
-    * collapsed to "is the row kept": a comparison against NULL is
-    * not-true, so the row is skipped — exactly what Spark's own residual
-    * filter would do. Only called for filters [[accepts]] returned true
-    * for.
+    * collapsed to "is the granule kept": a comparison against NULL is
+    * not-true, so the granule is skipped — exactly what Spark's own
+    * residual filter would do to its rows. Only called for filters
+    * [[accepts]] returned true for.
     */
   private[sources] def holds(f: Filter, get: String => Any): Boolean = f match {
     case EqualTo(a, v) => cmp(get(a), v).exists(_ == 0)
@@ -84,29 +84,28 @@ object GranuleSource {
   private def cmp(actual: Any, lit: Any): Option[Int] = (actual, lit) match {
     case (null, _) => None // NULL comparison is not-true
     case (a: String, b: String) => Some(a.compareTo(b))
-    case (a: UTF8String, b: String) => Some(a.toString.compareTo(b))
     case (a: Number, b: Number) =>
       Some(java.lang.Double.compare(a.doubleValue(), b.doubleValue()))
-    case _ => // incomparable: force "holds" (never wrongly skip a row)
+    case _ => // incomparable: force "holds" (never wrongly skip a granule)
       Some(0)
   }
 
-  /** Can [[holds]] evaluate this filter exactly? (Known node types with
-    * all references inside `allowed`.)
+  /** Is this filter granule-grade: a node type [[holds]] evaluates
+    * exactly, over [[granuleCols]] only?
     */
-  private[sources] def accepts(f: Filter, allowed: Set[String]): Boolean = f match {
-    case EqualTo(a, _) => allowed(a)
-    case GreaterThan(a, _) => allowed(a)
-    case GreaterThanOrEqual(a, _) => allowed(a)
-    case LessThan(a, _) => allowed(a)
-    case LessThanOrEqual(a, _) => allowed(a)
-    case In(a, _) => allowed(a)
-    case IsNotNull(a) => allowed(a)
-    case IsNull(a) => allowed(a)
-    case And(l, r) => accepts(l, allowed) && accepts(r, allowed)
-    case Or(l, r) => accepts(l, allowed) && accepts(r, allowed)
-    case Not(c) => accepts(c, allowed)
-    case StringStartsWith(a, _) => allowed(a)
+  private[sources] def accepts(f: Filter): Boolean = f match {
+    case EqualTo(a, _) => granuleCols(a)
+    case GreaterThan(a, _) => granuleCols(a)
+    case GreaterThanOrEqual(a, _) => granuleCols(a)
+    case LessThan(a, _) => granuleCols(a)
+    case LessThanOrEqual(a, _) => granuleCols(a)
+    case In(a, _) => granuleCols(a)
+    case IsNotNull(a) => granuleCols(a)
+    case IsNull(a) => granuleCols(a)
+    case And(l, r) => accepts(l) && accepts(r)
+    case Or(l, r) => accepts(l) && accepts(r)
+    case Not(c) => accepts(c)
+    case StringStartsWith(a, _) => granuleCols(a)
     case _ => false
   }
 
@@ -147,15 +146,16 @@ private[sources] class GranuleScanBuilder(options: CaseInsensitiveStringMap)
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Accept every filter [[GranuleSource.holds]] can evaluate exactly
-    * (any schema column). All filters are ALSO returned as residual —
+  /** Accept the granule-grade filters (only filename-derived columns,
+    * evaluated exactly by [[GranuleSource.holds]]): they prune whole
+    * granules at planning. All filters are ALSO returned as residual —
     * Spark re-applies them post-scan, the same safety contract the
-    * built-in parquet source uses — so the source-side skip is purely an
-    * IO/decode saving, never a correctness dependency.
+    * built-in parquet source uses — so pixel-level predicates are Spark's
+    * alone and the pruning is purely an IO/decode saving, never a
+    * correctness dependency.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val allCols = GranuleSource.schema.fieldNames.toSet
-    pushed = filters.filter(GranuleSource.accepts(_, allCols))
+    pushed = filters.filter(GranuleSource.accepts)
     filters
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -180,24 +180,21 @@ private[sources] class GranuleScan(
       s"pruned=${required.fieldNames.mkString(",")}, " +
       s"PushedFilters: [${pushed.mkString(", ")}]"
 
-  /** Granule-grade pushed filters (references only filename-derived
-    * columns) prune WHOLE partitions here — the 100 TB lever: a
-    * day/hour-bounded query never schedules tasks for out-of-window
-    * granules, mirroring the reference's file-list date selection.
+  /** The pushed (granule-grade) filters prune WHOLE partitions here —
+    * the 100 TB lever: a day/hour-bounded query never schedules tasks for
+    * out-of-window granules, mirroring the reference's file-list date
+    * selection.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val granuleGrade =
-      pushed.filter(GranuleSource.accepts(_, GranuleSource.granuleCols))
+  override def planInputPartitions(): Array[InputPartition] =
     granules
       .filter { g =>
         val meta = GranuleMeta(g)
-        granuleGrade.forall(GranuleSource.holds(_, meta.get))
+        pushed.forall(GranuleSource.holds(_, meta.get))
       }
       .map(g => GranulePartition(g, rows, cols): InputPartition)
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GranuleReaderFactory(required, pushed)
+    new GranuleReaderFactory(required)
 }
 
 /** Filename-derived granule metadata (reference `aggregate_functions.py:
@@ -217,32 +214,22 @@ private[sources] case class GranuleMeta(granuleId: String) {
 private[sources] case class GranulePartition(granuleId: String, rows: Int, cols: Int)
     extends InputPartition
 
-private[sources] class GranuleReaderFactory(required: StructType, pushed: Array[Filter])
+private[sources] class GranuleReaderFactory(required: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GranulePixelReader(partition.asInstanceOf[GranulePartition], required, pushed)
+    new GranulePixelReader(partition.asInstanceOf[GranulePartition], required)
 }
 
 /** Streams one granule's pixels as InternalRows, building ONLY the pruned
   * columns. Deterministic synthesis keyed by (granule_id, pixel index).
   */
-private[sources] class GranulePixelReader(
-    p: GranulePartition,
-    required: StructType,
-    pushed: Array[Filter] = Array.empty)
+private[sources] class GranulePixelReader(p: GranulePartition, required: StructType)
     extends PartitionReader[InternalRow] {
 
   private val n = p.rows * p.cols
   private var i = -1
 
-  // row-grade pushed filters: skip non-matching pixels before building
-  // rows (stand-in for the real reader's region-mask-before-decode,
-  // reference `aggregate_functions.py:297-306`)
-  private val rowFilters: Array[Filter] =
-    pushed.filter(GranuleSource.accepts(_, GranuleSource.schema.fieldNames.toSet))
-
-  private val doy = p.granuleId.slice(5, 8).toIntOption.getOrElse(0)
-  private val hour = p.granuleId.slice(9, 11).toIntOption.getOrElse(0)
+  private val meta = GranuleMeta(p.granuleId)
   private val gidUtf8 = UTF8String.fromString(p.granuleId)
   private val seed = p.granuleId.hashCode.toLong & 0xffffffffL
 
@@ -258,8 +245,8 @@ private[sources] class GranulePixelReader(
 
   private def valueAt(field: String): Any = field match {
     case "granule_id" => gidUtf8
-    case "day_of_year" => doy
-    case "hour" => hour
+    case "day_of_year" => meta.dayOfYear
+    case "hour" => meta.hour
     case "row" => i / p.cols
     case "col" => i % p.cols
     case "lat" => unit(i * 4L) * 180.0 - 90.0
@@ -279,9 +266,6 @@ private[sources] class GranulePixelReader(
 
   override def next(): Boolean = {
     i += 1
-    if (rowFilters.nonEmpty)
-      while (i < n && !rowFilters.forall(GranuleSource.holds(_, valueAt)))
-        i += 1
     i < n
   }
 

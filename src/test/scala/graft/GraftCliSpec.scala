@@ -90,9 +90,21 @@ class GraftCliSpec extends SparkSpec {
       .data.asInstanceOf[Array[Long]]
     assert(counts.sum > 0)
 
-    // reference STEP 6: an existing output aborts before compute
-    val ex = intercept[IllegalStateException] { GraftCli.run(spark, cli) }
-    assert(ex.getMessage.contains("already exists"))
+    // reference STEP 6: an existing output aborts before compute — not
+    // even the input's schema-inference job starts
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val ex = intercept[IllegalStateException] { GraftCli.run(spark, cli) }
+      assert(ex.getMessage.contains("already exists"))
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0)
   }
 
   test("--format granule drives the DSv2 source argv-to-.h5, pruned and byte-stable") {

@@ -2,7 +2,6 @@ package graft.io
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SaveMode
 
 import graft.SparkSpec
 import graft.model.{GridSpec, JobConfig, Region}
@@ -100,9 +99,6 @@ class GridPlotSpec extends SparkSpec {
       GridPlot.displayOutput(grid, cfg, "cf_Mean", path)
     }
     assert(e.getMessage.contains("already exists"))
-    // Overwrite mode is not a sink semantic here; Ignore returns empty
-    assert(GridPlot.displayOutput(grid, cfg, "cf_Mean", path,
-      mode = SaveMode.Ignore).isEmpty)
   }
 
   test("golden netCDF CloudFraction grid renders: full coverage, many levels") {

@@ -3,7 +3,6 @@ package graft.io
 import java.nio.file.{Files, Path}
 import java.time.LocalDate
 
-import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -103,28 +102,16 @@ class IoSpec extends SparkSpec {
     assert(out.toSeq == Seq(350L, -9999L, -9999L, -9999L)) // 2.5/0.01+100
   }
 
-  test("packGrid forces cloud-fraction packing and strips _1km") {
-    val grid = Seq((1L, 0.5, 3.0, 7L)).toDF(
-      "cell", "cloud_fraction_Mean", "Cloud_Top_Pressure_1km_Mean", "GRID_Counts")
-    val out = L3Writer.packGrid(grid,
-      Map("Cloud_Top_Pressure_1km_Mean" -> L3Writer.Packing(0.1, 0.0, -1)))
-    assert(out.columns.toSeq ==
-      Seq("cell", "cloud_fraction_Mean", "Cloud_Top_Pressure_Mean", "GRID_Counts"))
-    val r = out.collect().head
-    assert(r.getLong(1) == 5000L) // 0.5 / 1e-4
-    assert(r.getLong(2) == 30L) //   3.0 / 0.1
-    assert(r.getLong(3) == 7L) //    counts pass through
-  }
-
   test("write refuses to overwrite an existing path (output-exists guard)") {
-    val cfg = JobConfig(grid = GridSpec(Region(0, 10, 0, 10), 5.0, 5.0))
+    val cfg = JobConfig(grid = GridSpec(Region(0, 10, 0, 10), 5.0, 5.0),
+      stats = StatSwitches(min = false, max = false, count = false, std = false),
+      vars = Seq(VarSpec("v")))
     val grid = Seq((0L, 1.0)).toDF("cell", "v_Mean")
     val out = Files.createTempDirectory("l3").resolve("out").toString
     L3Writer.write(grid, cfg, out)
     val files = spark.read.parquet(out)
     assert(files.columns.contains("lat_idx") && files.count() == 1)
     intercept[Exception] { L3Writer.write(grid, cfg, out) }
-    L3Writer.write(grid, cfg, out, mode = SaveMode.Overwrite) // explicit opt-in
   }
 
   test("decodePacked applies fill->NULL then (raw-offset)*scale, attrs round-trip") {
@@ -147,32 +134,44 @@ class IoSpec extends SparkSpec {
     assert(lons.length == 360 && lons.head == -179.5 && lons.last == 179.5)
   }
 
-  test("writeNetcdf emits the reference-shaped binary L3 file (netCDF-3 classic)") {
-    import graft.io.NetCDF3._
-    // 6 x 12 grid (30-degree cells) with a scalar stat, counts, a 3-bin
-    // histogram and a 2x3 joint histogram; cells 0=(0,0) and 13=(1,1)
+  /** The binary sinks' fixture: a 6 x 12 grid (30-degree cells) holding
+    * the layout of `cfg` — a mean, counts, a 3-bin histogram and a 3x3
+    * joint histogram of one `_1km` variable, then the cloud fraction and
+    * GRID_Counts; cells 0=(0,0) and 13=(1,1) populated.
+    */
+  private object L3Fixture {
     val cfg = JobConfig(
       grid = GridSpec(Region(-90, 90, -180, 180), 30.0, 30.0),
-      vars = Seq(VarSpec("Cloud_Top_Pressure_1km",
-        binEdges = Seq(0.0, 300.0, 700.0, 1100.0),
-        joint = Some(JointSpec("Cloud_Top_Temperature_1km", Seq(180.0, 240.0, 280.0, 310.0))))))
-    val grid = Seq(
-      (0L, 812.5, 10L, 0.25, Seq(1L, 2L, 7L),
-        Seq(Seq(1L, 0L, 2L), Seq(0L, 3L, 4L), Seq(5L, 0L, 0L))),
-      (13L, 401.0, 4L, 0.5, Seq(0L, 4L, 0L),
-        Seq(Seq(0L, 1L, 0L), Seq(2L, 0L, 1L), Seq(0L, 0L, 6L))))
+      stats = StatSwitches(min = false, max = false, std = false, hist = true, jhist = true),
+      vars = Seq(
+        VarSpec("Cloud_Top_Pressure_1km",
+          binEdges = Seq(0.0, 300.0, 700.0, 1100.0),
+          joint = Some(JointSpec("Cloud_Top_Temperature_1km", Seq(180.0, 240.0, 280.0, 310.0)))),
+        VarSpec(graft.engine.GridAggregation.CloudFractionVar)))
+    def grid = Seq(
+      (0L, 812.5, 10L, Seq(1L, 2L, 7L),
+        Seq(Seq(1L, 0L, 2L), Seq(0L, 3L, 4L), Seq(5L, 0L, 0L)),
+        0.125, 0.5, 0.25, 8L, 3L),
+      (13L, 401.0, 4L, Seq(0L, 4L, 0L),
+        Seq(Seq(0L, 1L, 0L), Seq(2L, 0L, 1L), Seq(0L, 0L, 6L)),
+        0.5, 0.5, 0.5, 2L, 7L))
       .toDF("cell", "Cloud_Top_Pressure_1km_Mean",
-        "Cloud_Top_Pressure_1km_Pixel_Counts", "cloud_fraction_Mean",
+        "Cloud_Top_Pressure_1km_Pixel_Counts",
         "Cloud_Top_Pressure_1km_Histogram_Counts",
-        "Cloud_Top_Pressure_1km_Jhisto_vs_Cloud_Top_Temperature_1km")
-    val ctpAttrs = PixelSource.VarAttrs(
+        "Cloud_Top_Pressure_1km_Jhisto_vs_Cloud_Top_Temperature_1km",
+        "cloud_fraction_Minimum", "cloud_fraction_Maximum", "cloud_fraction_Mean",
+        "cloud_fraction_Pixel_Counts", "GRID_Counts")
+    val packings = Map("Cloud_Top_Pressure_1km_Mean" -> L3Writer.Packing(0.1, -15000.0, -32768L))
+    val varAttrs = Map("Cloud_Top_Pressure_1km" -> PixelSource.VarAttrs(
       units = "hPa", longName = "Cloud Top Pressure",
-      fillValue = -32768, scaleFactor = 0.1, addOffset = -15000.0)
+      fillValue = -32768, scaleFactor = 0.1, addOffset = -15000.0))
+  }
+
+  test("writeNetcdf emits the reference-shaped binary L3 file (netCDF-3 classic)") {
+    import graft.io.NetCDF3._
+    import L3Fixture._
     val out = Files.createTempDirectory("nc").resolve("l3.nc").toString
-    L3Writer.writeNetcdf(grid, cfg, out,
-      packings = Map("Cloud_Top_Pressure_1km_Mean" ->
-        L3Writer.Packing(0.1, -15000.0, -32768L)),
-      varAttrs = Map("Cloud_Top_Pressure_1km" -> ctpAttrs))
+    L3Writer.writeNetcdf(grid, cfg, out, packings, varAttrs)
 
     val nc = NetCDF3.read(out)
     // dims: the two axes plus the histogram bin dims, _1km stripped
@@ -212,8 +211,15 @@ class IoSpec extends SparkSpec {
     // forced cloud-fraction packing (reference :741-744)
     val cf = v("cloud_fraction_Mean")
     assert(cf.data.asInstanceOf[Array[Int]](0) == 2500)
+    assert(v("cloud_fraction_Maximum").data.asInstanceOf[Array[Int]](0) == 5000)
     assert(cf.atts.contains(Att("scale_factor", DoubleAtt(Seq(1e-4)))))
     assert(cf.atts.contains(Att("_FillValue", IntAtt(Seq(-9999)))))
+
+    // GRID_Counts and the cloud-fraction counts pass through unpacked
+    val gc = v("GRID_Counts").data.asInstanceOf[Array[Int]]
+    assert(gc(0) == 3 && gc(13) == 7 && gc.sum == 10)
+    val cfc = v("cloud_fraction_Pixel_Counts").data.asInstanceOf[Array[Int]]
+    assert(cfc(0) == 8 && cfc(13) == 2 && cfc.sum == 10)
 
     // histogram: [lat, lon, bin] dense layout, zero elsewhere
     val h = v("Cloud_Top_Pressure_Histogram_Counts")
@@ -242,30 +248,9 @@ class IoSpec extends SparkSpec {
 
   test("writeH5 emits the reference's literal .h5 container (HDF5 classic)") {
     import graft.io.HDF5._
-    // same fixture as the netCDF test: 6 x 12 grid, scalar stat, counts,
-    // 3-bin histogram, 3x3 joint histogram, cells 0 and 13 populated
-    val cfg = JobConfig(
-      grid = GridSpec(Region(-90, 90, -180, 180), 30.0, 30.0),
-      vars = Seq(VarSpec("Cloud_Top_Pressure_1km",
-        binEdges = Seq(0.0, 300.0, 700.0, 1100.0),
-        joint = Some(JointSpec("Cloud_Top_Temperature_1km", Seq(180.0, 240.0, 280.0, 310.0))))))
-    val grid = Seq(
-      (0L, 812.5, 10L, 0.25, Seq(1L, 2L, 7L),
-        Seq(Seq(1L, 0L, 2L), Seq(0L, 3L, 4L), Seq(5L, 0L, 0L))),
-      (13L, 401.0, 4L, 0.5, Seq(0L, 4L, 0L),
-        Seq(Seq(0L, 1L, 0L), Seq(2L, 0L, 1L), Seq(0L, 0L, 6L))))
-      .toDF("cell", "Cloud_Top_Pressure_1km_Mean",
-        "Cloud_Top_Pressure_1km_Pixel_Counts", "cloud_fraction_Mean",
-        "Cloud_Top_Pressure_1km_Histogram_Counts",
-        "Cloud_Top_Pressure_1km_Jhisto_vs_Cloud_Top_Temperature_1km")
-    val ctpAttrs = PixelSource.VarAttrs(
-      units = "hPa", longName = "Cloud Top Pressure",
-      fillValue = -32768, scaleFactor = 0.1, addOffset = -15000.0)
+    import L3Fixture._
     val out = Files.createTempDirectory("h5").resolve("l3.h5").toString
-    L3Writer.writeH5(grid, cfg, out,
-      packings = Map("Cloud_Top_Pressure_1km_Mean" ->
-        L3Writer.Packing(0.1, -15000.0, -32768L)),
-      varAttrs = Map("Cloud_Top_Pressure_1km" -> ctpAttrs))
+    L3Writer.writeH5(grid, cfg, out, packings, varAttrs)
 
     val h5 = HDF5.read(out)
     def d(name: String): Dataset = h5.datasets.find(_.name == name).getOrElse(
@@ -304,8 +289,17 @@ class IoSpec extends SparkSpec {
     val cfd = cf.data.asInstanceOf[Array[Double]]
     assert(cfd(0) == 0.25 / 1e-4 && cfd(13) == 0.5 / 1e-4)
     assert(cfd(1) == -9999.0 && cfd.count(_ != -9999.0) == 2)
+    assert(d("cloud_fraction_Maximum").data.asInstanceOf[Array[Double]](0) == 0.5 / 1e-4)
     assert(cf.atts.contains(Att("scale_factor", DoubleAtt(1e-4))))
     assert(cf.atts.contains(Att("_FillValue", DoubleAtt(-9999.0))))
+
+    // GRID_Counts and the cloud-fraction counts: int64, passed through
+    val gc = d("GRID_Counts")
+    assert(gc.dtype == H5Int64 && gc.atts.contains(Att("units", StrAtt("none"))))
+    val gcd = gc.data.asInstanceOf[Array[Long]]
+    assert(gcd(0) == 3L && gcd(13) == 7L && gcd.sum == 10L)
+    val cfc = d("cloud_fraction_Pixel_Counts")
+    assert(cfc.dtype == H5Int64 && cfc.data.asInstanceOf[Array[Long]].sum == 10L)
 
     // histograms: native N-D int64 datasets (the reference's reshape)
     val h = d("Cloud_Top_Pressure_Histogram_Counts")
@@ -329,10 +323,7 @@ class IoSpec extends SparkSpec {
     // the .nc sink densifies the same grid: every dataset but the float64
     // cloud fraction holds the same values in the same layout there
     val ncPath = Files.createTempDirectory("h5nc").resolve("l3.nc").toString
-    L3Writer.writeNetcdf(grid, cfg, ncPath,
-      packings = Map("Cloud_Top_Pressure_1km_Mean" ->
-        L3Writer.Packing(0.1, -15000.0, -32768L)),
-      varAttrs = Map("Cloud_Top_Pressure_1km" -> ctpAttrs))
+    L3Writer.writeNetcdf(grid, cfg, ncPath, packings, varAttrs)
     val nc = NetCDF3.read(ncPath)
     val compared = h5.datasets.filterNot(_.name.startsWith("cloud_fraction"))
     assert(compared.map(_.name).sorted ==
@@ -358,5 +349,73 @@ class IoSpec extends SparkSpec {
 
     // output-exists guard
     intercept[Exception] { L3Writer.writeH5(grid, cfg, out) }
+  }
+
+  /** Two variables where one name prefixes the other, histograms on, the
+    * shorter listed first — the real MODIS variable-list shape.
+    */
+  private object PrefixFixture {
+    val cfg = JobConfig(
+      grid = GridSpec(Region(-90, 90, -180, 180), 30.0, 30.0),
+      stats = StatSwitches(hist = true),
+      vars = Seq(
+        VarSpec("Cloud_Top_Pressure", binEdges = Seq(0.0, 300.0, 700.0, 1100.0)),
+        VarSpec("Cloud_Top_Pressure_Day", binEdges = Seq(0.0, 10.0, 20.0))))
+    // cell 42 = (lat 3, lon 6) gets two pixels, cell 21 = (1, 9) one
+    def grid = graft.engine.GridAggregation.aggregate(Seq(
+      ("g1", 10.0, 10.0, 100.0, 5.0),
+      ("g1", 10.0, 10.0, 600.0, 15.0),
+      ("g1", -50.0, 100.0, 900.0, 5.0))
+      .toDF("granule_id", "lat", "lon", "Cloud_Top_Pressure", "Cloud_Top_Pressure_Day"), cfg)
+    private def attrs(units: String) = PixelSource.VarAttrs(
+      units = units, longName = units, fillValue = -9999, scaleFactor = 1.0, addOffset = 0.0)
+    val varAttrs = Map(
+      "Cloud_Top_Pressure" -> attrs("hPa"), "Cloud_Top_Pressure_Day" -> attrs("Pa_day"))
+  }
+
+  test("writeH5: a variable name that prefixes another keeps its own bins and units") {
+    import graft.io.HDF5._
+    import PrefixFixture._
+    val out = Files.createTempDirectory("h5pfx").resolve("l3.h5").toString
+    L3Writer.writeH5(grid, cfg, out, varAttrs = varAttrs)
+    val h5 = HDF5.read(out)
+    def d(name: String): Dataset = h5.datasets.find(_.name == name).getOrElse(
+      fail(s"dataset $name missing: ${h5.datasets.map(_.name)}"))
+
+    val h = d("Cloud_Top_Pressure_Histogram_Counts")
+    assert(h.dims == Seq(6, 12, 3))
+    val hd = h.data.asInstanceOf[Array[Long]]
+    assert(hd.slice(42 * 3, 43 * 3).toSeq == Seq(1L, 1L, 0L))
+    assert(hd.slice(21 * 3, 22 * 3).toSeq == Seq(0L, 0L, 1L))
+    val hDay = d("Cloud_Top_Pressure_Day_Histogram_Counts")
+    assert(hDay.dims == Seq(6, 12, 2))
+    val dd = hDay.data.asInstanceOf[Array[Long]]
+    assert(dd.slice(42 * 2, 43 * 2).toSeq == Seq(1L, 1L))
+    assert(dd.slice(21 * 2, 22 * 2).toSeq == Seq(1L, 0L))
+
+    for (stat <- Seq("Minimum", "Maximum", "Mean", "Pixel_Counts", "Standard_Deviation",
+        "Histogram_Counts")) {
+      assert(d(s"Cloud_Top_Pressure_$stat").atts.contains(Att("units", StrAtt("hPa"))), stat)
+      assert(d(s"Cloud_Top_Pressure_Day_$stat").atts.contains(Att("units", StrAtt("Pa_day"))),
+        stat)
+    }
+    assert(d("Cloud_Top_Pressure_Day_Mean").data.asInstanceOf[Array[Double]](42) == 10.0)
+  }
+
+  test("the sinks reject a grid whose columns are not the job's L3 layout") {
+    import PrefixFixture._
+    assert(grid.columns.toSeq ==
+      "cell" +: graft.engine.GridAggregation.layout(cfg).map(_.name))
+    val dir = Files.createTempDirectory("l3bad")
+    val extra = intercept[IllegalArgumentException] {
+      L3Writer.writeH5(grid.withColumn("Cloud_Top_Pressure_Median", lit(1.0)), cfg,
+        dir.resolve("extra.h5").toString)
+    }
+    assert(extra.getMessage.contains("Cloud_Top_Pressure_Median"))
+    val missing = intercept[IllegalArgumentException] {
+      L3Writer.writeNetcdf(grid.drop("Cloud_Top_Pressure_Day_Mean"), cfg,
+        dir.resolve("missing.nc").toString)
+    }
+    assert(missing.getMessage.contains("Cloud_Top_Pressure_Day_Mean"))
   }
 }

@@ -83,6 +83,21 @@ class IndexOpsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/segments").count() == 4)
   }
 
+  test("coveredSegments survives a crash between the first marker and the first append") {
+    // recordSegment wrote its first marker, then died before the parquet
+    // append: segments/ holds only the ledger dir (a marker named like a
+    // parquet file included), and no parquet the reader could infer from
+    val idx = tmp("idxcrash_")
+    val ledger = java.nio.file.Paths.get(s"$idx/segments/.ledger/postings")
+    java.nio.file.Files.createDirectories(ledger)
+    java.nio.file.Files.createFile(ledger.resolve("x.parquet"))
+    assert(IndexOps.coveredSegments(spark, idx, "bloom").isEmpty)
+    assert(IndexOps.coveredSegments(spark, idx, "postings") == Set("x.parquet"))
+    // the next record of another kind goes through as on a fresh store
+    IndexOps.recordSegment(spark, idx, "bloom", "b1")
+    assert(IndexOps.coveredSegments(spark, idx, "bloom") == Set("b1"))
+  }
+
   test("bloom refresh merge equals from-scratch build (OR-monoid)") {
     val idx = tmp("idxb_")
     val part = col("lang")

@@ -5,7 +5,7 @@ import java.time.LocalDate
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
-import graft.agg.{Binning, Histogram1DAgg}
+import graft.agg.{Binning, HistogramAgg}
 import graft.io.GranuleCatalog
 import graft.ops.SimilarityOps
 
@@ -39,7 +39,7 @@ object GraftProps extends Properties("graft") {
     Binning.binIndexScala(Double.NaN, Array(0.0, 1.0, 2.0)) == -1)
 
   private def hist(edges: Array[Double], vs: Seq[Double]): Array[Long] = {
-    val agg = Histogram1DAgg(null, edges.toSeq)
+    val agg = HistogramAgg(Seq(null), Seq(edges.toSeq))
     val buf = agg.createAggregationBuffer()
     vs.foreach { v =>
       val i = Binning.binIndexScala(v, edges)
@@ -52,7 +52,7 @@ object GraftProps extends Properties("graft") {
 
   property("histogram merge == histogram of concatenation (any split)") =
     forAll(edgesGen, valsGen, Gen.chooseNum(0, 100)) { (edges, vs, cut) =>
-      val agg = Histogram1DAgg(null, edges.toSeq)
+      val agg = HistogramAgg(Seq(null), Seq(edges.toSeq))
       val k = if (vs.isEmpty) 0 else cut % (vs.length + 1)
       val (a, b) = vs.splitAt(k)
       val merged = agg.merge(hist(edges, a), hist(edges, b))
@@ -68,7 +68,7 @@ object GraftProps extends Properties("graft") {
 
   property("histogram serialize/deserialize round-trips") =
     forAll(edgesGen, valsGen) { (edges, vs) =>
-      val agg = Histogram1DAgg(null, edges.toSeq)
+      val agg = HistogramAgg(Seq(null), Seq(edges.toSeq))
       agg.deserialize(agg.serialize(hist(edges, vs))).sameElements(hist(edges, vs))
     }
 
