@@ -148,8 +148,11 @@ object GridPlot {
 
   /** The reference's `displayOutput`: take an aggregated grid frame
     * (cell-keyed, like every sink input), pick one value column, and
-    * write the contourf-style PNG. Each row lands at its `cell`
-    * (= `lat_idx * gridLon + lon_idx`). An existing `path` is an error
+    * write the contourf-style PNG. The frame is collected and densified
+    * through the same binary-row path as the `.h5`/`.nc` sinks
+    * ([[L3Writer.CellRows]]): each row lands at its `cell`
+    * (= `lat_idx * gridLon + lon_idx`), absent cells and NULL values are
+    * NaN. An existing `path` is an error
     * ([[L3Writer.requireAbsent]], the guard the reference applies to all
     * its sinks, S5).
     *
@@ -167,16 +170,11 @@ object GridPlot {
     L3Writer.requireAbsent(path)
     val nLat = cfg.grid.gridLat
     val nLon = cfg.grid.gridLon
-    val cells = Array.fill(nLat, nLon)(Double.NaN)
-    // driver-small by construction: ≤ nLat×nLon rows (the sink bound)
-    grid.select(col("cell"), col(valueCol).cast("double"))
-      .collect()
-      .foreach { row =>
-        val cell = row.getAs[Number](0).longValue()
-        require(cell >= 0 && cell < nLat.toLong * nLon, s"grid cell $cell outside ${nLat}x$nLon")
-        cells((cell / nLon).toInt)((cell % nLon).toInt) =
-          if (row.isNullAt(1)) Double.NaN else row.getDouble(1)
-      }
+    val rows = new L3Writer.CellRows(grid.select(col("cell"), col(valueCol).cast("double")),
+      nLat, nLon)
+    val value = rows.doubles(1, Double.NaN)
+    rows.fill()
+    val cells = Array.tabulate(nLat)(i => value.out.slice(i * nLon, (i + 1) * nLon))
     val img = renderGrid(cells, vmin, vmax, levels, cellPx)
     java.nio.file.Files.write(java.nio.file.Paths.get(path), pngBytes(img))
     cells

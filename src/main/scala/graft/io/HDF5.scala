@@ -403,9 +403,10 @@ object HDF5 {
     // raw data
     ds.indices.foreach { i =>
       require(bb.position() == dataAddrs(i).toInt, s"data layout bug at $i")
+      // bulk copy through a little-endian view (the views share bb's order)
       ds(i).data match {
-        case a: Array[Long] => a.foreach(bb.putLong)
-        case a: Array[Double] => a.foreach(bb.putDouble)
+        case a: Array[Long] => bb.asLongBuffer().put(a)
+        case a: Array[Double] => bb.asDoubleBuffer().put(a)
       }
       bb.position((dataAddrs(i) + dataSizes(i)).toInt)
     }

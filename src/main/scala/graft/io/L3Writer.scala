@@ -1,7 +1,10 @@
 package graft.io
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 import graft.agg.StatsPlan._
@@ -22,9 +25,13 @@ import graft.model.JobConfig
   * The reference's own container is the `.h5` ([[writeH5]]); [[writeNetcdf]]
   * writes the same grid as netCDF-3 classic and [[write]] as one Parquet
   * file of grid rows (`cell`, every layout column, then `lat_idx/lon_idx/
-  * lat_center/lon_center`). The two binary sinks collect the driver-small
-  * grid ONCE and share one densifier ([[densify]]); each keeps only its
-  * own encoder.
+  * lat_center/lon_center`), its final aggregate still spread over the
+  * shuffle partitions. The two binary sinks collect the driver-small grid
+  * ONCE and share one densifier ([[densify]]); each keeps only its own
+  * encoder. The collect keeps Spark's binary rows ([[CellRows]]): packing
+  * runs in the projection on the executors, and the driver copies each
+  * value into a primitive `Array[Long]`/`Array[Double]` with no external
+  * `Row` and no boxing — the same path [[GridPlot.displayOutput]] reads.
   *
   * Reference packing/naming rules reproduced:
   *   - int-packing `round(value/scale + offset)` with NaN/Inf/NULL -> fill
@@ -46,9 +53,16 @@ object L3Writer {
     * and NULL to `fill`.
     */
   def pack(v: Column, p: Packing): Column =
-    when(v.isNull || isnan(v) || v === Double.PositiveInfinity ||
-      v === Double.NegativeInfinity, lit(p.fill))
-      .otherwise(round(v / p.scale + p.offset).cast("long"))
+    when(nonFinite(v), lit(p.fill)).otherwise(round(v / p.scale + p.offset).cast("long"))
+
+  /** A cloud-fraction statistic as the reference's `.h5` holds it:
+    * `v/scale + offset` unrounded, non-finite and NULL to `fill`.
+    */
+  private def packUnrounded(v: Column, p: Packing): Column =
+    when(nonFinite(v), lit(p.fill.toDouble)).otherwise(v / p.scale + p.offset)
+
+  private def nonFinite(v: Column): Column =
+    v.isNull || isnan(v) || v === Double.PositiveInfinity || v === Double.NegativeInfinity
 
   /** Output name for a statistic column: strip `_1km`. */
   def outputName(col: String): String = col.replace("_1km", "")
@@ -98,8 +112,10 @@ object L3Writer {
     val cell = col("cell")
     grid.select((cell +: layoutOf(grid, cfg).map(packed(_, packings))) ++
       GridExprs.gridIndexCols(cell, cfg.grid): _*)
-      // single file: the grid is <= grid_lat*grid_lon rows (tiny by design)
-      .coalesce(1)
+      // single file: the grid is <= grid_lat*grid_lon rows (tiny by design);
+      // a shuffle to one partition, not coalesce(1), which would pull the
+      // final aggregate into one task
+      .repartition(1)
       .write.parquet(path)
   }
 
@@ -178,102 +194,190 @@ object L3Writer {
       attrs: Map[String, Map[String, String]],
       vars: Seq[DenseVar])
 
-  /** Collect the grid ONCE and densify every layout column, in layout
-    * order, under its output name. The projection holds `cell`, the packed
-    * columns and the raw value of each cloud-fraction statistic; each row
-    * lands at its `cell` (= `lat_idx * gridLon + lon_idx`).
+  /** Writes column `i` of each binary row into a dense row-major
+    * `[lat, lon(, bins...)]` grid `out`, at the row's cell; NULL keeps
+    * the init.
+    */
+  private[io] sealed abstract class Filler {
+    def put(r: InternalRow, cell: Int): Unit
+  }
+
+  /** A LongType or IntegerType column as int64. */
+  private[io] final class LongFiller(i: Int, dt: DataType, val out: Array[Long]) extends Filler {
+    private val wide = dt == LongType
+    def put(r: InternalRow, cell: Int): Unit =
+      if (!r.isNullAt(i)) out(cell) = if (wide) r.getLong(i) else r.getInt(i).toLong
+  }
+
+  /** A DoubleType, FloatType or DecimalType column as float64. A decimal
+    * converts through `java.math.BigDecimal.doubleValue`, the correctly
+    * rounded value an external `Row` gives (`Decimal.toDouble` divides a
+    * long by 10^scale and can differ in the last ulp).
+    */
+  private[io] final class DoubleFiller(i: Int, dt: DataType, val out: Array[Double])
+      extends Filler {
+    def put(r: InternalRow, cell: Int): Unit =
+      if (!r.isNullAt(i)) out(cell) = dt match {
+        case DoubleType => r.getDouble(i)
+        case FloatType => r.getFloat(i).toDouble
+        case d: DecimalType => r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.doubleValue
+      }
+  }
+
+  /** A 1-D or 2-D histogram column of LongType or IntegerType counts as
+    * int64 `[bins...]` per cell, zero where no pixel fell; a joint
+    * histogram is the row-major `[x][y]` nest. Every row's shape must
+    * equal `bins`.
+    */
+  private[io] final class HistogramFiller(
+      c: String, i: Int, bins: Seq[Int], dt: DataType, val out: Array[Long]) extends Filler {
+    private val wide = dt match {
+      case ArrayType(ArrayType(t, _), _) => t == LongType
+      case ArrayType(t, _) => t == LongType
+    }
+    private val nx = bins.head
+    private val ny = if (bins.size == 2) bins(1) else 0
+    private val width = bins.product
+    private val want = bins.mkString(" x ")
+    private def copy(a: ArrayData, base: Int): Unit = {
+      var x = 0
+      while (x < a.numElements()) {
+        out(base + x) = if (wide) a.getLong(x) else a.getInt(x).toLong
+        x += 1
+      }
+    }
+    def put(r: InternalRow, cell: Int): Unit = if (!r.isNullAt(i)) {
+      val h = r.getArray(i)
+      def shape: String = (if (ny == 0) Seq(h.numElements()) else Seq(h.numElements(),
+        if (h.numElements() == 0) 0 else h.getArray(0).numElements())).mkString(" x ")
+      require(h.numElements() == nx, s"$c: histogram shape $shape != $want")
+      val base = cell * width
+      if (ny == 0) copy(h, base)
+      else {
+        var x = 0
+        while (x < nx) {
+          val hx = h.getArray(x)
+          require(hx.numElements() == ny, s"$c: histogram shape $shape != $want")
+          copy(hx, base + x * ny)
+          x += 1
+        }
+      }
+    }
+  }
+
+  /** A cell-keyed frame (column 0 = `cell`, LongType or IntegerType)
+    * collected ONCE as Spark's own binary rows, and densified by the
+    * [[Filler]]s it hands out, all in ONE pass over the rows ([[fill]]):
+    * nothing is boxed and no external `Row` is built. Each row lands at
+    * its `cell` (= `lat_idx * gridLon + lon_idx`, checked against the
+    * grid); cells absent from the (possibly sparse) frame keep the init.
     *
-    * Each column's kind decides its dense form: cells absent from the
-    * (possibly sparse) grid frame surface as `_FillValue` for statistics
-    * and 0 for counts/histograms — the reference's init values
-    * (`+inf -> fill` / zeros) after packing. Histograms take their bin
-    * counts from the layout, and every row's shape is checked against them.
-    * An unpacked statistic keeps its Spark type: integral -> int64,
-    * fractional or decimal -> float64.
-    *
-    * The grid is collected to the driver: at most gridLat x gridLon cells
+    * The frame is collected to the driver: at most gridLat x gridLon rows
     * (64,800 at 1 degree) — the same driver-small bound the reference's
     * `h5py` writes rely on.
+    */
+  private[io] final class CellRows(frame: DataFrame, nLat: Int, nLon: Int) {
+    val schema: StructType = frame.schema
+    private val rows: Array[InternalRow] = Bridge.collectInternal(frame)
+    private val size = nLat * nLon
+    private val cells: Array[Int] = {
+      val wide = schema(0).dataType match {
+        case LongType => true
+        case IntegerType => false
+        case other => throw new IllegalArgumentException(s"grid cell column has type $other")
+      }
+      rows.map { r =>
+        require(!r.isNullAt(0), "grid cell is NULL")
+        val cell = if (wide) r.getLong(0) else r.getInt(0).toLong
+        require(cell >= 0 && cell < size.toLong, s"grid cell $cell outside ${nLat}x$nLon")
+        cell.toInt
+      }
+    }
+    private val fillers = scala.collection.mutable.ArrayBuffer.empty[Filler]
+    private def add[F <: Filler](f: F): F = { fillers += f; f }
+
+    def longs(i: Int, init: Long): LongFiller = {
+      val out = new Array[Long](size)
+      if (init != 0L) java.util.Arrays.fill(out, init)
+      add(new LongFiller(i, schema(i).dataType, out))
+    }
+    def doubles(i: Int, init: Double): DoubleFiller = {
+      val out = new Array[Double](size)
+      java.util.Arrays.fill(out, init)
+      add(new DoubleFiller(i, schema(i).dataType, out))
+    }
+    def histogram(c: String, i: Int, bins: Seq[Int]): HistogramFiller =
+      add(new HistogramFiller(c, i, bins, schema(i).dataType, new Array[Long](size * bins.product)))
+
+    /** Run every filler handed out so far, in one pass over the rows. */
+    def fill(): Unit = {
+      val fs = fillers.toArray
+      var k = 0
+      while (k < rows.length) {
+        val r = rows(k)
+        val cell = cells(k)
+        var j = 0
+        while (j < fs.length) { fs(j).put(r, cell); j += 1 }
+        k += 1
+      }
+    }
+  }
+
+  /** Collect the grid ONCE and densify every layout column, in layout
+    * order, under its output name. The projection holds `cell`, the packed
+    * columns and the unrounded packing of each cloud-fraction statistic;
+    * it is collected as binary rows and read with primitive getters, one
+    * [[Filler]] per dense array, in one pass ([[CellRows]]).
+    *
+    * Each column's kind decides its dense form: cells absent from the
+    * grid frame surface as `_FillValue` for statistics and 0 for
+    * counts/histograms — the reference's init values (`+inf -> fill` /
+    * zeros) after packing. Histograms take their bin counts from the
+    * layout, and every row's shape is checked against them. An unpacked
+    * statistic keeps its Spark type: integral -> int64, fractional or
+    * decimal -> float64.
     */
   private[io] def densify(
       grid: DataFrame,
       cfg: JobConfig,
       packings: Map[String, Packing],
       varAttrs: Map[String, PixelSource.VarAttrs]): DenseL3 = {
-    val nLat = cfg.grid.gridLat
-    val nLon = cfg.grid.gridLon
     val layout = layoutOf(grid, cfg)
     val projection = grid.select((col("cell") +: layout.map(packed(_, packings))) ++
-      layout.filter(_.kind == CloudFraction).map(c => col(c.name).as(s"__raw_${c.name}")): _*)
-    val rows = projection.collect()
-    val schema = projection.schema
+      layout.filter(_.kind == CloudFraction).map(c =>
+        packUnrounded(col(c.name), packingOf(c, packings).get).as(s"__unrounded_${c.name}")): _*)
+    val rows = new CellRows(projection, cfg.grid.gridLat, cfg.grid.gridLon)
     val attrs = cfAttrs(layout, packings, varAttrs)
 
-    val cells = rows.map { r =>
-      require(!r.isNullAt(0), "grid cell is NULL")
-      val cell = r.getAs[Number](0).longValue()
-      require(cell >= 0 && cell < nLat.toLong * nLon, s"grid cell $cell outside ${nLat}x$nLon")
-      cell.toInt
-    }
-    def dense[A: scala.reflect.ClassTag](i: Int, init: A)(value: Any => A): Array[A] = {
-      val out = Array.fill(nLat * nLon)(init)
-      var k = 0
-      while (k < rows.length) {
-        if (!rows(k).isNullAt(i)) out(cells(k)) = value(rows(k).get(i))
-        k += 1
-      }
-      out
-    }
-    def number(v: Any): Number = v.asInstanceOf[Number]
-    def seq(v: Any): scala.collection.Seq[Any] = v.asInstanceOf[scala.collection.Seq[Any]]
-    // histograms: [lat, lon, bins...] int64, zero where no pixel fell; a
-    // joint (rank-2) histogram is the row-major [x][y] nest
-    def histogram(c: String, i: Int, bins: Seq[Int]): DenseLongs = {
-      def shape(h: scala.collection.Seq[Any]): Seq[Int] =
-        if (bins.size == 1) Seq(h.size) else Seq(h.size, h.headOption.fold(0)(seq(_).size))
-      val width = bins.product
-      val out = new Array[Long](nLat * nLon * width)
-      for (k <- rows.indices if !rows(k).isNullAt(i)) {
-        val h = seq(rows(k).get(i))
-        require(h.size == bins.head && (bins.size == 1 || h.forall(seq(_).size == bins(1))),
-          s"$c: histogram shape ${shape(h).mkString(" x ")} != ${bins.mkString(" x ")}")
-        val flat = if (bins.size == 1) h else h.flatMap(seq)
-        val base = cells(k) * width
-        flat.iterator.zipWithIndex.foreach { case (n, x) => out(base + x) = number(n).longValue() }
-      }
-      DenseLongs(c, bins, out)
-    }
-
+    // the dense arrays are allocated here and filled in place below
     val vars = layout.zipWithIndex.map { case (gc, k) =>
       val c = outputName(gc.name)
       val i = k + 1
       def fill = attrs(c)("_FillValue").toDouble
-      def longs(init: Long) = DenseLongs(c, Nil, dense(i, init)(number(_).longValue()))
-      (gc.kind, schema(i).dataType) match {
+      (gc.kind, rows.schema(i).dataType) match {
         case (CloudFraction, _) =>
           val p = packingOf(gc, packings).get
-          val f = p.fill.toDouble
-          DenseCloudFraction(c, dense(i, p.fill)(number(_).longValue()),
-            dense(schema.fieldIndex(s"__raw_${gc.name}"), f) { x =>
-              val d = number(x).doubleValue()
-              if (d.isNaN || d.isInfinite) f else d / p.scale + p.offset
-            })
-        case (PixelCount | GridCounts, LongType | IntegerType) => longs(0L)
-        case (Statistic, LongType | IntegerType) => longs(fill.toLong)
+          DenseCloudFraction(c, rows.longs(i, p.fill).out,
+            rows.doubles(rows.schema.fieldIndex(s"__unrounded_${gc.name}"), p.fill.toDouble).out)
+        case (PixelCount | GridCounts, LongType | IntegerType) =>
+          DenseLongs(c, Nil, rows.longs(i, 0L).out)
+        case (Statistic, LongType | IntegerType) =>
+          DenseLongs(c, Nil, rows.longs(i, fill.toLong).out)
         // DecimalType: user parquet (DuckDB/Hive writers) routinely types
         // arithmetic results DECIMAL; stats over them surface here too
         case (Statistic, DoubleType | FloatType | _: DecimalType) =>
-          DenseDoubles(c, dense(i, fill)(number(_).doubleValue()))
+          DenseDoubles(c, rows.doubles(i, fill).out)
         case (Histogram(bins @ Seq(_)), ArrayType(LongType | IntegerType, _)) =>
-          histogram(c, i, bins)
+          DenseLongs(c, bins, rows.histogram(c, i, bins).out)
         case (Histogram(bins @ Seq(_, _)), ArrayType(ArrayType(LongType | IntegerType, _), _)) =>
-          histogram(c, i, bins)
+          DenseLongs(c, bins, rows.histogram(c, i, bins).out)
         case (kind, other) =>
           throw new IllegalArgumentException(
             s"$c: unsupported grid column type $other for a $kind column in L3 export")
       }
     }
-    DenseL3(nLat, nLon, attrs, vars)
+    rows.fill()
+    DenseL3(cfg.grid.gridLat, cfg.grid.gridLon, attrs, vars)
   }
 
   /** Full L3 export as a REAL netCDF-3 classic file — the binary,

@@ -198,11 +198,18 @@ private[sources] class GranuleScan(
 }
 
 /** Filename-derived granule metadata (reference `aggregate_functions.py:
-  * 289-291`): `A2008001.0005` -> day_of_year 1, hour 0.
+  * 289-291`): `A2008001.0005` -> day_of_year 1, hour 0. An id whose day
+  * or hour does not parse is an `IllegalArgumentException` naming it —
+  * raised when the scan plans its partitions — never a granule that
+  * silently falls outside every day window.
   */
 private[sources] case class GranuleMeta(granuleId: String) {
-  val dayOfYear: Int = granuleId.slice(5, 8).toIntOption.getOrElse(0)
-  val hour: Int = granuleId.slice(9, 11).toIntOption.getOrElse(0)
+  private def field(what: String, from: Int, until: Int): Int =
+    granuleId.slice(from, until).toIntOption.getOrElse(throw new IllegalArgumentException(
+      s"malformed granule id '$granuleId': no $what at characters $from-${until - 1} " +
+        "(expected A<yyyy><ddd>.<hhmm>, e.g. A2008001.0005)"))
+  val dayOfYear: Int = field("day of year", 5, 8)
+  val hour: Int = field("hour", 9, 11)
   def get(field: String): Any = field match {
     case "granule_id" => granuleId
     case "day_of_year" => dayOfYear

@@ -50,6 +50,20 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df.collect()` without the external-row decode: the executed plan's
+    * own binary rows, run as ONE SQL execution named "collect" — so the
+    * job still shows as one collect to the UI, the SQL listeners and every
+    * `QueryExecutionListener`, exactly as `Dataset.collect` does.
+    */
+  def collectInternal(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan.resetMetrics()
+      qe.executedPlan.executeCollect()
+    }
+  }
+
   /** Idempotently add a planner strategy to the session (the programmatic
     * twin of `SparkSessionExtensions.injectPlannerStrategy`, for sessions
     * built without `spark.sql.extensions`).

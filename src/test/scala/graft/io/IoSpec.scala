@@ -3,7 +3,9 @@ package graft.io
 import java.nio.file.{Files, Path}
 import java.time.LocalDate
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.model._
@@ -112,6 +114,60 @@ class IoSpec extends SparkSpec {
     val files = spark.read.parquet(out)
     assert(files.columns.contains("lat_idx") && files.count() == 1)
     intercept[Exception] { L3Writer.write(grid, cfg, out) }
+  }
+
+  test("write keeps the final aggregate parallel: one task per shuffle partition, same rows") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import scala.jdk.CollectionConverters._
+    val cfg = JobConfig(grid = GridSpec(Region(-90, 90, -180, 180), 10.0, 10.0),
+      stats = StatSwitches(std = false), vars = Seq(VarSpec("v")))
+    // three input partitions, so the scan stage is told apart from the
+    // shuffle's four
+    val pixels = spark.range(0, 6000, 1, 3).select(lit("g1").as("granule_id"),
+      ($"id" % 180 - 89.5).as("lat"), ($"id" * 7 % 360 - 179.5).as("lon"),
+      ($"id" % 97).cast("double").as("v"))
+    val grid = graft.engine.GridAggregation.aggregate(pixels, cfg)
+    val out = Files.createTempDirectory("l3par").resolve("out").toString
+
+    // (stage id, tasks, shuffle records read) of every stage the write ran
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        stages.add((i.stageId, i.numTasks, i.taskMetrics.shuffleReadMetrics.recordsRead))
+      }
+    }
+    // AQE would fold these kilobyte shuffles into one partition (at real
+    // scale it would not); the property under test is the plan's
+    // distribution, so coalescing is off for the write and restored after
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(coalesceKey)
+    org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    spark.conf.set(coalesceKey, "false")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      L3Writer.write(grid, cfg, out)
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      prev.fold(spark.conf.unset(coalesceKey))(spark.conf.set(coalesceKey, _))
+    }
+    // the first stage reading a shuffle reads the aggregate's exchange:
+    // the final aggregate runs there
+    val finalAgg = stages.asScala.filter(_._3 > 0).minBy(_._1)
+    assert(finalAgg._2 == spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      s"stages (id, tasks, shuffle records read): ${stages.asScala.toSeq}")
+
+    // still one file, holding exactly the grid's rows
+    val written = spark.read.parquet(out)
+    assert(written.inputFiles.length == 1)
+    assert(written.columns.toSeq == Seq("cell", "v_Minimum", "v_Maximum", "v_Mean",
+      "v_Pixel_Counts", "lat_idx", "lon_idx", "lat_center", "lon_center"))
+    val expected = grid.select(($"cell" +: grid.columns.tail.toSeq.map(col)) ++
+      graft.expr.GridExprs.gridIndexCols($"cell", cfg.grid): _*)
+    assert(written.collect().toSet == expected.collect().toSet)
+    assert(written.count() == pixels.select(
+      graft.expr.GridExprs.cellId($"lat", $"lon", cfg.grid)).distinct().count())
   }
 
   test("decodePacked applies fill->NULL then (raw-offset)*scale, attrs round-trip") {
@@ -417,5 +473,99 @@ class IoSpec extends SparkSpec {
         dir.resolve("missing.nc").toString)
     }
     assert(missing.getMessage.contains("Cloud_Top_Pressure_Day_Mean"))
+  }
+
+  /** The densifier's type matrix on a 2 x 3 grid (90 x 120 degree cells):
+    * an IntegerType `cell` and counts, unpacked FloatType and DecimalType
+    * statistics (precision <= 18 and > 18), IntegerType 1-D (3 bins) and
+    * 2-D (3 x 2) histograms and a FloatType cloud fraction. Cells 1 and 5
+    * are populated, the other four absent; cell 5's Maximum is NULL.
+    */
+  private object TypeFixture {
+    val cfg = JobConfig(
+      grid = GridSpec(Region(-90, 90, -180, 180), 90.0, 120.0),
+      stats = StatSwitches(std = false, hist = true, jhist = true),
+      vars = Seq(
+        VarSpec("v", binEdges = Seq(0.0, 1.0, 2.0, 3.0),
+          joint = Some(JointSpec("w", Seq(0.0, 1.0, 2.0)))),
+        VarSpec(graft.engine.GridAggregation.CloudFractionVar)))
+    // 6624604306319069.56 at DECIMAL(18, 2): the compact long 662460430631906956
+    // divided by 100 in double is 6624604306319069.0, one ulp off the
+    // correctly rounded 6624604306319070.0 an external Row gives
+    val maxDecimal = BigDecimal("6624604306319069.56")
+    def grid(hist5: Seq[Int] = Seq(0, 3, 0),
+        jhist5: Seq[Seq[Int]] = Seq(Seq(0, 1), Seq(2, 0), Seq(0, 0))) = Seq(
+      (1, 1.5f, maxDecimal, BigDecimal("12345678901234567890.0123456789"), 7,
+        Seq(1, 2, 4), Seq(Seq(1, 0), Seq(0, 2), Seq(3, 1)), 0.25f, 0.75f, 0.5f, 8, 2),
+      (5, -2.25f, null: BigDecimal, BigDecimal("-0.0000000001"), 3,
+        hist5, jhist5, 0.0f, 1.0f, 0.375f, 4, 1))
+      .toDF("cell", "v_Minimum", "v_Maximum", "v_Mean", "v_Pixel_Counts",
+        "v_Histogram_Counts", "v_Jhisto_vs_w", "cloud_fraction_Minimum",
+        "cloud_fraction_Maximum", "cloud_fraction_Mean", "cloud_fraction_Pixel_Counts",
+        "GRID_Counts")
+      .withColumn("v_Maximum", $"v_Maximum".cast(DecimalType(18, 2)))
+      .withColumn("v_Mean", $"v_Mean".cast(DecimalType(30, 10)))
+    val varAttrs = Map("v" -> PixelSource.VarAttrs(
+      units = "K", longName = "v", fillValue = -32767, scaleFactor = 1.0, addOffset = 0.0))
+  }
+
+  test("the .h5 and .nc sinks densify every grid type the layout accepts") {
+    import TypeFixture._
+    val g = grid()
+    assert(g.schema("cell").dataType == IntegerType &&
+      g.schema("v_Minimum").dataType == FloatType &&
+      g.schema("v_Histogram_Counts").dataType == ArrayType(IntegerType, containsNull = false))
+    val dir = Files.createTempDirectory("l3types")
+    val h5Path = dir.resolve("l3.h5").toString
+    val ncPath = dir.resolve("l3.nc").toString
+    L3Writer.writeH5(g, cfg, h5Path, varAttrs = varAttrs)
+    L3Writer.writeNetcdf(g, cfg, ncPath, varAttrs = varAttrs)
+    def values(data: Any): Seq[Double] = data match {
+      case a: Array[Long] => a.toSeq.map(_.toDouble)
+      case a: Array[Int] => a.toSeq.map(_.toDouble)
+      case a: Array[Double] => a.toSeq
+    }
+    val h5 = HDF5.read(h5Path).datasets.map(d => d.name -> values(d.data)).toMap
+    val nc = NetCDF3.read(ncPath).vars.map(v => v.name -> values(v.data)).toMap
+
+    // statistics: absent cells and NULL are the variable's fill
+    val F = -32767.0
+    assert(maxDecimal.toDouble == 6624604306319070.0 &&
+      662460430631906956L.toDouble / 100 == 6624604306319069.0)
+    val both = Map(
+      "v_Minimum" -> Seq(F, 1.5, F, F, F, -2.25),
+      "v_Maximum" -> Seq(F, 6624604306319070.0, F, F, F, F),
+      "v_Mean" -> Seq(F, 1.2345678901234567e19, F, F, F, -1.0e-10),
+      // counts and histograms: absent cells are 0
+      "v_Pixel_Counts" -> Seq(0.0, 7, 0, 0, 0, 3),
+      "v_Histogram_Counts" -> (Seq.fill(3)(0.0) ++ Seq(1.0, 2, 4) ++ Seq.fill(9)(0.0) ++
+        Seq(0.0, 3, 0)),
+      "v_Jhisto_vs_w" -> (Seq.fill(6)(0.0) ++ Seq(1.0, 0, 0, 2, 3, 1) ++ Seq.fill(18)(0.0) ++
+        Seq(0.0, 1, 2, 0, 0, 0)),
+      "cloud_fraction_Pixel_Counts" -> Seq(0.0, 8, 0, 0, 0, 4),
+      "GRID_Counts" -> Seq(0.0, 2, 0, 0, 0, 1))
+    for ((name, want) <- both) {
+      assert(h5(name) == want, s"$name in the .h5")
+      assert(nc(name) == want, s"$name in the .nc")
+    }
+    // cloud fraction: the .h5 holds value/1e-4 unrounded, the .nc the packed int
+    val C = -9999.0
+    for ((name, (v1, v5)) <- Seq("cloud_fraction_Minimum" -> (0.25, 0.0),
+        "cloud_fraction_Maximum" -> (0.75, 1.0), "cloud_fraction_Mean" -> (0.5, 0.375))) {
+      assert(h5(name) == Seq(C, v1 / 1e-4, C, C, C, v5 / 1e-4), name)
+      assert(nc(name) == Seq(C, math.round(v1 / 1e-4).toDouble, C, C, C,
+        math.round(v5 / 1e-4).toDouble), name)
+    }
+
+    // a histogram row of the wrong shape is still the named error
+    def shapeError(bad: DataFrame): String = intercept[IllegalArgumentException] {
+      L3Writer.writeH5(bad, cfg, dir.resolve(s"bad${System.nanoTime()}.h5").toString)
+    }.getMessage
+    assert(shapeError(grid(hist5 = Seq(0, 3))).contains(
+      "v_Histogram_Counts: histogram shape 2 != 3"))
+    assert(shapeError(grid(jhist5 = Seq(Seq(0, 1), Seq(2, 0)))).contains(
+      "v_Jhisto_vs_w: histogram shape 2 x 2 != 3 x 2"))
+    assert(shapeError(grid(jhist5 = Seq(Seq(0, 1), Seq(2, 0, 0), Seq(0, 0)))).contains(
+      "v_Jhisto_vs_w: histogram shape"))
   }
 }

@@ -32,6 +32,21 @@ class GranuleSourceSpec extends SparkSpec {
     assert(r.length == 1 && r.head.getInt(0) == 123 && r.head.getInt(1) == 14)
   }
 
+  test("a malformed granule id fails the scan's partition planning, naming the id") {
+    def planningError(granules: String): IllegalArgumentException = {
+      val e = intercept[Exception](read(granules).rdd.getNumPartitions)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case iae: IllegalArgumentException => iae }
+        .getOrElse(fail(s"no IllegalArgumentException in the cause chain of $e", e))
+    }
+    // a bad day of year, a bad hour, and an id with neither
+    assert(planningError("A2008001.0005,A2008x01.0005").getMessage.contains("'A2008x01.0005'"))
+    assert(planningError("A2008001.xx05").getMessage.contains("'A2008001.xx05'"))
+    assert(planningError("A2008001.0005,garbage").getMessage.contains("'garbage'"))
+    // well-formed ids still plan one partition each
+    assert(read("A2008001.0005,A2008366.2355").rdd.getNumPartitions == 2)
+  }
+
   test("column pruning reaches the scan") {
     val df = read("A2008001.0005").select($"lat", $"lon")
     val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
