@@ -31,5 +31,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the native as-of join's planner strategy (AsofJoinPlan.asofJoin
     // also self-registers it programmatically for extension-less sessions)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    // the L3 cell aggregate's partial/final exec pair (GridAggregation.
+    // aggregate also self-registers it)
+    ext.injectPlannerStrategy(_ => graft.engine.CellAggregateStrategy)
   }
 }

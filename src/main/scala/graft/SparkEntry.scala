@@ -15,7 +15,7 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the reference's canonical scan -> region filter -> grid-cell derive ->
-    * groupBy(cell) -> multi-statistic aggregation (SURVEY §2.4 A1-A5).
+    * cell aggregate -> multi-statistic finalize (SURVEY §2.4 A1-A5).
     */
   def entry(spark: SparkSession): DataFrame =
     RefQueries.queries("q_grid_stats")(spark, "/root/testdata/sf0.001")

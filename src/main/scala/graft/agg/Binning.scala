@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *     the DuckDB oracle for the correctness gate.
   *
   * The array-valued per-group histogram (reference output shape) is
-  * [[Histogram1D]] / [[Histogram2D]], built on the same edge semantics.
+  * [[HistogramAgg]], built on the same edge semantics ([[binIndexScala]]).
   */
 object Binning {
 

@@ -1,26 +1,33 @@
 package graft.engine
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types._
 
-import graft.agg.{CloudFractionAgg, StatsPlan}
-import graft.agg.StatsPlan.{CloudFraction, GridColumn, GridCounts, PixelCount}
+import graft.agg.StatsPlan
+import graft.agg.StatsPlan._
 import graft.expr.GridExprs
 import graft.model.{JobConfig, VarSpec}
 
 /** The engine's one canonical pipeline (reference query lifecycle, SURVEY §3):
   *
-  *   pixels -> region filter -> cell-id derive -> groupBy(cell) ->
-  *   monoid aggregates -> finalize -> L3 grid frame
+  *   pixels -> region filter -> cell-id derive -> per-task cell state ->
+  *   cell-keyed merge -> finalize -> L3 grid frame
   *
-  * Declared entirely with the DataFrame API so Catalyst handles predicate
-  * pushdown, column pruning and two-phase (partial/final) hash aggregation —
-  * the distributed-merge semantics the reference hand-rolls in its MPI/Dask
-  * drivers (A10) fall out of `HashAggregateExec` for free.
+  * Everything up to the cell aggregate is DataFrame API, so Catalyst
+  * handles predicate pushdown and column pruning. The aggregate itself is
+  * the reference's columnar accumulator (`grid_data`, A10) per task: a
+  * custom [[CellAggregate]] node planned as a partial exec that folds each
+  * task's pixels into primitive per-cell arrays ([[CellState]]), ONE
+  * exchange keyed by cell, and a final exec that merges the states and
+  * finalizes every [[layout]] column — the distributed merge the reference
+  * hand-rolls in its MPI/Dask drivers.
   *
   * Scale notes (100 TB target): the single shuffle is keyed by `cell` —
   * at the canonical 1x1-degree global grid that is <= 64,800 groups x a few
-  * hundred bytes of buffer per variable, so the shuffle after map-side
+  * hundred bytes of state per variable, so the shuffle after map-side
   * partial aggregation is tiny regardless of input volume (SURVEY §4). No
   * driver-side materialization happens here; only the final grid (<= 64,800
   * rows) is ever small enough to collect, and that is the sink's decision.
@@ -52,21 +59,70 @@ object GridAggregation {
     */
   val CloudFractionVar = "cloud_fraction_CM"
 
-  /** The L3 grid in ONE `groupBy(cell)`: the [[StatsPlan]] partials of
-    * every data variable (A1-A7) and, when the config lists
-    * [[CloudFractionVar]], the [[CloudFractionAgg]] beside them (A8/A9).
-    * One scan, one shuffle keyed by cell; everything before it is map-side.
-    * The result is `cell` followed by the [[layout]] columns, in order.
+  /** The L3 grid in ONE cell aggregate ([[CellAggregate]]): the
+    * statistics and histograms of every data variable (A1-A7) and, when
+    * the config lists [[CloudFractionVar]], the cloud fraction beside them
+    * (A8/A9). One scan, one shuffle keyed by cell; everything before it is
+    * map-side. The result is `cell` followed by the [[layout]] columns, in
+    * order.
+    *
+    * Every data variable and joint partner is read as DOUBLE (so
+    * Minimum/Maximum of an integral or decimal variable are DOUBLE, as the
+    * histograms always were), the cloud-mask flag as DOUBLE and the
+    * granule id as a string or BIGINT.
     */
   def aggregate(pixels: DataFrame, cfg: JobConfig, cols: PixelCols = PixelCols()): DataFrame = {
-    val partials = dataVars(cfg).flatMap(v => StatsPlan.partialAggs(v, cfg.stats)) ++
-      (if (wantsCloudFraction(cfg))
-        Seq(CloudFractionAgg.cloudFraction(col(cols.cmFlag), col(cols.granule)).as(CfBuffer))
-      else Nil)
-    require(partials.nonEmpty, "JobConfig.vars must list a variable with a statistic to compute")
-    withCell(pixels, cfg, cols).groupBy(col("cell"))
-      .agg(partials.head, partials.tail: _*)
-      .select(col("cell") +: layout(cfg).map(c => c.value.as(c.name)): _*)
+    val columns = layout(cfg)
+    require(columns.nonEmpty, "JobConfig.vars must list a variable with a statistic to compute")
+    val used = columns.map(_.variable).toSet
+    val vars = dataVars(cfg).filter(v => used(v.name))
+    val values = (vars.map(_.name) ++ vars.flatMap(v =>
+      v.joint.filter(_ => cfg.stats.jhist).map(_.jointVar))).distinct
+    val withCf = wantsCloudFraction(cfg)
+    val cells = withCell(pixels, cfg, cols)
+    val granuleType = if (withCf) cells.schema(cols.granule).dataType else StringType
+    val granule = granuleType match {
+      case StringType => col(cols.granule)
+      case ByteType | ShortType | IntegerType | LongType => col(cols.granule).cast(LongType)
+      case t => throw new IllegalArgumentException(
+        s"cloud_fraction needs a string or integral granule id, got ${t.simpleString}")
+    }
+    val input = cells.select(Seq(col("cell").cast(LongType).as("cell")) ++
+      values.map(n => col(n).cast(DoubleType).as(n)) ++
+      (if (withCf) Seq(col(cols.cmFlag).cast(DoubleType).as(cols.cmFlag),
+        granule.as(cols.granule)) else Nil): _*)
+    def ordinal(name: String): Int = 1 + values.indexOf(name)
+    val spec = CellAggSpec(
+      vars = vars.map { v =>
+        val hist = cfg.stats.hist && v.binEdges.nonEmpty
+        val joint = v.joint.filter(_ => cfg.stats.jhist)
+        val axes = (if (hist || joint.nonEmpty) Seq(v.binEdges) else Nil) ++
+          joint.map(_.jointEdges)
+        require(axes.forall(_.length >= 2),
+          s"${v.name}: a histogram needs >= 2 bin edges per axis, got ${axes.mkString(" / ")}")
+        CellVar(v.name, ordinal(v.name), if (axes.isEmpty) Nil else v.binEdges, hist,
+          joint.map(j => (ordinal(j.jointVar), j.jointEdges)))
+      },
+      flagInput = if (withCf) 1 + values.size else -1,
+      granuleInput = if (withCf) 2 + values.size else -1,
+      stringIds = granuleType == StringType,
+      layout = columns)
+    val spark = pixels.sparkSession
+    Bridge.injectStrategy(spark, CellAggregateStrategy)
+    val child = Bridge.analyzed(input)
+    // only the floating statistics can be NULL (no pixel to summarize)
+    Bridge.ofRows(spark, CellAggregate(spec, child.output, columns.map { c =>
+      val t = columnType(c)
+      AttributeReference(c.name, t, nullable = t == DoubleType)()
+    }, child))
+  }
+
+  /** The Spark type of a layout column. */
+  private def columnType(c: GridColumn): DataType = c.stat match {
+    case PixelCounts | CloudFractionPixelCounts | GranuleCounts => LongType
+    case HistogramCounts => ArrayType(LongType, containsNull = false)
+    case JointHistogram => ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
+    case _ => DoubleType
   }
 
   /** The L3 layout: every output column of [[aggregate]] after `cell`, in
@@ -77,17 +133,15 @@ object GridAggregation {
     */
   def layout(cfg: JobConfig): Seq[GridColumn] = {
     val cf = if (!wantsCloudFraction(cfg)) Nil else Seq(
-      "cloud_fraction_Minimum" -> ("min", CloudFraction),
-      "cloud_fraction_Maximum" -> ("max", CloudFraction),
-      "cloud_fraction_Mean" -> ("mean", CloudFraction),
-      "cloud_fraction_Pixel_Counts" -> ("pixel_counts", PixelCount),
-      "GRID_Counts" -> ("grid_counts", GridCounts)).map { case (name, (field, kind)) =>
-      GridColumn(name, CloudFractionVar, kind, col(s"$CfBuffer.$field"))
+      "cloud_fraction_Minimum" -> (CloudFraction, CloudFractionMinimum),
+      "cloud_fraction_Maximum" -> (CloudFraction, CloudFractionMaximum),
+      "cloud_fraction_Mean" -> (CloudFraction, CloudFractionMean),
+      "cloud_fraction_Pixel_Counts" -> (PixelCount, CloudFractionPixelCounts),
+      "GRID_Counts" -> (GridCounts, GranuleCounts)).map { case (name, (kind, stat)) =>
+      GridColumn(name, CloudFractionVar, kind, stat)
     }
     dataVars(cfg).flatMap(v => StatsPlan.finalizeCols(v, cfg.stats)) ++ cf
   }
-
-  private val CfBuffer = s"${CloudFractionVar}__agg"
 
   private def wantsCloudFraction(cfg: JobConfig): Boolean =
     cfg.vars.exists(_.name == CloudFractionVar)

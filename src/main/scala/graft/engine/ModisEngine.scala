@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,11 +39,13 @@ object ModisEngine {
     // legal when no cloud-fraction statistic is configured
     val varNames = cfg.vars.map(_.name).filterNot(_ == CloudFractionVar) ++
       (if (pixels.columns.contains(cols.cmFlag)) Seq(cols.cmFlag) else Nil)
-    varNames.foldLeft(pixels) { (df, v) =>
-      df.withColumn(v, GridExprs.dayDefinitionNullOut(
+    // one withColumns, so the plan is analyzed once, not once per variable;
+    // the ListMap keeps the column order of a fold of withColumn calls
+    pixels.withColumns(ListMap(varNames.distinct.map { v =>
+      v -> GridExprs.dayDefinitionNullOut(
         col(v), col("day_of_year"), col("hour"), col(cols.lon),
-        d0, d1, cfg.shiftHour))
-    }
+        d0, d1, cfg.shiftHour)
+    }: _*))
   }
 
   /** Pixel frame -> complete L3 grid frame (cell + every configured

@@ -303,7 +303,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   * computes (Java \s = [ \t\n\x0B\f\r]; every non-ASCII code point is in
   * the negated class on both engines), but as ONE byte walk: the regex
   * form materializes a REPLACED COPY of every document to diff lengths —
-  * measured 13.9 s vs 0.3 s over 200k docs in PipelineScaleBench. UTF-8
+  * measured 13.9 s vs 0.3 s over 200k docs (PERF.md). UTF-8
   * continuation bytes are skipped, so multi-byte code points count once.
   */
 case class PunctCount(child: Expression) extends UnaryExpression {

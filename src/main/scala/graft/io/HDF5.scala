@@ -276,8 +276,32 @@ object HDF5 {
 
   // -------------------------------------------------------------- writing
 
-  /** Serialize to HDF5 classic bytes. */
+  /** Serialize to HDF5 classic bytes ([[writeTo]] into memory). */
   def toBytes(file: H5File): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    writeTo(file, java.nio.channels.Channels.newChannel(out))
+    out.toByteArray
+  }
+
+  /** Write the file to `path` (created or truncated), streamed: no copy of
+    * the whole file is ever built in memory.
+    */
+  def write(f: H5File, path: String): Unit = {
+    import java.nio.file.StandardOpenOption._
+    val ch = java.nio.channels.FileChannel.open(
+      java.nio.file.Paths.get(path), CREATE, TRUNCATE_EXISTING, WRITE)
+    try writeTo(f, ch) finally ch.close()
+  }
+
+  /** Bytes of raw data staged per channel write in [[writeTo]]. */
+  private val StreamChunk = 1 << 20
+
+  /** Serialize to HDF5 classic bytes on `out`: the metadata prefix
+    * (superblock, heap, B-tree, symbol table, object headers) from one
+    * buffer, then each dataset's raw data through one reusable
+    * little-endian buffer of at most [[StreamChunk]] bytes.
+    */
+  private def writeTo(file: H5File, out: java.nio.channels.WritableByteChannel): Unit = {
     validate(file)
     val ds = file.datasets.sortBy(_.name) // SNOD entries must be name-sorted
     val n = ds.length
@@ -324,7 +348,7 @@ object HDF5 {
       s"file size $eof exceeds the driver-side 2 GiB bound (L3 grids are " +
         "driver-small by design; the distributed sink is L3Writer.write)")
 
-    val bb = ByteBuffer.allocate(eof.toInt).order(ByteOrder.LITTLE_ENDIAN)
+    val bb = ByteBuffer.allocate(dataAddrs.head.toInt).order(ByteOrder.LITTLE_ENDIAN)
 
     // superblock v0
     bb.put(Signature)
@@ -400,21 +424,39 @@ object HDF5 {
       bb.position((ohAddrs(i) + ohSizes(i)).toInt)
     }
 
-    // raw data
+    require(bb.position() == dataAddrs.head.toInt, "data layout bug")
+    bb.flip()
+    drain(out, bb)
+
+    // raw data, chunk by chunk (every element is 8 bytes, so each dataset
+    // ends on its successor's address); bulk copies go through
+    // little-endian views (the views share the chunk's order)
+    val chunk = ByteBuffer.allocate(
+      math.min(StreamChunk.toLong, math.max(8L, dataSizes.foldLeft(0L)(math.max))).toInt)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    val perChunk = chunk.capacity / 8
     ds.indices.foreach { i =>
-      require(bb.position() == dataAddrs(i).toInt, s"data layout bug at $i")
-      // bulk copy through a little-endian view (the views share bb's order)
-      ds(i).data match {
-        case a: Array[Long] => bb.asLongBuffer().put(a)
-        case a: Array[Double] => bb.asDoubleBuffer().put(a)
+      val len = ds(i).data match {
+        case a: Array[Long] => a.length
+        case a: Array[Double] => a.length
       }
-      bb.position((dataAddrs(i) + dataSizes(i)).toInt)
+      var from = 0
+      while (from < len) {
+        val k = math.min(perChunk, len - from)
+        chunk.clear()
+        ds(i).data match {
+          case a: Array[Long] => chunk.asLongBuffer().put(a, from, k)
+          case a: Array[Double] => chunk.asDoubleBuffer().put(a, from, k)
+        }
+        chunk.limit(8 * k)
+        drain(out, chunk)
+        from += k
+      }
     }
-    bb.array()
   }
 
-  def write(f: H5File, path: String): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), toBytes(f))
+  private def drain(out: java.nio.channels.WritableByteChannel, b: ByteBuffer): Unit =
+    while (b.hasRemaining) out.write(b)
 
   // -------------------------------------------------------------- reading
 

@@ -676,7 +676,8 @@ object DedupOps {
     *
     * Same output contract as [[ngramJaccardPairs]] (which remains the
     * exact ground truth: LSH misses pairs at S-curve rates — recall vs
-    * exact is asserted in DedupOpsSpec and measured in PipelineScaleBench).
+    * exact is asserted in DedupOpsSpec; the 200k-doc measurement is in
+    * PERF.md, "Pipeline scale demonstration").
     */
   def minhashVerifiedPairs(
       docs: DataFrame,
@@ -707,7 +708,7 @@ object DedupOps {
     // signatures take each family's FAST path: xxhash64 rides the
     // single-pass codegen'd ShingleMinHash straight off the tokens
     // (interpreted per-slot HOF mins over the set measured 10x slower at
-    // 200k docs — PipelineScaleBench minhash_verified_pairs 4.6 -> 45 s);
+    // 200k docs — minhash_verified_pairs 4.6 -> 45 s, PERF.md);
     // the portable family derives slots from the CACHED hash sets so the
     // md5 pass is paid once.
     val sigs = family match {

@@ -55,7 +55,19 @@ object IndexOps {
   private def ledgerDir(indexDir: String, kind: String): java.nio.file.Path =
     java.nio.file.Paths.get(
       s"$indexDir/segments/.ledger", // dot-dir: invisible to the parquet reader
-      java.net.URLEncoder.encode(kind, "UTF-8"))
+      ledgerName("kind", kind))
+
+  /** The file name a ledger kind or segment is stored under: URL-encoded,
+    * with a leading dot escaped as `%2E` so that `.` and `..` (and any
+    * dot-name) never resolve to the ledger's own directories.
+    * `URLDecoder` reverses both, so markers written before the escape
+    * read back the same. An empty name has no file and is rejected.
+    */
+  private def ledgerName(what: String, name: String): String = {
+    if (name.isEmpty) throw new IllegalArgumentException(s"index ledger $what must not be empty")
+    val e = java.net.URLEncoder.encode(name, "UTF-8")
+    if (e.startsWith(".")) "%2E" + e.substring(1) else e
+  }
 
   /** Segments already folded into `kind`'s index (empty ledger = none).
     *
@@ -96,6 +108,7 @@ object IndexOps {
   private[ops] def recordSegment(
       spark: SparkSession, indexDir: String, kind: String, segment: String): Unit = {
     val ledger = ledgerDir(indexDir, kind)
+    val marker = ledger.resolve(ledgerName("segment", segment))
     if (!java.nio.file.Files.isDirectory(ledger)) {
       // first marker for this kind: migrate any pre-marker parquet rows so
       // the marker dir is authoritative from here on
@@ -103,15 +116,14 @@ object IndexOps {
       java.nio.file.Files.createDirectories(ledger)
       legacy.foreach { sg =>
         try java.nio.file.Files.createFile(
-          ledger.resolve(java.net.URLEncoder.encode(sg, "UTF-8")))
+          ledger.resolve(ledgerName("segment", sg)))
         catch { case _: java.nio.file.FileAlreadyExistsException => }
       }
     }
     // marker before the parquet append: the marker is what probes read, and
     // writing it immediately after the data writes keeps the torn window
     // (data committed, ledger not) no wider than before
-    try java.nio.file.Files.createFile(
-      ledger.resolve(java.net.URLEncoder.encode(segment, "UTF-8")))
+    try java.nio.file.Files.createFile(marker)
     catch { case _: java.nio.file.FileAlreadyExistsException => }
     import spark.implicits._
     Seq((kind, segment)).toDF("kind", "segment")

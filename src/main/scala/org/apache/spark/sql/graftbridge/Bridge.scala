@@ -64,6 +64,12 @@ object Bridge {
     }
   }
 
+  /** The running task's memory manager (`TaskContext.taskMemoryManager`
+    * is `private[spark]`), for operators that account their own state.
+    */
+  def taskMemoryManager(): org.apache.spark.memory.TaskMemoryManager =
+    org.apache.spark.TaskContext.get().taskMemoryManager()
+
   /** Idempotently add a planner strategy to the session (the programmatic
     * twin of `SparkSessionExtensions.injectPlannerStrategy`, for sessions
     * built without `spark.sql.extensions`).

@@ -83,6 +83,24 @@ class IndexOpsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$idx/segments").count() == 4)
   }
 
+  test("ledger names that are dots or dot-prefixed never collide with the ledger's directories") {
+    val idx = tmp("idxdots_")
+    val names = Seq(".", "..", ".hidden", "a.b")
+    names.foreach(IndexOps.recordSegment(spark, idx, "postings", _))
+    IndexOps.recordSegment(spark, idx, ".", "s1")
+    IndexOps.recordSegment(spark, idx, "..", "s2")
+    assert(IndexOps.coveredSegments(spark, idx, "postings") == names.toSet)
+    assert(IndexOps.coveredSegments(spark, idx, ".") == Set("s1"))
+    assert(IndexOps.coveredSegments(spark, idx, "..") == Set("s2"))
+    // a marker written before the escape (".hidden" verbatim) reads the same
+    val legacy = java.nio.file.Paths.get(s"$idx/segments/.ledger/postings/.old")
+    java.nio.file.Files.createFile(legacy)
+    assert(IndexOps.coveredSegments(spark, idx, "postings") == names.toSet + ".old")
+    intercept[IllegalArgumentException](IndexOps.recordSegment(spark, idx, "postings", ""))
+    intercept[IllegalArgumentException](IndexOps.recordSegment(spark, idx, "", "s3"))
+    intercept[IllegalArgumentException](IndexOps.coveredSegments(spark, idx, ""))
+  }
+
   test("coveredSegments survives a crash between the first marker and the first append") {
     // recordSegment wrote its first marker, then died before the parquet
     // append: segments/ holds only the ledger dir (a marker named like a
