@@ -88,13 +88,7 @@ case class CellPartialExec(
     // the spec's ordinals index `inputs`; the rows are the child's output
     val ordinal = inputs.map(a => BindReferences.bindReference[Expression](a, child.output)
       .asInstanceOf[BoundReference].ordinal)
-    def at(i: Int): Int = if (i < 0) i else ordinal(i)
-    val bound = spec.copy(
-      vars = spec.vars.map(v => v.copy(input = at(v.input),
-        joint = v.joint.map { case (j, e) => (at(j), e) })),
-      flagInput = at(spec.flagInput),
-      granuleInput = at(spec.granuleInput),
-      cellInput = at(spec.cellInput))
+    val bound = spec.remap(ordinal)
     child.execute().mapPartitions { rows =>
       val st = new CellState(bound, (_, _) => ())
       val slotBound = math.max(1L, math.min(PartialSlots.toLong, PartialStateBytes / st.slotBytes))

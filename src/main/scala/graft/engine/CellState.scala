@@ -10,30 +10,28 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.agg.Binning
 import graft.agg.StatsPlan._
 
-/** What one data variable contributes to the cell state: its input
-  * ordinal, its x-axis bin edges (`Nil` when it has no histogram), whether
-  * the 1-D histogram is kept, and the joint partner's ordinal and edges.
-  */
-final case class CellVar(
-    name: String,
-    input: Int,
-    edges: Seq[Double],
-    hist: Boolean,
-    joint: Option[(Int, Seq[Double])])
-
-/** The L3 cell aggregate of one job: the variables, the cloud-fraction
-  * inputs (`flagInput`/`granuleInput`, -1 without a cloud fraction; the
-  * granule id is a string when `stringIds`, else a long) and the
-  * [[GridColumn]]s to finalize, in output order. Ordinals index the input
-  * row; `cellInput` is the cell's.
+/** The L3 cell aggregate of one job: the [[GridColumn]]s to finalize, in
+  * output order, and where the input row holds what they read — the cell
+  * (BIGINT), each variable read (data variables and joint partners, as
+  * DOUBLE) by name, the cloud-mask flag (DOUBLE) and the granule id (a
+  * string when `stringIds`, else a long); `flagInput`/`granuleInput` are
+  * -1 without a cloud fraction.
   */
 final case class CellAggSpec(
-    vars: Seq[CellVar],
+    layout: Seq[GridColumn],
+    cellInput: Int,
+    varInputs: Map[String, Int],
     flagInput: Int,
     granuleInput: Int,
-    stringIds: Boolean,
-    layout: Seq[GridColumn],
-    cellInput: Int = 0)
+    stringIds: Boolean) {
+
+  /** The same aggregate over rows that hold input column `i` at `to(i)`. */
+  def remap(to: Int => Int): CellAggSpec = {
+    def at(i: Int): Int = if (i < 0) i else to(i)
+    copy(cellInput = at(cellInput), varInputs = varInputs.map { case (v, i) => v -> at(i) },
+      flagInput = at(flagInput), granuleInput = at(granuleInput))
+  }
+}
 
 /** Primitive per-task state of the L3 cell aggregate — the reference's
   * `grid_data` accumulator (flat arrays indexed by cell) restricted to the
@@ -59,15 +57,24 @@ final case class CellAggSpec(
   */
 private[engine] final class CellState(spec: CellAggSpec, reserve: (Long, Int) => Unit) {
 
-  private val nVars = spec.vars.length
-  private val varIn = spec.vars.map(_.input).toArray
-  private val edges: Array[Array[Double]] =
-    spec.vars.map(v => if (v.edges.isEmpty) null else v.edges.toArray).toArray
-  private val nBins = spec.vars.map(v => if (v.hist) v.edges.size - 1 else 0).toArray
-  private val jointIn = spec.vars.map(_.joint.fold(-1)(_._1)).toArray
-  private val jEdges = spec.vars.map(_.joint.fold(null: Array[Double])(_._2.toArray)).toArray
-  private val ny = spec.vars.map(_.joint.fold(0)(_._2.size - 1)).toArray
-  private val nx = spec.vars.map(v => if (v.joint.isEmpty) 0 else v.edges.size - 1).toArray
+  /** The accumulated variables: every one read that a layout column
+    * summarizes, in layout order, with its 1-D and joint histogram columns.
+    */
+  private val vars = spec.layout.map(_.variable).distinct.filter(spec.varInputs.contains)
+  private def statsOf(v: String) = spec.layout.filter(_.variable == v).map(_.stat)
+  private val hist = vars.map(v => statsOf(v).collectFirst { case h: HistogramCounts => h })
+  private val joint = vars.map(v => statsOf(v).collectFirst { case j: JointHistogram => j })
+
+  private val nVars = vars.length
+  private val varIn = vars.map(spec.varInputs).toArray
+  private val edges: Array[Array[Double]] = hist.zip(joint).map { case (h, j) =>
+    h.map(_.edges).orElse(j.map(_.xEdges)).fold(null: Array[Double])(_.toArray)
+  }.toArray
+  private val nBins = hist.map(_.fold(0)(_.bins.head)).toArray
+  private val jointIn = joint.map(_.fold(-1)(j => spec.varInputs(j.partner))).toArray
+  private val jEdges = joint.map(_.fold(null: Array[Double])(_.yEdges.toArray)).toArray
+  private val ny = joint.map(_.fold(0)(_.bins(1))).toArray
+  private val nx = joint.map(_.fold(0)(_.bins.head)).toArray
   /** Long-block layout per variable: count, then 1-D bins, then joint bins. */
   private val lOff: Array[Int] =
     (0 until nVars).scanLeft(0)((o, v) => o + 1 + nBins(v) + nx(v) * ny(v)).toArray
@@ -427,7 +434,7 @@ private[engine] final class CellState(spec: CellAggSpec, reserve: (Long, Int) =>
 
   // ----------------------------------------------------- finalize
 
-  private val varIndex: Map[String, Int] = spec.vars.map(_.name).zipWithIndex.toMap
+  private val varIndex: Map[String, Int] = vars.zipWithIndex.toMap
 
   /** Slot `s` as the layout columns, written to `out(1..)`; `out(0)` = cell. */
   def finalizeInto(s: Int, out: InternalRow): Unit = {
@@ -473,9 +480,9 @@ private[engine] final class CellState(spec: CellAggSpec, reserve: (Long, Int) =>
           val n = l(lc)
           stat match {
             case PixelCounts => out.setLong(o, n)
-            case HistogramCounts =>
+            case _: HistogramCounts =>
               out.update(o, longs(lc + 1, nBins(v)))
-            case JointHistogram =>
+            case _: JointHistogram =>
               val j0 = lc + 1 + nBins(v)
               out.update(o, new GenericArrayData(
                 Array.tabulate[Any](nx(v))(x => longs(j0 + x * ny(v), ny(v)))))

@@ -63,8 +63,9 @@ object GridAggregation {
     * statistics and histograms of every data variable (A1-A7) and, when
     * the config lists [[CloudFractionVar]], the cloud fraction beside them
     * (A8/A9). One scan, one shuffle keyed by cell; everything before it is
-    * map-side. The result is `cell` followed by the [[layout]] columns, in
-    * order.
+    * map-side. The result is `cell` (BIGINT) followed by the [[layout]]
+    * columns, in order, each of its [[StatsPlan.Stat.dataType]]; the cell
+    * state is built from the same layout.
     *
     * Every data variable and joint partner is read as DOUBLE (so
     * Minimum/Maximum of an integral or decimal variable are DOUBLE, as the
@@ -74,10 +75,8 @@ object GridAggregation {
   def aggregate(pixels: DataFrame, cfg: JobConfig, cols: PixelCols = PixelCols()): DataFrame = {
     val columns = layout(cfg)
     require(columns.nonEmpty, "JobConfig.vars must list a variable with a statistic to compute")
-    val used = columns.map(_.variable).toSet
-    val vars = dataVars(cfg).filter(v => used(v.name))
-    val values = (vars.map(_.name) ++ vars.flatMap(v =>
-      v.joint.filter(_ => cfg.stats.jhist).map(_.jointVar))).distinct
+    val partners = columns.collect { case GridColumn(_, _, JointHistogram(p, _, _)) => p }
+    val values = (columns.map(_.variable).filterNot(_ == CloudFractionVar) ++ partners).distinct
     val withCf = wantsCloudFraction(cfg)
     val cells = withCell(pixels, cfg, cols)
     val granuleType = if (withCf) cells.schema(cols.granule).dataType else StringType
@@ -91,54 +90,36 @@ object GridAggregation {
       values.map(n => col(n).cast(DoubleType).as(n)) ++
       (if (withCf) Seq(col(cols.cmFlag).cast(DoubleType).as(cols.cmFlag),
         granule.as(cols.granule)) else Nil): _*)
-    def ordinal(name: String): Int = 1 + values.indexOf(name)
-    val spec = CellAggSpec(
-      vars = vars.map { v =>
-        val hist = cfg.stats.hist && v.binEdges.nonEmpty
-        val joint = v.joint.filter(_ => cfg.stats.jhist)
-        val axes = (if (hist || joint.nonEmpty) Seq(v.binEdges) else Nil) ++
-          joint.map(_.jointEdges)
-        require(axes.forall(_.length >= 2),
-          s"${v.name}: a histogram needs >= 2 bin edges per axis, got ${axes.mkString(" / ")}")
-        CellVar(v.name, ordinal(v.name), if (axes.isEmpty) Nil else v.binEdges, hist,
-          joint.map(j => (ordinal(j.jointVar), j.jointEdges)))
-      },
+    val spec = CellAggSpec(columns,
+      cellInput = 0,
+      varInputs = values.zipWithIndex.map { case (n, i) => n -> (1 + i) }.toMap,
       flagInput = if (withCf) 1 + values.size else -1,
       granuleInput = if (withCf) 2 + values.size else -1,
-      stringIds = granuleType == StringType,
-      layout = columns)
+      stringIds = granuleType == StringType)
     val spark = pixels.sparkSession
     Bridge.injectStrategy(spark, CellAggregateStrategy)
     val child = Bridge.analyzed(input)
     // only the floating statistics can be NULL (no pixel to summarize)
     Bridge.ofRows(spark, CellAggregate(spec, child.output, columns.map { c =>
-      val t = columnType(c)
-      AttributeReference(c.name, t, nullable = t == DoubleType)()
+      AttributeReference(c.name, c.stat.dataType, nullable = c.stat.dataType == DoubleType)()
     }, child))
   }
 
-  /** The Spark type of a layout column. */
-  private def columnType(c: GridColumn): DataType = c.stat match {
-    case PixelCounts | CloudFractionPixelCounts | GranuleCounts => LongType
-    case HistogramCounts => ArrayType(LongType, containsNull = false)
-    case JointHistogram => ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
-    case _ => DoubleType
-  }
-
   /** The L3 layout: every output column of [[aggregate]] after `cell`, in
-    * order, with the variable it summarizes and its kind. This is the one
-    * place the layout is decided; the sinks read it instead of the names.
+    * order, with the variable it summarizes and the [[StatsPlan.Stat]] it
+    * holds. This is the one place an L3 column is decided: the cell state
+    * is built from it and the sinks read it instead of the names.
     * `cloud_fraction_{Minimum,Maximum,Mean,Pixel_Counts}` and
     * `GRID_Counts` close it when the config lists [[CloudFractionVar]].
     */
   def layout(cfg: JobConfig): Seq[GridColumn] = {
     val cf = if (!wantsCloudFraction(cfg)) Nil else Seq(
-      "cloud_fraction_Minimum" -> (CloudFraction, CloudFractionMinimum),
-      "cloud_fraction_Maximum" -> (CloudFraction, CloudFractionMaximum),
-      "cloud_fraction_Mean" -> (CloudFraction, CloudFractionMean),
-      "cloud_fraction_Pixel_Counts" -> (PixelCount, CloudFractionPixelCounts),
-      "GRID_Counts" -> (GridCounts, GranuleCounts)).map { case (name, (kind, stat)) =>
-      GridColumn(name, CloudFractionVar, kind, stat)
+      "cloud_fraction_Minimum" -> CloudFractionMinimum,
+      "cloud_fraction_Maximum" -> CloudFractionMaximum,
+      "cloud_fraction_Mean" -> CloudFractionMean,
+      "cloud_fraction_Pixel_Counts" -> CloudFractionPixelCounts,
+      "GRID_Counts" -> GranuleCounts).map { case (name, stat) =>
+      GridColumn(name, CloudFractionVar, stat)
     }
     dataVars(cfg).flatMap(v => StatsPlan.finalizeCols(v, cfg.stats)) ++ cf
   }

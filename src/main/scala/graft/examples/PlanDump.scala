@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * write wraps the plan in its own QueryExecution — the final adaptive
   * plan of the query itself would stay unfinalized. The queries dumped
   * here return bounded frames (grid/top-k/group-sized), so the collect
-  * is driver-safe; the timing instrument stays [[TimeOne]].
+  * is driver-safe. It dumps plans and times nothing; timings come from
+  * [[graft.Bench]].
   *
   * Run: `sbt "runMain graft.examples.PlanDump plans/r09 before q_triangles ..."`
   */

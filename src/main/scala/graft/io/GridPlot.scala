@@ -151,8 +151,8 @@ object GridPlot {
     * write the contourf-style PNG. The frame is collected and densified
     * through the same binary-row path as the `.h5`/`.nc` sinks
     * ([[L3Writer.CellRows]]): each row lands at its `cell`
-    * (= `lat_idx * gridLon + lon_idx`), absent cells and NULL values are
-    * NaN. An existing `path` is an error
+    * (= `lat_idx * gridLon + lon_idx`, at most one row per cell), absent
+    * cells and NULL values are NaN. An existing `path` is an error
     * ([[L3Writer.requireAbsent]], the guard the reference applies to all
     * its sinks, S5).
     *
@@ -170,8 +170,8 @@ object GridPlot {
     L3Writer.requireAbsent(path)
     val nLat = cfg.grid.gridLat
     val nLon = cfg.grid.gridLon
-    val rows = new L3Writer.CellRows(grid.select(col("cell"), col(valueCol).cast("double")),
-      nLat, nLon)
+    val rows = new L3Writer.CellRows(
+      grid.select(col("cell").cast("long"), col(valueCol).cast("double")), nLat, nLon)
     val value = rows.doubles(1, Double.NaN)
     rows.fill()
     val cells = Array.tabulate(nLat)(i => value.out.slice(i * nLon, (i + 1) * nLon))

@@ -277,29 +277,17 @@ object HDF5 {
   // -------------------------------------------------------------- writing
 
   /** Serialize to HDF5 classic bytes ([[writeTo]] into memory). */
-  def toBytes(file: H5File): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    writeTo(file, java.nio.channels.Channels.newChannel(out))
-    out.toByteArray
-  }
+  def toBytes(file: H5File): Array[Byte] = ChannelOut.bytes(writeTo(file, _))
 
   /** Write the file to `path` (created or truncated), streamed: no copy of
     * the whole file is ever built in memory.
     */
-  def write(f: H5File, path: String): Unit = {
-    import java.nio.file.StandardOpenOption._
-    val ch = java.nio.channels.FileChannel.open(
-      java.nio.file.Paths.get(path), CREATE, TRUNCATE_EXISTING, WRITE)
-    try writeTo(f, ch) finally ch.close()
-  }
-
-  /** Bytes of raw data staged per channel write in [[writeTo]]. */
-  private val StreamChunk = 1 << 20
+  def write(f: H5File, path: String): Unit = ChannelOut.file(path)(writeTo(f, _))
 
   /** Serialize to HDF5 classic bytes on `out`: the metadata prefix
     * (superblock, heap, B-tree, symbol table, object headers) from one
-    * buffer, then each dataset's raw data through one reusable
-    * little-endian buffer of at most [[StreamChunk]] bytes.
+    * buffer, then each dataset's raw data through [[ChannelOut]]'s
+    * bounded little-endian buffer.
     */
   private def writeTo(file: H5File, out: java.nio.channels.WritableByteChannel): Unit = {
     validate(file)
@@ -426,37 +414,12 @@ object HDF5 {
 
     require(bb.position() == dataAddrs.head.toInt, "data layout bug")
     bb.flip()
-    drain(out, bb)
-
-    // raw data, chunk by chunk (every element is 8 bytes, so each dataset
-    // ends on its successor's address); bulk copies go through
-    // little-endian views (the views share the chunk's order)
-    val chunk = ByteBuffer.allocate(
-      math.min(StreamChunk.toLong, math.max(8L, dataSizes.foldLeft(0L)(math.max))).toInt)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    val perChunk = chunk.capacity / 8
-    ds.indices.foreach { i =>
-      val len = ds(i).data match {
-        case a: Array[Long] => a.length
-        case a: Array[Double] => a.length
-      }
-      var from = 0
-      while (from < len) {
-        val k = math.min(perChunk, len - from)
-        chunk.clear()
-        ds(i).data match {
-          case a: Array[Long] => chunk.asLongBuffer().put(a, from, k)
-          case a: Array[Double] => chunk.asDoubleBuffer().put(a, from, k)
-        }
-        chunk.limit(8 * k)
-        drain(out, chunk)
-        from += k
-      }
-    }
+    // raw data: every element is 8 bytes, so each dataset ends on its
+    // successor's address
+    val ch = new ChannelOut(out, ByteOrder.LITTLE_ENDIAN, dataSizes.foldLeft(0L)(math.max))
+    ch.write(bb)
+    ds.foreach(d => ch.write(d.data))
   }
-
-  private def drain(out: java.nio.channels.WritableByteChannel, b: ByteBuffer): Unit =
-    while (b.hasRemaining) out.write(b)
 
   // -------------------------------------------------------------- reading
 

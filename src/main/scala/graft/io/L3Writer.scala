@@ -16,11 +16,14 @@ import graft.model.JobConfig
   * `aggregate_functions.py:413-453` + sink loop `:724-757`).
   *
   * Every sink takes the grid frame [[GridAggregation.aggregate]] builds —
-  * `cell` plus the columns of [[GridAggregation.layout]] for the same job
-  * config — and reads that layout, never the column names, to decide how
-  * each column is packed, initialized, shaped and labelled. A grid column
-  * the layout does not list, or a layout column the grid lacks, is an
-  * `IllegalArgumentException` naming the column.
+  * `cell` (BIGINT) plus the columns of [[GridAggregation.layout]] for the
+  * same job config, each of its stat's type: DOUBLE statistics and cloud
+  * fractions, BIGINT counts, `ARRAY<BIGINT>` histograms and
+  * `ARRAY<ARRAY<BIGINT>>` joint histograms. A grid whose columns differ
+  * from that by name or type (nullability aside) is an
+  * `IllegalArgumentException` naming the column and both types. Each
+  * column's [[StatsPlan.Stat]], never its name, decides how its dataset is
+  * packed, initialized, shaped and labelled.
   *
   * The reference's own container is the `.h5` ([[writeH5]]); [[writeNetcdf]]
   * writes the same grid as netCDF-3 classic and [[write]] as one Parquet
@@ -31,7 +34,8 @@ import graft.model.JobConfig
   * encoder. The collect keeps Spark's binary rows ([[CellRows]]): packing
   * runs in the projection on the executors, and the driver copies each
   * value into a primitive `Array[Long]`/`Array[Double]` with no external
-  * `Row` and no boxing — the same path [[GridPlot.displayOutput]] reads.
+  * `Row` and no boxing — the same path [[GridPlot.displayOutput]] reads. A
+  * cell that appears in two rows of the grid is an error.
   *
   * Reference packing/naming rules reproduced:
   *   - int-packing `round(value/scale + offset)` with NaN/Inf/NULL -> fill
@@ -75,16 +79,20 @@ object L3Writer {
       throw new IllegalStateException(
         s"output path $path already exists (reference output-exists guard)")
 
-  /** The job's L3 layout, checked column for column against the grid. */
+  /** The job's L3 layout, checked against the grid: `cell` as BIGINT and
+    * every layout column as its stat's type, nullability aside, and no
+    * other column.
+    */
   private def layoutOf(grid: DataFrame, cfg: JobConfig): Seq[GridColumn] = {
     val layout = GridAggregation.layout(cfg)
-    val listed = layout.map(_.name).toSet
-    val present = grid.columns.toSet
-    require(present("cell"), "L3 grid has no cell column")
-    for (c <- grid.columns if c != "cell")
-      require(listed(c), s"grid column $c is not in the job config's L3 layout")
-    for (c <- layout)
-      require(present(c.name), s"L3 layout column ${c.name} is missing from the grid")
+    val want = (("cell" -> LongType) +: layout.map(c => c.name -> c.stat.dataType)).toMap
+    val have = grid.schema.map(f => f.name -> f.dataType).toMap
+    def show(t: Option[DataType]): String = t.fold("absent")(_.simpleString)
+    for (c <- (("cell" +: layout.map(_.name)) ++ grid.columns).distinct)
+      require(want.get(c).zip(have.get(c)).exists { case (w, h) =>
+        DataType.equalsStructurally(w, h, ignoreNullability = true)
+      }, s"L3 grid column $c: ${show(have.get(c))} in the grid, " +
+        s"${show(want.get(c))} in the job config's L3 layout")
     layout
   }
 
@@ -93,9 +101,9 @@ object L3Writer {
     * packing unless listed; counts and histograms never.
     */
   private def packingOf(c: GridColumn, packings: Map[String, Packing]): Option[Packing] =
-    c.kind match {
-      case Statistic => packings.get(c.name)
-      case CloudFraction => Some(packings.getOrElse(c.name, DefaultCloudFractionPacking))
+    c.stat match {
+      case _: Packable => packings.get(c.name)
+      case _: CloudFraction => Some(packings.getOrElse(c.name, DefaultCloudFractionPacking))
       case _ => None
     }
 
@@ -129,11 +137,17 @@ object L3Writer {
     (0 until cfg.grid.gridLon).map(i =>
       cfg.grid.region.lonMin + cfg.grid.lonGap / 2 + i * cfg.grid.lonGap)
 
-  /** CF attribute set for every output dataset, by layout kind, mirroring
+  /** The CF attributes of one L3 dataset: `units`, `long_name` (written
+    * only when non-empty) and, on every dataset but `GRID_Counts`,
+    * `_FillValue`, `scale_factor` and `add_offset`.
+    */
+  final case class CfAttrs(units: String, longName: String, scaling: Option[CfScaling])
+  final case class CfScaling(fill: Double, scale: Double, offset: Double)
+
+  /** The CF attributes of a layout column's dataset, by its stat, mirroring
     * the reference's HDF5 attrs (`addGridEntry`, `aggregate_functions.py:
-    * 446-453`, and the axis/GRID_Counts datasets `:727-741`):
+    * 446-453`, and the GRID_Counts dataset `:736-741`):
     *
-    *   - axis datasets: `units=degrees`, `long_name=*_boundaries`;
     *   - `GRID_Counts`: `units=none`, `long_name=grid_point_counts`;
     *   - counts/histograms: integer, `scale_factor=1, add_offset=0`
     *     (`:424-427`);
@@ -142,57 +156,49 @@ object L3Writer {
     *   - other statistics: the packing's scale/offset/fill, else the
     *     variable's own;
     *   - units/long_name are those `varAttrs` holds for the column's
-    *     variable;
-    *   - every gridded dataset's dims are labelled lat_bnd/lon_bnd
-    *     (`:447-448`).
+    *     variable.
+    *
+    * Every gridded dataset's dims are labelled lat_bnd/lon_bnd
+    * (`:447-448`) by the encoders.
     */
   def cfAttrs(
-      layout: Seq[GridColumn],
+      c: GridColumn,
       packings: Map[String, Packing],
-      varAttrs: Map[String, PixelSource.VarAttrs]): Map[String, Map[String, String]] = {
-    val axis = Map(
-      "lat_bnd" -> Map("units" -> "degrees", "long_name" -> "Latitude_boundaries"),
-      "lon_bnd" -> Map("units" -> "degrees", "long_name" -> "Longitude_boundaries"))
-    val data = layout.map { c =>
-      val a = varAttrs.get(c.variable)
-      val named = Map("units" -> a.fold("none")(_.units), "long_name" -> a.fold("")(_.longName))
-      val body = c.kind match {
-        case GridCounts => Map("units" -> "none", "long_name" -> "grid_point_counts")
-        case PixelCount | Histogram(_) =>
-          named ++ Map("scale_factor" -> "1.0", "add_offset" -> "0.0",
-            "_FillValue" -> a.fold("-9999.0")(_.fillValue.toString))
-        case Statistic | CloudFraction =>
-          val p = packingOf(c, packings)
-          named ++ Map(
-            "scale_factor" -> p.fold(a.fold(1.0)(_.scaleFactor))(_.scale).toString,
-            "add_offset" -> p.fold(a.fold(0.0)(_.addOffset))(_.offset).toString,
-            "_FillValue" -> p.fold(a.fold(-9999.0)(_.fillValue))(_.fill.toDouble).toString)
-      }
-      outputName(c.name) -> (Map("dims" -> "lat_bnd,lon_bnd") ++ body)
-    }.toMap
-    axis ++ data
+      varAttrs: Map[String, PixelSource.VarAttrs]): CfAttrs = {
+    val a = varAttrs.get(c.variable)
+    def named(fill: Double, scale: Double, offset: Double) =
+      CfAttrs(a.fold("none")(_.units), a.fold("")(_.longName),
+        Some(CfScaling(fill, scale, offset)))
+    c.stat match {
+      case GranuleCounts => CfAttrs("none", "grid_point_counts", None)
+      case _: Count | _: Histogram => named(a.fold(-9999.0)(_.fillValue), 1.0, 0.0)
+      case _ =>
+        val p = packingOf(c, packings)
+        named(p.fold(a.fold(-9999.0)(_.fillValue))(_.fill.toDouble),
+          p.fold(a.fold(1.0)(_.scaleFactor))(_.scale),
+          p.fold(a.fold(0.0)(_.addOffset))(_.offset))
+    }
   }
 
   /** One statistic of the collected grid as a dense row-major
-    * `[lat, lon(, bins...)]` array — what the `.h5` and `.nc` encoders share.
+    * `[lat, lon(, bins...)]` array with its CF attributes — what the `.h5`
+    * and `.nc` encoders share.
     */
-  private[io] sealed trait DenseVar { def name: String }
+  private[io] sealed trait DenseVar { def name: String; def attrs: CfAttrs }
   /** Integers: packed statistics, counts, histograms (`bins` = their extra dims). */
-  private[io] final case class DenseLongs(name: String, bins: Seq[Int], data: Array[Long])
-      extends DenseVar
+  private[io] final case class DenseLongs(
+      name: String, attrs: CfAttrs, bins: Seq[Int], data: Array[Long]) extends DenseVar
   /** Unpacked floating statistics (no packing listed). */
-  private[io] final case class DenseDoubles(name: String, data: Array[Double]) extends DenseVar
+  private[io] final case class DenseDoubles(name: String, attrs: CfAttrs, data: Array[Double])
+      extends DenseVar
   /** A cloud-fraction statistic both int-packed and as the reference's
     * unrounded `value/scale + offset` (non-finite and absent -> fill).
     */
   private[io] final case class DenseCloudFraction(
-      name: String, packed: Array[Long], unrounded: Array[Double]) extends DenseVar
+      name: String, attrs: CfAttrs, packed: Array[Long], unrounded: Array[Double])
+      extends DenseVar
 
-  private[io] final case class DenseL3(
-      nLat: Int,
-      nLon: Int,
-      attrs: Map[String, Map[String, String]],
-      vars: Seq[DenseVar])
+  private[io] final case class DenseL3(nLat: Int, nLon: Int, vars: Seq[DenseVar])
 
   /** Writes column `i` of each binary row into a dense row-major
     * `[lat, lon(, bins...)]` grid `out`, at the row's cell; NULL keeps
@@ -202,39 +208,22 @@ object L3Writer {
     def put(r: InternalRow, cell: Int): Unit
   }
 
-  /** A LongType or IntegerType column as int64. */
-  private[io] final class LongFiller(i: Int, dt: DataType, val out: Array[Long]) extends Filler {
-    private val wide = dt == LongType
-    def put(r: InternalRow, cell: Int): Unit =
-      if (!r.isNullAt(i)) out(cell) = if (wide) r.getLong(i) else r.getInt(i).toLong
+  /** A BIGINT column as int64. */
+  private[io] final class LongFiller(i: Int, val out: Array[Long]) extends Filler {
+    def put(r: InternalRow, cell: Int): Unit = if (!r.isNullAt(i)) out(cell) = r.getLong(i)
   }
 
-  /** A DoubleType, FloatType or DecimalType column as float64. A decimal
-    * converts through `java.math.BigDecimal.doubleValue`, the correctly
-    * rounded value an external `Row` gives (`Decimal.toDouble` divides a
-    * long by 10^scale and can differ in the last ulp).
+  /** A DOUBLE column as float64. */
+  private[io] final class DoubleFiller(i: Int, val out: Array[Double]) extends Filler {
+    def put(r: InternalRow, cell: Int): Unit = if (!r.isNullAt(i)) out(cell) = r.getDouble(i)
+  }
+
+  /** A 1-D or 2-D histogram column of BIGINT counts as int64 `[bins...]`
+    * per cell, zero where no pixel fell; a joint histogram is the
+    * row-major `[x][y]` nest. Every row's shape must equal `bins`.
     */
-  private[io] final class DoubleFiller(i: Int, dt: DataType, val out: Array[Double])
+  private[io] final class HistogramFiller(c: String, i: Int, bins: Seq[Int], val out: Array[Long])
       extends Filler {
-    def put(r: InternalRow, cell: Int): Unit =
-      if (!r.isNullAt(i)) out(cell) = dt match {
-        case DoubleType => r.getDouble(i)
-        case FloatType => r.getFloat(i).toDouble
-        case d: DecimalType => r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.doubleValue
-      }
-  }
-
-  /** A 1-D or 2-D histogram column of LongType or IntegerType counts as
-    * int64 `[bins...]` per cell, zero where no pixel fell; a joint
-    * histogram is the row-major `[x][y]` nest. Every row's shape must
-    * equal `bins`.
-    */
-  private[io] final class HistogramFiller(
-      c: String, i: Int, bins: Seq[Int], dt: DataType, val out: Array[Long]) extends Filler {
-    private val wide = dt match {
-      case ArrayType(ArrayType(t, _), _) => t == LongType
-      case ArrayType(t, _) => t == LongType
-    }
     private val nx = bins.head
     private val ny = if (bins.size == 2) bins(1) else 0
     private val width = bins.product
@@ -242,7 +231,7 @@ object L3Writer {
     private def copy(a: ArrayData, base: Int): Unit = {
       var x = 0
       while (x < a.numElements()) {
-        out(base + x) = if (wide) a.getLong(x) else a.getInt(x).toLong
+        out(base + x) = a.getLong(x)
         x += 1
       }
     }
@@ -265,31 +254,31 @@ object L3Writer {
     }
   }
 
-  /** A cell-keyed frame (column 0 = `cell`, LongType or IntegerType)
-    * collected ONCE as Spark's own binary rows, and densified by the
-    * [[Filler]]s it hands out, all in ONE pass over the rows ([[fill]]):
-    * nothing is boxed and no external `Row` is built. Each row lands at
-    * its `cell` (= `lat_idx * gridLon + lon_idx`, checked against the
-    * grid); cells absent from the (possibly sparse) frame keep the init.
+  /** A cell-keyed frame (column 0 = `cell`, BIGINT) collected ONCE as
+    * Spark's own binary rows, and densified by the [[Filler]]s it hands
+    * out, all in ONE pass over the rows ([[fill]]): nothing is boxed and no
+    * external `Row` is built. Each row lands at its `cell`
+    * (= `lat_idx * gridLon + lon_idx`, checked against the grid, and at
+    * most one row per cell); cells absent from the (possibly sparse) frame
+    * keep the init.
     *
     * The frame is collected to the driver: at most gridLat x gridLon rows
     * (64,800 at 1 degree) — the same driver-small bound the reference's
     * `h5py` writes rely on.
     */
   private[io] final class CellRows(frame: DataFrame, nLat: Int, nLon: Int) {
-    val schema: StructType = frame.schema
+    require(frame.schema(0).dataType == LongType,
+      s"grid cell column has type ${frame.schema(0).dataType.simpleString}, not bigint")
     private val rows: Array[InternalRow] = Bridge.collectInternal(frame)
     private val size = nLat * nLon
     private val cells: Array[Int] = {
-      val wide = schema(0).dataType match {
-        case LongType => true
-        case IntegerType => false
-        case other => throw new IllegalArgumentException(s"grid cell column has type $other")
-      }
+      val seen = new java.util.BitSet(size)
       rows.map { r =>
         require(!r.isNullAt(0), "grid cell is NULL")
-        val cell = if (wide) r.getLong(0) else r.getInt(0).toLong
+        val cell = r.getLong(0)
         require(cell >= 0 && cell < size.toLong, s"grid cell $cell outside ${nLat}x$nLon")
+        require(!seen.get(cell.toInt), s"grid cell $cell appears in more than one grid row")
+        seen.set(cell.toInt)
         cell.toInt
       }
     }
@@ -299,15 +288,15 @@ object L3Writer {
     def longs(i: Int, init: Long): LongFiller = {
       val out = new Array[Long](size)
       if (init != 0L) java.util.Arrays.fill(out, init)
-      add(new LongFiller(i, schema(i).dataType, out))
+      add(new LongFiller(i, out))
     }
     def doubles(i: Int, init: Double): DoubleFiller = {
       val out = new Array[Double](size)
       java.util.Arrays.fill(out, init)
-      add(new DoubleFiller(i, schema(i).dataType, out))
+      add(new DoubleFiller(i, out))
     }
     def histogram(c: String, i: Int, bins: Seq[Int]): HistogramFiller =
-      add(new HistogramFiller(c, i, bins, schema(i).dataType, new Array[Long](size * bins.product)))
+      add(new HistogramFiller(c, i, bins, new Array[Long](size * bins.product)))
 
     /** Run every filler handed out so far, in one pass over the rows. */
     def fill(): Unit = {
@@ -329,13 +318,12 @@ object L3Writer {
     * it is collected as binary rows and read with primitive getters, one
     * [[Filler]] per dense array, in one pass ([[CellRows]]).
     *
-    * Each column's kind decides its dense form: cells absent from the
+    * Each column's stat decides its dense form: cells absent from the
     * grid frame surface as `_FillValue` for statistics and 0 for
     * counts/histograms — the reference's init values (`+inf -> fill` /
     * zeros) after packing. Histograms take their bin counts from the
-    * layout, and every row's shape is checked against them. An unpacked
-    * statistic keeps its Spark type: integral -> int64, fractional or
-    * decimal -> float64.
+    * stat's edges, and every row's shape is checked against them. A packed
+    * statistic is int64, an unpacked one float64.
     */
   private[io] def densify(
       grid: DataFrame,
@@ -343,41 +331,30 @@ object L3Writer {
       packings: Map[String, Packing],
       varAttrs: Map[String, PixelSource.VarAttrs]): DenseL3 = {
     val layout = layoutOf(grid, cfg)
+    val cloudFractions = layout.filter(_.stat.isInstanceOf[CloudFraction])
     val projection = grid.select((col("cell") +: layout.map(packed(_, packings))) ++
-      layout.filter(_.kind == CloudFraction).map(c =>
-        packUnrounded(col(c.name), packingOf(c, packings).get).as(s"__unrounded_${c.name}")): _*)
+      cloudFractions.map(c => packUnrounded(col(c.name), packingOf(c, packings).get)
+        .as(s"__unrounded_${c.name}")): _*)
     val rows = new CellRows(projection, cfg.grid.gridLat, cfg.grid.gridLon)
-    val attrs = cfAttrs(layout, packings, varAttrs)
 
     // the dense arrays are allocated here and filled in place below
     val vars = layout.zipWithIndex.map { case (gc, k) =>
       val c = outputName(gc.name)
       val i = k + 1
-      def fill = attrs(c)("_FillValue").toDouble
-      (gc.kind, rows.schema(i).dataType) match {
-        case (CloudFraction, _) =>
-          val p = packingOf(gc, packings).get
-          DenseCloudFraction(c, rows.longs(i, p.fill).out,
-            rows.doubles(rows.schema.fieldIndex(s"__unrounded_${gc.name}"), p.fill.toDouble).out)
-        case (PixelCount | GridCounts, LongType | IntegerType) =>
-          DenseLongs(c, Nil, rows.longs(i, 0L).out)
-        case (Statistic, LongType | IntegerType) =>
-          DenseLongs(c, Nil, rows.longs(i, fill.toLong).out)
-        // DecimalType: user parquet (DuckDB/Hive writers) routinely types
-        // arithmetic results DECIMAL; stats over them surface here too
-        case (Statistic, DoubleType | FloatType | _: DecimalType) =>
-          DenseDoubles(c, rows.doubles(i, fill).out)
-        case (Histogram(bins @ Seq(_)), ArrayType(LongType | IntegerType, _)) =>
-          DenseLongs(c, bins, rows.histogram(c, i, bins).out)
-        case (Histogram(bins @ Seq(_, _)), ArrayType(ArrayType(LongType | IntegerType, _), _)) =>
-          DenseLongs(c, bins, rows.histogram(c, i, bins).out)
-        case (kind, other) =>
-          throw new IllegalArgumentException(
-            s"$c: unsupported grid column type $other for a $kind column in L3 export")
+      val attrs = cfAttrs(gc, packings, varAttrs)
+      (gc.stat, packingOf(gc, packings)) match {
+        case (_: CloudFraction, Some(p)) =>
+          val unrounded = 1 + layout.size + cloudFractions.indexOf(gc)
+          DenseCloudFraction(c, attrs, rows.longs(i, p.fill).out,
+            rows.doubles(unrounded, p.fill.toDouble).out)
+        case (h: Histogram, _) => DenseLongs(c, attrs, h.bins, rows.histogram(c, i, h.bins).out)
+        case (_: Count, _) => DenseLongs(c, attrs, Nil, rows.longs(i, 0L).out)
+        case (_, Some(p)) => DenseLongs(c, attrs, Nil, rows.longs(i, p.fill).out)
+        case _ => DenseDoubles(c, attrs, rows.doubles(i, attrs.scaling.get.fill).out)
       }
     }
     rows.fill()
-    DenseL3(cfg.grid.gridLat, cfg.grid.gridLon, attrs, vars)
+    DenseL3(cfg.grid.gridLat, cfg.grid.gridLon, vars)
   }
 
   /** Full L3 export as a REAL netCDF-3 classic file — the binary,
@@ -424,32 +401,26 @@ object L3Writer {
         s"$c: packed value $v exceeds netCDF-3 classic Int32 range")
       v.toInt
     }
-    def atts(c: String, fillAsInt: Boolean): Seq[Att] = {
-      val m = l3.attrs.getOrElse(c, Map.empty)
-      Seq(
-        m.get("units").map(u => Att("units", CharAtt(u))),
-        m.get("long_name").filter(_.nonEmpty).map(l => Att("long_name", CharAtt(l))),
-        m.get("_FillValue").map { f =>
-          if (fillAsInt) Att("_FillValue", IntAtt(Seq(f.toDouble.toInt)))
-          else Att("_FillValue", DoubleAtt(Seq(f.toDouble)))
-        },
-        m.get("scale_factor").map(s => Att("scale_factor", DoubleAtt(Seq(s.toDouble)))),
-        m.get("add_offset").map(o => Att("add_offset", DoubleAtt(Seq(o.toDouble))))
-      ).flatten
-    }
+    def atts(a: CfAttrs, fillAsInt: Boolean): Seq[Att] =
+      Seq(Att("units", CharAtt(a.units))) ++
+        Some(a.longName).filter(_.nonEmpty).map(l => Att("long_name", CharAtt(l))) ++
+        a.scaling.toSeq.flatMap(s => Seq(
+          Att("_FillValue", if (fillAsInt) IntAtt(Seq(s.fill.toInt)) else DoubleAtt(Seq(s.fill))),
+          Att("scale_factor", DoubleAtt(Seq(s.scale))),
+          Att("add_offset", DoubleAtt(Seq(s.offset)))))
 
     val dataVars = l3.vars.map {
-      case DenseLongs(c, bins, data) =>
+      case DenseLongs(c, a, bins, data) =>
         val binDims = bins match {
           case Seq(nb) => Seq(Dim(s"${c}_bin", nb))
           case Seq(nx, ny) => Seq(Dim(s"${c}_bin_x", nx), Dim(s"${c}_bin_y", ny))
           case _ => Nil
         }
-        Var(c, Seq(0, 1) ++ binDims.map(dimId), NcInt, atts(c, fillAsInt = true), ints(c, data))
-      case DenseDoubles(c, data) =>
-        Var(c, Seq(0, 1), NcDouble, atts(c, fillAsInt = false), data)
-      case DenseCloudFraction(c, packed, _) =>
-        Var(c, Seq(0, 1), NcInt, atts(c, fillAsInt = true), ints(c, packed))
+        Var(c, Seq(0, 1) ++ binDims.map(dimId), NcInt, atts(a, fillAsInt = true), ints(c, data))
+      case DenseDoubles(c, a, data) =>
+        Var(c, Seq(0, 1), NcDouble, atts(a, fillAsInt = false), data)
+      case DenseCloudFraction(c, a, packed, _) =>
+        Var(c, Seq(0, 1), NcInt, atts(a, fillAsInt = true), ints(c, packed))
     }
 
     val axisVars = Seq(
@@ -509,28 +480,22 @@ object L3Writer {
     val l3 = densify(grid, cfg, packings, varAttrs)
     val latLon = Seq(l3.nLat, l3.nLon)
 
-    def atts(c: String, rank: Int, fillAsLong: Boolean): Seq[Att] = {
-      val m = l3.attrs.getOrElse(c, Map.empty)
-      Seq(
-        Some(Att("DIMENSION_LABELS", StrArrayAtt(Seq("lat_bnd", "lon_bnd").padTo(rank, "")))),
-        m.get("units").map(u => Att("units", StrAtt(u))),
-        m.get("long_name").filter(_.nonEmpty).map(l => Att("long_name", StrAtt(l))),
-        m.get("_FillValue").map { f =>
-          if (fillAsLong) Att("_FillValue", LongAtt(f.toDouble.toLong))
-          else Att("_FillValue", DoubleAtt(f.toDouble))
-        },
-        m.get("scale_factor").map(s => Att("scale_factor", DoubleAtt(s.toDouble))),
-        m.get("add_offset").map(o => Att("add_offset", DoubleAtt(o.toDouble)))
-      ).flatten
-    }
+    def atts(a: CfAttrs, rank: Int, fillAsLong: Boolean): Seq[Att] =
+      Seq(Att("DIMENSION_LABELS", StrArrayAtt(Seq("lat_bnd", "lon_bnd").padTo(rank, ""))),
+        Att("units", StrAtt(a.units))) ++
+        Some(a.longName).filter(_.nonEmpty).map(l => Att("long_name", StrAtt(l))) ++
+        a.scaling.toSeq.flatMap(s => Seq(
+          Att("_FillValue", if (fillAsLong) LongAtt(s.fill.toLong) else DoubleAtt(s.fill)),
+          Att("scale_factor", DoubleAtt(s.scale)),
+          Att("add_offset", DoubleAtt(s.offset))))
 
     val dataSets = l3.vars.map {
-      case DenseLongs(c, bins, data) =>
-        Dataset(c, latLon ++ bins, H5Int64, atts(c, 2 + bins.size, fillAsLong = true), data)
-      case DenseDoubles(c, data) =>
-        Dataset(c, latLon, H5Float64, atts(c, 2, fillAsLong = false), data)
-      case DenseCloudFraction(c, _, unrounded) =>
-        Dataset(c, latLon, H5Float64, atts(c, 2, fillAsLong = false), unrounded)
+      case DenseLongs(c, a, bins, data) =>
+        Dataset(c, latLon ++ bins, H5Int64, atts(a, 2 + bins.size, fillAsLong = true), data)
+      case DenseDoubles(c, a, data) =>
+        Dataset(c, latLon, H5Float64, atts(a, 2, fillAsLong = false), data)
+      case DenseCloudFraction(c, a, _, unrounded) =>
+        Dataset(c, latLon, H5Float64, atts(a, 2, fillAsLong = false), unrounded)
     }
 
     val axes = Seq(

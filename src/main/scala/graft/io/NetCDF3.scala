@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.ByteBuffer
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
 /** Minimal pure-JVM netCDF-3 "classic" (CDF-1) writer + reader.
@@ -161,13 +161,23 @@ object NetCDF3 {
     atts.foreach(putAtt(bb, _))
   }
 
-  /** Serialize to netCDF-3 classic bytes. */
-  def toBytes(f: NcFile): Array[Byte] = {
+  /** Serialize to netCDF-3 classic bytes ([[writeTo]] into memory). */
+  def toBytes(f: NcFile): Array[Byte] = ChannelOut.bytes(writeTo(f, _))
+
+  /** Write the file to `path` (created or truncated), streamed: no copy of
+    * the whole file is ever built in memory.
+    */
+  def write(f: NcFile, path: String): Unit = ChannelOut.file(path)(writeTo(f, _))
+
+  /** Serialize to netCDF-3 classic bytes on `out`: the header from one
+    * buffer, then each variable's data through [[ChannelOut]]'s bounded
+    * big-endian buffer, zero-padded to a 4-byte boundary.
+    */
+  private def writeTo(f: NcFile, out: java.nio.channels.WritableByteChannel): Unit = {
     validate(f)
     val hdr = headerSize(f)
     val begins = f.vars.scanLeft(hdr)((off, v) => off + vsize(v))
-    val total = begins.last
-    val bb = ByteBuffer.allocate(total) // big-endian by default
+    val bb = ByteBuffer.allocate(hdr) // big-endian by default
     bb.put("CDF".getBytes(StandardCharsets.US_ASCII)).put(1.toByte)
     bb.putInt(0) // numrecs: no record dimension
     bb.putInt(if (f.dims.isEmpty) 0 else TagDimension)
@@ -186,24 +196,14 @@ object NetCDF3 {
       bb.putInt(begin)
     }
     require(bb.position() == hdr, s"header layout bug: ${bb.position()} != $hdr")
+    bb.flip()
+    val ch = new ChannelOut(out, ByteOrder.BIG_ENDIAN, f.vars.map(vsize).foldLeft(0)(math.max))
+    ch.write(bb)
     f.vars.foreach { v =>
-      val before = bb.position()
-      v.data match {
-        case a: Array[Byte] => bb.put(a)
-        case a: Array[Short] => a.foreach(bb.putShort)
-        case a: Array[Int] => a.foreach(bb.putInt)
-        case a: Array[Float] => a.foreach(bb.putFloat)
-        case a: Array[Double] => a.foreach(bb.putDouble)
-      }
-      val used = bb.position() - before
-      (used until pad4(used)).foreach(_ => bb.put(0.toByte))
+      ch.write(v.data)
+      ch.write(ByteBuffer.allocate(vsize(v) - dataLength(v) * v.ncType.size))
     }
-    require(bb.position() == total, "data layout bug")
-    bb.array()
   }
-
-  def write(f: NcFile, path: String): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), toBytes(f))
 
   // ------------------------------------------------------------- reading
   private def getName(bb: ByteBuffer): String = {

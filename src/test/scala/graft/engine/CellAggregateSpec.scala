@@ -181,8 +181,9 @@ class CellAggregateSpec extends SparkSpec {
       .set("spark.testing.reservedMemory", "0")
     val tmm = new org.apache.spark.memory.TaskMemoryManager(
       org.apache.spark.memory.UnifiedMemoryManager(conf, 1), 0L)
-    val spec = CellAggSpec(Seq(CellVar("a", 1, Nil, hist = false, None)), -1, -1,
-      stringIds = false, GridAggregation.layout(JobConfig(vars = Seq(VarSpec("a")))))
+    val spec = CellAggSpec(GridAggregation.layout(JobConfig(vars = Seq(VarSpec("a")))),
+      cellInput = 0, varInputs = Map("a" -> 1), flagInput = -1, granuleInput = -1,
+      stringIds = false)
     val partial = new CellState(spec, (_, _) => ())
     (0 until 50000).foreach(c => partial.update(new GenericInternalRow(Array[Any](c.toLong, 1.0))))
     val mem = new StateMemory(tmm, 7)

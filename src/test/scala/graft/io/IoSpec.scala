@@ -475,11 +475,10 @@ class IoSpec extends SparkSpec {
     assert(missing.getMessage.contains("Cloud_Top_Pressure_Day_Mean"))
   }
 
-  /** The densifier's type matrix on a 2 x 3 grid (90 x 120 degree cells):
-    * an IntegerType `cell` and counts, unpacked FloatType and DecimalType
-    * statistics (precision <= 18 and > 18), IntegerType 1-D (3 bins) and
-    * 2-D (3 x 2) histograms and a FloatType cloud fraction. Cells 1 and 5
-    * are populated, the other four absent; cell 5's Maximum is NULL.
+  /** The densifier on a 2 x 3 grid (90 x 120 degree cells) of the
+    * engine's types: unpacked statistics, counts, a 1-D (3 bins) and a 2-D
+    * (3 x 2) histogram and the cloud fraction. Cells 1 and 5 are
+    * populated, the other four absent; cell 5's Maximum is NULL.
     */
   private object TypeFixture {
     val cfg = JobConfig(
@@ -489,22 +488,16 @@ class IoSpec extends SparkSpec {
         VarSpec("v", binEdges = Seq(0.0, 1.0, 2.0, 3.0),
           joint = Some(JointSpec("w", Seq(0.0, 1.0, 2.0)))),
         VarSpec(graft.engine.GridAggregation.CloudFractionVar)))
-    // 6624604306319069.56 at DECIMAL(18, 2): the compact long 662460430631906956
-    // divided by 100 in double is 6624604306319069.0, one ulp off the
-    // correctly rounded 6624604306319070.0 an external Row gives
-    val maxDecimal = BigDecimal("6624604306319069.56")
-    def grid(hist5: Seq[Int] = Seq(0, 3, 0),
-        jhist5: Seq[Seq[Int]] = Seq(Seq(0, 1), Seq(2, 0), Seq(0, 0))) = Seq(
-      (1, 1.5f, maxDecimal, BigDecimal("12345678901234567890.0123456789"), 7,
-        Seq(1, 2, 4), Seq(Seq(1, 0), Seq(0, 2), Seq(3, 1)), 0.25f, 0.75f, 0.5f, 8, 2),
-      (5, -2.25f, null: BigDecimal, BigDecimal("-0.0000000001"), 3,
-        hist5, jhist5, 0.0f, 1.0f, 0.375f, 4, 1))
+    def grid(hist5: Seq[Long] = Seq(0L, 3L, 0L),
+        jhist5: Seq[Seq[Long]] = Seq(Seq(0L, 1L), Seq(2L, 0L), Seq(0L, 0L))) = Seq(
+      (1L, 1.5, Option(6624604306319070.0), 1.2345678901234567e19, 7L,
+        Seq(1L, 2L, 4L), Seq(Seq(1L, 0L), Seq(0L, 2L), Seq(3L, 1L)), 0.25, 0.75, 0.5, 8L, 2L),
+      (5L, -2.25, Option.empty[Double], -1.0e-10, 3L,
+        hist5, jhist5, 0.0, 1.0, 0.375, 4L, 1L))
       .toDF("cell", "v_Minimum", "v_Maximum", "v_Mean", "v_Pixel_Counts",
         "v_Histogram_Counts", "v_Jhisto_vs_w", "cloud_fraction_Minimum",
         "cloud_fraction_Maximum", "cloud_fraction_Mean", "cloud_fraction_Pixel_Counts",
         "GRID_Counts")
-      .withColumn("v_Maximum", $"v_Maximum".cast(DecimalType(18, 2)))
-      .withColumn("v_Mean", $"v_Mean".cast(DecimalType(30, 10)))
     val varAttrs = Map("v" -> PixelSource.VarAttrs(
       units = "K", longName = "v", fillValue = -32767, scaleFactor = 1.0, addOffset = 0.0))
   }
@@ -512,9 +505,6 @@ class IoSpec extends SparkSpec {
   test("the .h5 and .nc sinks densify every grid type the layout accepts") {
     import TypeFixture._
     val g = grid()
-    assert(g.schema("cell").dataType == IntegerType &&
-      g.schema("v_Minimum").dataType == FloatType &&
-      g.schema("v_Histogram_Counts").dataType == ArrayType(IntegerType, containsNull = false))
     val dir = Files.createTempDirectory("l3types")
     val h5Path = dir.resolve("l3.h5").toString
     val ncPath = dir.resolve("l3.nc").toString
@@ -530,8 +520,6 @@ class IoSpec extends SparkSpec {
 
     // statistics: absent cells and NULL are the variable's fill
     val F = -32767.0
-    assert(maxDecimal.toDouble == 6624604306319070.0 &&
-      662460430631906956L.toDouble / 100 == 6624604306319069.0)
     val both = Map(
       "v_Minimum" -> Seq(F, 1.5, F, F, F, -2.25),
       "v_Maximum" -> Seq(F, 6624604306319070.0, F, F, F, F),
@@ -561,11 +549,53 @@ class IoSpec extends SparkSpec {
     def shapeError(bad: DataFrame): String = intercept[IllegalArgumentException] {
       L3Writer.writeH5(bad, cfg, dir.resolve(s"bad${System.nanoTime()}.h5").toString)
     }.getMessage
-    assert(shapeError(grid(hist5 = Seq(0, 3))).contains(
+    assert(shapeError(grid(hist5 = Seq(0L, 3L))).contains(
       "v_Histogram_Counts: histogram shape 2 != 3"))
-    assert(shapeError(grid(jhist5 = Seq(Seq(0, 1), Seq(2, 0)))).contains(
+    assert(shapeError(grid(jhist5 = Seq(Seq(0L, 1L), Seq(2L, 0L)))).contains(
       "v_Jhisto_vs_w: histogram shape 2 x 2 != 3 x 2"))
-    assert(shapeError(grid(jhist5 = Seq(Seq(0, 1), Seq(2, 0, 0), Seq(0, 0)))).contains(
+    assert(shapeError(grid(jhist5 = Seq(Seq(0L, 1L), Seq(2L, 0L, 0L), Seq(0L, 0L)))).contains(
       "v_Jhisto_vs_w: histogram shape"))
+  }
+
+  test("the sinks reject a grid column of another type, naming the column and both types") {
+    import TypeFixture._
+    val dir = Files.createTempDirectory("l3typed")
+    for ((c, bad, want) <- Seq(
+        ("cell", IntegerType, LongType),
+        ("v_Minimum", FloatType, DoubleType),
+        ("v_Maximum", DecimalType(18, 2), DoubleType),
+        ("v_Mean", DecimalType(30, 10), DoubleType),
+        ("v_Pixel_Counts", IntegerType, LongType),
+        ("v_Histogram_Counts", ArrayType(IntegerType, containsNull = false),
+          ArrayType(LongType, containsNull = false)),
+        ("v_Jhisto_vs_w", ArrayType(ArrayType(IntegerType)), ArrayType(ArrayType(LongType))),
+        ("cloud_fraction_Mean", FloatType, DoubleType),
+        ("GRID_Counts", IntegerType, LongType))) {
+      val g = grid().withColumn(c, col(c).cast(bad))
+      for ((sink, write) <- Seq[(String, String => Unit)](
+          "h5" -> (L3Writer.writeH5(g, cfg, _)),
+          "nc" -> (L3Writer.writeNetcdf(g, cfg, _)))) {
+        val e = intercept[IllegalArgumentException] {
+          write(dir.resolve(s"$c.$sink").toString)
+        }
+        assert(e.getMessage.contains(s"L3 grid column $c: ${bad.simpleString} in the grid, " +
+          s"${want.simpleString} in the job config's L3 layout"), e.getMessage)
+      }
+    }
+  }
+
+  test("a grid with a cell in two rows fails, naming the cell") {
+    import PrefixFixture._
+    val dir = Files.createTempDirectory("l3dup")
+    val twice = grid.union(grid)
+    for (e <- Seq(
+        intercept[IllegalArgumentException] {
+          L3Writer.writeH5(twice, cfg, dir.resolve("twice.h5").toString)
+        },
+        intercept[IllegalArgumentException] {
+          L3Writer.writeNetcdf(twice, cfg, dir.resolve("twice.nc").toString)
+        }))
+      assert("grid cell (21|42) appears in more than one grid row".r
+        .findFirstIn(e.getMessage).nonEmpty, e.getMessage)
   }
 }
