@@ -34,19 +34,14 @@ import graft.model.{JobConfig, VarSpec}
   */
 object GridAggregation {
 
-  /** Column roles the pixel frame must provide. */
-  final case class PixelCols(
-      lat: String = "lat",
-      lon: String = "lon",
-      granule: String = "granule_id",
-      cmFlag: String = "cm_flag")
-
   /** Filter to region, derive the grid cell id, drop out-of-grid pixels
-    * (reference P3 + P5, `aggregate_functions.py:297-363`).
+    * (reference P3 + P5, `aggregate_functions.py:297-363`). The pixel
+    * frame's columns are named as in FIXTURES §1: `lat`, `lon`,
+    * `granule_id` and `cm_flag`.
     */
-  def withCell(pixels: DataFrame, cfg: JobConfig, cols: PixelCols = PixelCols()): DataFrame = {
-    val lat = col(cols.lat)
-    val lon = col(cols.lon)
+  def withCell(pixels: DataFrame, cfg: JobConfig): DataFrame = {
+    val lat = col("lat")
+    val lon = col("lon")
     val g = cfg.grid
     pixels
       .filter(GridExprs.inRegion(lat, lon, g.region))
@@ -72,24 +67,24 @@ object GridAggregation {
     * histograms always were), the cloud-mask flag as DOUBLE and the
     * granule id as a string or BIGINT.
     */
-  def aggregate(pixels: DataFrame, cfg: JobConfig, cols: PixelCols = PixelCols()): DataFrame = {
+  def aggregate(pixels: DataFrame, cfg: JobConfig): DataFrame = {
     val columns = layout(cfg)
     require(columns.nonEmpty, "JobConfig.vars must list a variable with a statistic to compute")
     val partners = columns.collect { case GridColumn(_, _, JointHistogram(p, _, _)) => p }
     val values = (columns.map(_.variable).filterNot(_ == CloudFractionVar) ++ partners).distinct
     val withCf = wantsCloudFraction(cfg)
-    val cells = withCell(pixels, cfg, cols)
-    val granuleType = if (withCf) cells.schema(cols.granule).dataType else StringType
+    val cells = withCell(pixels, cfg)
+    val granuleType = if (withCf) cells.schema("granule_id").dataType else StringType
     val granule = granuleType match {
-      case StringType => col(cols.granule)
-      case ByteType | ShortType | IntegerType | LongType => col(cols.granule).cast(LongType)
+      case StringType => col("granule_id")
+      case ByteType | ShortType | IntegerType | LongType => col("granule_id").cast(LongType)
       case t => throw new IllegalArgumentException(
         s"cloud_fraction needs a string or integral granule id, got ${t.simpleString}")
     }
     val input = cells.select(Seq(col("cell").cast(LongType).as("cell")) ++
       values.map(n => col(n).cast(DoubleType).as(n)) ++
-      (if (withCf) Seq(col(cols.cmFlag).cast(DoubleType).as(cols.cmFlag),
-        granule.as(cols.granule)) else Nil): _*)
+      (if (withCf) Seq(col("cm_flag").cast(DoubleType).as("cm_flag"),
+        granule.as("granule_id")) else Nil): _*)
     val spec = CellAggSpec(columns,
       cellInput = 0,
       varInputs = values.zipWithIndex.map { case (n, i) => n -> (1 + i) }.toMap,
@@ -145,8 +140,8 @@ object GridAggregation {
     * sum(TOT) and GRID_Counts = #granules with >= 1 determined pixel (A8),
     * where TOT = #(0 <= flag <= 3) and CLD = #(0 <= flag <= 1).
     */
-  def cloudFraction(pixels: DataFrame, cfg: JobConfig, cols: PixelCols = PixelCols()): DataFrame =
-    aggregate(pixels, cfg.copy(vars = Seq(VarSpec(CloudFractionVar))), cols)
+  def cloudFraction(pixels: DataFrame, cfg: JobConfig): DataFrame =
+    aggregate(pixels, cfg.copy(vars = Seq(VarSpec(CloudFractionVar))))
 
   /** Granule-coverage count per cell for one variable (reference A8,
     * `GRID_Counts`, `aggregate_functions.py:245-247`): the number of
@@ -157,10 +152,9 @@ object GridAggregation {
     * times the coverage. The engine exposes the per-variable count — the
     * meaningful semantic; multiply by k for bit parity.)
     */
-  def gridCounts(pixels: DataFrame, cfg: JobConfig, varName: String,
-      cols: PixelCols = PixelCols()): DataFrame =
-    withCell(pixels, cfg, cols)
-      .groupBy(col("cell"), col(cols.granule))
+  def gridCounts(pixels: DataFrame, cfg: JobConfig, varName: String): DataFrame =
+    withCell(pixels, cfg)
+      .groupBy(col("cell"), col("granule_id"))
       .agg(count(col(varName)).as("n"))
       .filter(col("n") > 0)
       .groupBy(col("cell"))
@@ -183,15 +177,14 @@ object GridAggregation {
       pixels: DataFrame,
       cfg: JobConfig,
       varName: String,
-      edges: Seq[Double],
-      cols: PixelCols = PixelCols()): DataFrame = {
+      edges: Seq[Double]): DataFrame = {
     // two-phase: per (cell, granule) the histogram buffer + the TOTAL pixel
     // count (including out-of-range and null — numpy's .size counts NaNs),
     // drop single-pixel granule-cells, explode bins, merge per cell.
     // Two hash-partition shuffles, no window sort; the second input is
     // granule-level partials (tiny).
-    withCell(pixels, cfg, cols)
-      .groupBy(col("cell"), col(cols.granule))
+    withCell(pixels, cfg)
+      .groupBy(col("cell"), col("granule_id"))
       .agg(
         count(lit(1)).as("granule_pix"),
         graft.agg.HistogramFunctions.histogram1d(col(varName), edges).as("h"))

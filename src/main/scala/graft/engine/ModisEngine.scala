@@ -5,7 +5,6 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.engine.GridAggregation.PixelCols
 import graft.expr.GridExprs
 import graft.model.JobConfig
 
@@ -33,17 +32,16 @@ object ModisEngine {
       pixels: DataFrame,
       cfg: JobConfig,
       d0: Int,
-      d1: Int,
-      cols: PixelCols = PixelCols()): DataFrame = {
+      d1: Int): DataFrame = {
     // correct the cloud-mask flag only when present — a frame without it is
     // legal when no cloud-fraction statistic is configured
     val varNames = cfg.vars.map(_.name).filterNot(_ == CloudFractionVar) ++
-      (if (pixels.columns.contains(cols.cmFlag)) Seq(cols.cmFlag) else Nil)
+      (if (pixels.columns.contains("cm_flag")) Seq("cm_flag") else Nil)
     // one withColumns, so the plan is analyzed once, not once per variable;
     // the ListMap keeps the column order of a fold of withColumn calls
     pixels.withColumns(ListMap(varNames.distinct.map { v =>
       v -> GridExprs.dayDefinitionNullOut(
-        col(v), col("day_of_year"), col("hour"), col(cols.lon),
+        col(v), col("day_of_year"), col("hour"), col("lon"),
         d0, d1, cfg.shiftHour)
     }: _*))
   }
@@ -55,17 +53,16 @@ object ModisEngine {
   def dailyL3(
       pixels: DataFrame,
       cfg: JobConfig,
-      dayWindow: Option[(Int, Int)] = None,
-      cols: PixelCols = PixelCols()): DataFrame = {
+      dayWindow: Option[(Int, Int)] = None): DataFrame = {
     val corrected = dayWindow.fold(pixels) { case (d0, d1) =>
-      withDayDefinition(pixels, cfg, d0, d1, cols)
+      withDayDefinition(pixels, cfg, d0, d1)
     }
     val sampled =
       if (cfg.sampling > 1)
         corrected.filter(GridExprs.systematicSample(col("row"), col("col"), cfg.sampling))
       else corrected
 
-    GridAggregation.aggregate(sampled, cfg, cols)
+    GridAggregation.aggregate(sampled, cfg)
   }
 
   /** Multi-day (e.g. monthly) L3 aggregation in ONE distributed pass —
@@ -86,12 +83,11 @@ object ModisEngine {
       pixels: DataFrame,
       cfg: JobConfig,
       dStart: Int,
-      dEnd: Int,
-      cols: PixelCols = PixelCols()): DataFrame = {
+      dEnd: Int): DataFrame = {
     val doy = col("day_of_year")
     val inRange =
       (doy >= dStart && doy <= dEnd) ||
         (doy === dEnd + 1 && col("hour") < cfg.shiftHour)
-    dailyL3(pixels.filter(inRange), cfg, Some((dEnd, dEnd + 1)), cols)
+    dailyL3(pixels.filter(inRange), cfg, Some((dEnd, dEnd + 1)))
   }
 }

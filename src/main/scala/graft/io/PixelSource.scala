@@ -37,7 +37,8 @@ object PixelSource {
       .otherwise((raw - attrs.addOffset) * attrs.scaleFactor)
 
   /** Attach the attribute set as column Metadata (survives projections and
-    * parquet round-trips; the L3 sink reads them back for packing rules).
+    * parquet round-trips; [[readAttrs]] reads it back). No sink reads column
+    * metadata: the L3 sinks take attributes as a `varAttrs` argument.
     */
   def attrsMetadata(attrs: VarAttrs): Metadata =
     new MetadataBuilder()

@@ -24,7 +24,8 @@ import graft.ops.Lineage.LineageOps
   *     refresh (a slim 2-column table; the overwrite is the artifact's
   *     only corpus-sized write and rides a lineage cut, the
   *     [[LakeOps]] erasure discipline).
-  *   - `segments/` — the idempotence ledger shared with [[IndexOps]].
+  *   - `segments/.ledger/components/` — the idempotence ledger, one
+  *     marker file per refreshed segment ([[IndexOps.coveredSegments]]).
   *
   * Incremental merge = the textbook label-contraction argument: new
   * edges (delta×delta ∪ delta×base, both inverted-index equi-joins
@@ -94,7 +95,7 @@ object ComponentStore {
 
     val asgPath = s"$storeDir/assignment"
     val next: DataFrame =
-      if (!IndexOps.hasParquet(asgPath)) {
+      if (!IndexOps.hasParquet(spark, asgPath)) {
         // first segment: plain components over the internal pair graph
         val edges = jaccardEdges(newIdx, newSizes, newIdx, newSizes,
           threshold, selfJoin = true)
@@ -172,7 +173,7 @@ object ComponentStore {
   // zero-row segment writes no parquet part files, so schema inference
   // has nothing to read — fall back to typed empty frames.
   private def readShingles(spark: SparkSession, storeDir: String): DataFrame =
-    if (IndexOps.hasParquet(s"$storeDir/shingles"))
+    if (IndexOps.hasParquet(spark, s"$storeDir/shingles"))
       spark.read.parquet(s"$storeDir/shingles")
     else {
       import spark.implicits._
@@ -180,7 +181,7 @@ object ComponentStore {
     }
 
   private def readSizes(spark: SparkSession, storeDir: String): DataFrame =
-    if (IndexOps.hasParquet(s"$storeDir/sizes"))
+    if (IndexOps.hasParquet(spark, s"$storeDir/sizes"))
       spark.read.parquet(s"$storeDir/sizes")
     else {
       import spark.implicits._
@@ -193,7 +194,7 @@ object ComponentStore {
     * zero rows) degrades to the typed empty frame.
     */
   def assignment(spark: SparkSession, storeDir: String): DataFrame =
-    if (IndexOps.hasParquet(s"$storeDir/assignment"))
+    if (IndexOps.hasParquet(spark, s"$storeDir/assignment"))
       spark.read.parquet(s"$storeDir/assignment")
     else {
       import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -174,6 +174,15 @@ object GraphOps {
     * integer recurrence reproduces it exactly (a double-precision PageRank
     * cannot make either guarantee: float sums depend on reduction order).
     *
+    * Personalized PageRank (random walk with restart — the "related items
+    * for THIS user/item" scoring behind graph recommenders) is the same
+    * recurrence with a non-empty `seeds` set: the teleport mass returns to
+    * the seeds instead of spreading uniformly, so `scale div n` above
+    * becomes `scale div |seeds|` on each seed and 0 elsewhere (no node
+    * count is taken). Nodes the walk cannot reach from the seeds stay at
+    * exact 0 — the locality that makes it a candidate generator. Seeds
+    * with `redistributeDangling` are rejected.
+    *
     * Semantics notes: parallel edges are collapsed (simple graph).
     * Dangling-node mass (nodes with no out-edges) is DROPPED by default —
     * the common power-iteration simplification — so `sum(rank) <= scale`
@@ -211,8 +220,11 @@ object GraphOps {
       dampNum: Long = 85L,
       dampDen: Long = 100L,
       scale: Long = 1000000000000L,
-      redistributeDangling: Boolean = false): DataFrame = {
+      redistributeDangling: Boolean = false,
+      seeds: Seq[Long] = Nil): DataFrame = {
     require(iters >= 0 && dampNum >= 0 && dampDen > 0 && dampNum <= dampDen)
+    require(seeds.isEmpty || !redistributeDangling,
+      "pageRank: seeds and redistributeDangling cannot be combined")
     // overflow guard for the docstring's safety claim: the two products
     // in the recurrence are init*(dampDen-dampNum) and dampNum*sum, and
     // both factors' rank-mass side is bounded by `scale`
@@ -227,9 +239,14 @@ object GraphOps {
       .union(edges.select(col("dst").as("node")))
       .distinct()
       .cache()
-    val n = math.max(nodes.count(), 1L)
-    val init = scale / n
+    val seedSet = seeds.distinct
+    lazy val n = math.max(nodes.count(), 1L) // the seeded form never counts
+    val init = scale / (if (seedSet.isEmpty) n else seedSet.length)
     val base = init * (dampDen - dampNum) / dampDen
+    // teleport mass: on every node, or on the seeds alone
+    def teleport(mass: Long): Column =
+      if (seedSet.isEmpty) lit(mass)
+      else when(col("node").isin(seedSet: _*), lit(mass)).otherwise(lit(0L))
 
     // outdeg joined in once; partitioned by src so each iteration's
     // rank-join reuses this layout instead of re-shuffling the edges.
@@ -251,7 +268,7 @@ object GraphOps {
           .select(col("node")).cache()
       else null
 
-    var ranks = nodes.select(col("node"), lit(init).as("rank"))
+    var ranks = nodes.select(col("node"), teleport(init).as("rank"))
     for (i <- 1 to iters) {
       // dangling mode consumes the rank table TWICE per iteration (edge
       // contributions + the dangling scalar); without a cache the second
@@ -287,7 +304,7 @@ object GraphOps {
           nodes
             .join(sums, nodes("node") === sums("dst"), "left")
             .select(col("node"),
-              (lit(base) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
+              (teleport(base) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
                 .as("rank"))
         }
       ranks = if (i % 4 == 0 && i < iters) next.cutLineage() else next
@@ -554,76 +571,6 @@ object GraphOps {
       h += 1
     }
     visited
-  }
-
-  /** Personalized PageRank (random walk with restart to a SEED set —
-    * the "related items for THIS user/item" scoring behind graph
-    * recommenders): identical fixed-point arithmetic to [[pageRank]],
-    * except the teleport mass returns to the seeds instead of spreading
-    * uniformly — `r_{t+1}(v) = (1-d)·s(v) + d·Σ r_t(u)/outdeg(u)` with
-    * `s` = `scale/|seeds|` on seeds, 0 elsewhere (exact integers, so the
-    * result is bit-portable and layout-invariant like the global rank).
-    * Nodes the walk cannot reach from the seeds stay at rank 0 — the
-    * locality that makes PPR a candidate generator.
-    *
-    * Same scale shape as [[pageRank]]: edges partitioned once, one
-    * rank join + one map-side-combined sum per round, node-sized tables
-    * only, lineage cut every 4 rounds.
-    */
-  def personalizedPageRank(
-      pairs: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      seeds: Seq[Long],
-      iters: Int,
-      dampNum: Long = 85L,
-      dampDen: Long = 100L,
-      scale: Long = 1000000000000L): DataFrame = {
-    require(seeds.nonEmpty, "personalizedPageRank needs at least one seed")
-    require(iters >= 0 && dampNum >= 0 && dampDen > 0 && dampNum <= dampDen)
-    require(scale > 0 &&
-      scale <= Long.MaxValue / math.max(math.max(dampNum, dampDen - dampNum), 1L),
-      s"scale * damping factors must stay within Long: scale=$scale")
-    val spark0 = pairs.sparkSession
-    import spark0.implicits._
-    val edges = pairs
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .cache()
-    val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val edgesDeg = edges.join(outdeg, "src")
-      .repartition(col("src"))
-      .cache()
-    val seedSet = seeds.distinct
-    val init = scale / seedSet.length
-    val base = init * (dampDen - dampNum) / dampDen
-    val isSeed = col("node").isin(seedSet: _*)
-
-    var ranks = nodes.select(col("node"),
-      when(isSeed, lit(init)).otherwise(lit(0L)).as("rank"))
-    for (i <- 1 to iters) {
-      // shuffle_hash for the same reason as [[pageRank]]: the rank side
-      // carries compatible hash(node) partitioning, so no shuffle stage
-      // exists for AQE to observe and the join would otherwise stay
-      // sort-merge — re-sorting the cached edge stream every iteration
-      // (q_ppr's executed plan showed 6 SortMergeJoins / 9 Sorts).
-      val sums = edgesDeg
-        .join(ranks.hint("shuffle_hash"), edgesDeg("src") === ranks("node"))
-        .select(col("dst"), expr("rank div outdeg").as("c"))
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("s"))
-      val next = nodes
-        .join(sums, nodes("node") === sums("dst"), "left")
-        .select(col("node"),
-          (when(isSeed, lit(base)).otherwise(lit(0L)) +
-            expr(s"($dampNum * coalesce(s, 0L)) div $dampDen")).as("rank"))
-      ranks = if (i % 4 == 0 && i < iters) next.cutLineage() else next
-    }
-    ranks.select(col("node"), col("rank").as("rank_fp"))
   }
 
   /** Round-bounded multi-source shortest WEIGHTED distances —

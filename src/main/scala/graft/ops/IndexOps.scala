@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,17 +29,19 @@ import graft.ops.Lineage.LineageOps
   *     word rows into the stored index with ONE `bit_or` aggregate and
   *     rewrites only the (layout-sized, broadcastable) index frame —
   *     the corpus is read once per segment, ever.
-  *   - `segments/` — the covered-segment ledger `(kind, segment)`.
-  *     Refreshes are idempotent per (kind, segment): re-running an
-  *     ingest job cannot double-append postings or double-OR stats, and
-  *     [[staleness]] turns the ledger into the assertion every scheduled
-  *     pipeline needs ("which expected segments are NOT in the index?").
+  *   - `segments/.ledger/<kind>/<segment>` — the covered-segment ledger:
+  *     one zero-byte marker per (kind, segment), both names URL-encoded
+  *     (a leading dot as `%2E`). Refreshes are idempotent per (kind,
+  *     segment): re-running an ingest job cannot double-append postings
+  *     or double-OR stats, and [[staleness]] turns the ledger into the
+  *     assertion every scheduled pipeline needs ("which expected segments
+  *     are NOT in the index?").
   *
-  * Local-filesystem paths here (the test/demo environment); on a real
-  * cluster the same layout lives on HDFS/object storage — the access
-  * pattern (partitioned appends, layout-sized rewrites, ledger) is the
-  * part that scales, and no operation ever reads more than one segment
-  * of corpus data plus layout-sized metadata.
+  * Every path goes through Hadoop's `FileSystem` for its scheme, so the
+  * same layout lives on the local disk, HDFS or object storage — the
+  * access pattern (partitioned appends, layout-sized rewrites, marker
+  * files) is the part that scales, and no operation ever reads more than
+  * one segment of corpus data plus layout-sized metadata.
   */
 object IndexOps {
 
@@ -49,13 +52,16 @@ object IndexOps {
   def postingsBucket(token: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(xxhash64(token), lit(PostingsBuckets.toLong))
 
-  private def exists(path: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+  /** The Hadoop `FileSystem` holding `path` (local, HDFS or an object
+    * store: whatever the path's scheme names, through the session's Hadoop
+    * configuration) and the path itself. */
+  private def resolve(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
 
-  private def ledgerDir(indexDir: String, kind: String): java.nio.file.Path =
-    java.nio.file.Paths.get(
-      s"$indexDir/segments/.ledger", // dot-dir: invisible to the parquet reader
-      ledgerName("kind", kind))
+  private def ledgerDir(indexDir: String, kind: String): String =
+    s"$indexDir/segments/.ledger/" + ledgerName("kind", kind)
 
   /** The file name a ledger kind or segment is stored under: URL-encoded,
     * with a leading dot escaped as `%2E` so that `.` and `..` (and any
@@ -69,65 +75,27 @@ object IndexOps {
     if (e.startsWith(".")) "%2E" + e.substring(1) else e
   }
 
-  /** Segments already folded into `kind`'s index (empty ledger = none).
+  /** Segments already folded into `kind`'s index (no ledger = none).
     *
     * Every refresh probes this BEFORE folding, and an idempotent replay is
-    * nothing but this probe — so it must not cost a Spark job (scan task +
-    * footer reads just to re-learn "segment already covered").
-    * [[recordSegment]] drops a zero-byte marker per (kind, segment) under
-    * `segments/.ledger/<kind>/`; listing that directory is pure filesystem
-    * metadata. Stores whose `kind` ledger predates the marker scheme fall
-    * back to the parquet read (recordSegment backfills the markers the
-    * first time it extends such a store, so the fallback pays at most
-    * once per store).
+    * nothing but this probe — so it is one directory listing, never a
+    * Spark job. `LocalFileSystem` hides its `.crc` side files from the
+    * listing, and no encoded name starts with a dot.
     */
   def coveredSegments(spark: SparkSession, indexDir: String, kind: String): Set[String] = {
-    val ledger = ledgerDir(indexDir, kind)
-    if (java.nio.file.Files.isDirectory(ledger)) {
-      val s = java.nio.file.Files.list(ledger)
-      try {
-        val it = s.iterator()
-        val out = Set.newBuilder[String]
-        while (it.hasNext)
-          out += java.net.URLDecoder.decode(it.next().getFileName.toString, "UTF-8")
-        out.result()
-      } finally s.close()
-    }
-    else coveredSegmentsParquet(spark, indexDir, kind)
+    val (fs, ledger) = resolve(spark, ledgerDir(indexDir, kind))
+    if (!fs.exists(ledger)) Set.empty
+    else fs.listStatus(ledger)
+      .map(s => java.net.URLDecoder.decode(s.getPath.getName, "UTF-8")).toSet
   }
 
-  private def coveredSegmentsParquet(
-      spark: SparkSession, indexDir: String, kind: String): Set[String] =
-    // a crash between recordSegment's first marker and its first parquet
-    // append leaves `segments/` holding only `.ledger/`
-    if (!hasParquet(s"$indexDir/segments")) Set.empty
-    else spark.read.parquet(s"$indexDir/segments")
-      .filter(col("kind") === kind)
-      .select("segment").collect().map(_.getString(0)).toSet
-
+  /** Drop the zero-byte marker of (kind, segment); creating it creates the
+    * kind's directory too. Re-recording a covered segment is a no-op. */
   private[ops] def recordSegment(
       spark: SparkSession, indexDir: String, kind: String, segment: String): Unit = {
-    val ledger = ledgerDir(indexDir, kind)
-    val marker = ledger.resolve(ledgerName("segment", segment))
-    if (!java.nio.file.Files.isDirectory(ledger)) {
-      // first marker for this kind: migrate any pre-marker parquet rows so
-      // the marker dir is authoritative from here on
-      val legacy = coveredSegmentsParquet(spark, indexDir, kind)
-      java.nio.file.Files.createDirectories(ledger)
-      legacy.foreach { sg =>
-        try java.nio.file.Files.createFile(
-          ledger.resolve(ledgerName("segment", sg)))
-        catch { case _: java.nio.file.FileAlreadyExistsException => }
-      }
-    }
-    // marker before the parquet append: the marker is what probes read, and
-    // writing it immediately after the data writes keeps the torn window
-    // (data committed, ledger not) no wider than before
-    try java.nio.file.Files.createFile(marker)
-    catch { case _: java.nio.file.FileAlreadyExistsException => }
-    import spark.implicits._
-    Seq((kind, segment)).toDF("kind", "segment")
-      .coalesce(1).write.mode("append").parquet(s"$indexDir/segments")
+    val (fs, marker) =
+      resolve(spark, ledgerDir(indexDir, kind) + "/" + ledgerName("segment", segment))
+    fs.createNewFile(marker)
   }
 
   /** Build-or-extend the postings lake with one named segment of
@@ -176,8 +144,9 @@ object IndexOps {
     if (coveredSegments(spark, indexDir, "bloom").contains(segment)) return
     val deltaIdx = LakeOps.bloomPartitionIndex(delta, partCol, keyCol, mBits, k)
     val path = s"$indexDir/bloom"
+    val (fs, root) = resolve(spark, path)
     val merged =
-      if (exists(path)) LakeOps.mergeBloomIndexes(spark.read.parquet(path), deltaIdx)
+      if (fs.exists(root)) LakeOps.mergeBloomIndexes(spark.read.parquet(path), deltaIdx)
       else deltaIdx
     merged.cutLineage().coalesce(1).write.mode("overwrite").parquet(path)
     recordSegment(spark, indexDir, "bloom", segment)
@@ -190,23 +159,26 @@ object IndexOps {
     * count. A segment of ZERO postings writes no partition dirs
     * (partitionBy on an empty frame), leaving schema inference nothing to
     * read. */
-  private[ops] def hasParquet(path: String): Boolean = {
-    val root = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(root)) return false
-    val s = java.nio.file.Files.walk(root)
-    try s.anyMatch { p =>
-      val rel = root.relativize(p)
-      p.toString.endsWith(".parquet") && java.nio.file.Files.isRegularFile(p) &&
-        (0 until rel.getNameCount).forall { i =>
-          val n = rel.getName(i).toString // Spark's hidden-path rule
-          !n.startsWith(".") && !(n.startsWith("_") && !n.contains("="))
-        }
+  private[ops] def hasParquet(spark: SparkSession, path: String): Boolean = {
+    val (fs, root) = resolve(spark, path)
+    if (!fs.exists(root)) return false
+    val rootDepth = fs.makeQualified(root).depth()
+    def visible(p: Path): Boolean = // Spark's hidden-path rule, up to the root
+      p.depth() <= rootDepth || {
+        val n = p.getName
+        !n.startsWith(".") && !(n.startsWith("_") && !n.contains("=")) && visible(p.getParent)
+      }
+    val files = fs.listFiles(root, true)
+    var found = false
+    while (!found && files.hasNext) {
+      val p = files.next().getPath
+      found = p.getName.endsWith(".parquet") && visible(p)
     }
-    finally s.close()
+    found
   }
 
   def readPostings(spark: SparkSession, indexDir: String): DataFrame =
-    if (hasParquet(s"$indexDir/postings"))
+    if (hasParquet(spark, s"$indexDir/postings"))
       spark.read.parquet(s"$indexDir/postings")
     else { // empty lake (all segments token-free) — degrade totally
       import spark.implicits._

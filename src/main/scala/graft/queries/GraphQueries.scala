@@ -45,8 +45,7 @@ private[queries] object GraphQueries {
       val e = custSuppPairs(s, dir)
       val edges = e.select(col("cust").as("src"), col("supp").as("dst"))
         .union(e.select(col("supp").as("src"), col("cust").as("dst")))
-      GraphOps.personalizedPageRank(
-        edges, "src", "dst", seeds = Seq(2L), iters = 3)
+      GraphOps.pageRank(edges, "src", "dst", iters = 3, seeds = Seq(2L))
     }),
 
     // HITS hubs & authorities (Kleinberg) on the directed

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 
 import graft.agg.Binning
 import graft.engine.{GridAggregation, ModisEngine}
-import graft.engine.GridAggregation.PixelCols
 import graft.expr.GridExprs
 import graft.io.PixelSource
 import graft.model._

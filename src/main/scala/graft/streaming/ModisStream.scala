@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.engine.GridAggregation.PixelCols
 import graft.expr.GridExprs
 import graft.model.JobConfig
 
@@ -44,15 +43,14 @@ object ModisStream {
       cfg: JobConfig,
       varName: String,
       tsCol: String = "ts",
-      watermark: Option[String] = Some("3 hours"),
-      cols: PixelCols = PixelCols()): DataFrame = {
+      watermark: Option[String] = Some("3 hours")): DataFrame = {
     val assigned = pixels
-      .withColumn("event_day_ts", dayAssignedTs(col(tsCol), col(cols.lon), cfg.shiftHour))
+      .withColumn("event_day_ts", dayAssignedTs(col(tsCol), col("lon"), cfg.shiftHour))
     val marked = watermark.fold(assigned)(w => assigned.withWatermark("event_day_ts", w))
     val g = cfg.grid
     marked
-      .filter(GridExprs.inRegion(col(cols.lat), col(cols.lon), g.region))
-      .withColumn("cell", GridExprs.cellId(col(cols.lat), col(cols.lon), g))
+      .filter(GridExprs.inRegion(col("lat"), col("lon"), g.region))
+      .withColumn("cell", GridExprs.cellId(col("lat"), col("lon"), g))
       .filter(GridExprs.cellInGrid(col("cell"), g))
       .groupBy(window(col("event_day_ts"), "1 day").as("win"), col("cell"))
       .agg(

@@ -413,7 +413,7 @@ class GraphOpsSpec extends SparkSpec {
     // at EXACT 0 (the locality that makes PPR a candidate generator)
     val edges = Seq((1L, 2L), (2L, 1L), (3L, 4L), (4L, 3L)).toDF("s", "d")
     def run(iters: Int) = GraphOps
-      .personalizedPageRank(edges, "s", "d", seeds = Seq(1L), iters = iters)
+      .pageRank(edges, "s", "d", iters = iters, seeds = Seq(1L))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // r1: seed = base = init*15//100; neighbor = 85%*init
     assert(run(1) == Map(
@@ -421,9 +421,11 @@ class GraphOpsSpec extends SparkSpec {
     // r2: seed = base + 85%*r1(2); neighbor = 85%*r1(1)
     assert(run(2) == Map(
       1L -> 872500000000L, 2L -> 127500000000L, 3L -> 0L, 4L -> 0L))
-    assert(GraphOps.personalizedPageRank(
-        edges.repartition(7), "s", "d", Seq(1L), 2)
+    assert(GraphOps.pageRank(
+        edges.repartition(7), "s", "d", 2, seeds = Seq(1L))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == run(2))
+    intercept[IllegalArgumentException](GraphOps.pageRank(
+      edges, "s", "d", 2, redistributeDangling = true, seeds = Seq(1L)))
   }
 
   test("shortestPathsWeighted: detour beats direct edge, hop bound, negative refuse") {

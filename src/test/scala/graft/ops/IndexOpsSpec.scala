@@ -59,28 +59,21 @@ class IndexOpsSpec extends SparkSpec {
     assert(IndexOps.coveredSegments(spark, idx, "postings") == Set("base"))
   }
 
-  test("coveredSegments: marker fast path, legacy parquet fallback, and " +
-    "backfill migration on first extend") {
+  test("coveredSegments lists the marker directory, odd names included") {
     val idx = tmp("idxledger_")
-    import spark.implicits._
-    // legacy store: parquet ledger rows only (pre-marker scheme)
-    Seq(("postings", "old1"), ("postings", "old2"), ("bloom", "oldb"))
-      .toDF("kind", "segment")
-      .coalesce(1).write.mode("append").parquet(s"$idx/segments")
-    assert(IndexOps.coveredSegments(spark, idx, "postings") ==
-      Set("old1", "old2"))
-    // extending the legacy store backfills markers for that kind, so the
-    // marker dir is authoritative from then on (and probes stop costing a
-    // Spark job); odd segment names survive the filename encoding
+    IndexOps.refreshPostings(docs.filter(col("doc_id") % 3 =!= 0), idx, "base")
+    // odd segment names survive the filename encoding
     IndexOps.recordSegment(spark, idx, "postings", "we ird/seg")
     assert(java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(s"$idx/segments/.ledger/postings")))
-    assert(IndexOps.coveredSegments(spark, idx, "postings") ==
-      Set("old1", "old2", "we ird/seg"))
-    // other kinds keep their parquet fallback untouched
-    assert(IndexOps.coveredSegments(spark, idx, "bloom") == Set("oldb"))
-    // the dot-dir is invisible to the parquet ledger reader
-    assert(spark.read.parquet(s"$idx/segments").count() == 4)
+    assert(IndexOps.coveredSegments(spark, idx, "postings") == Set("base", "we ird/seg"))
+    IndexOps.refreshBloom(docs, idx, "b1", col("lang"), col("doc_id"), mBits = 4096)
+    assert(IndexOps.coveredSegments(spark, idx, "bloom") == Set("b1"))
+    // the ledger is the markers alone (and the local filesystem's checksums)
+    assert(!IndexOps.hasParquet(spark, s"$idx/segments"))
+    val markers = Set("base", "we+ird%2Fseg", "b1")
+    assert(filesWithSize(s"$idx/segments").map(_._1.getFileName.toString) ==
+      markers ++ markers.map(m => s".$m.crc"))
   }
 
   test("ledger names that are dots or dot-prefixed never collide with the ledger's directories") {
@@ -144,6 +137,38 @@ class IndexOpsSpec extends SparkSpec {
     assert(got == Map("base" -> 1, "delta1" -> 0))
     // and the bloom ledger is independent of the postings ledger
     assert(IndexOps.coveredSegments(spark, idx, "bloom").isEmpty)
+  }
+
+  test("stores at a file:// URI answer exactly like stores at a plain path") {
+    val even = docs.filter(col("doc_id") % 2 === 0)
+    val odd = docs.filter(col("doc_id") % 2 =!= 0)
+    def answers(dir: String) = {
+      val idx = s"$dir/idx"
+      IndexOps.refreshPostings(even, idx, "base")
+      IndexOps.refreshPostings(odd, idx, "delta1")
+      IndexOps.refreshPostings(even, idx, "base") // replay: a no-op
+      IndexOps.refreshBloom(even, idx, "base", col("lang"), col("doc_id"), mBits = 4096)
+      IndexOps.refreshBloom(odd, idx, "delta1", col("lang"), col("doc_id"), mBits = 4096)
+      ComponentStore.refresh(even, s"$dir/cs", "base")
+      ComponentStore.refresh(odd, s"$dir/cs", "delta")
+      (IndexOps.phraseSearch(spark, idx, Seq("spark", "window", "join"))
+        .as[(Long, Long)].collect().toSet,
+       IndexOps.staleness(spark, idx, "postings", Seq("base", "delta1", "delta2"))
+        .as[(String, String, Int)].collect().toSeq,
+       IndexOps.readBloom(spark, idx).as[(String, Long, Long)].collect().toSet,
+       ComponentStore.assignment(spark, s"$dir/cs")
+        .select(col("doc_id").cast("long"), col("component").cast("long"))
+        .as[(Long, Long)].collect().toSet)
+    }
+    val plain = answers(tmp("idxplain_"))
+    assert(plain._1.nonEmpty && plain._3.nonEmpty)
+    assert(plain._2.map(_._3) == Seq(1, 1, 0))
+    assert(plain._4.map(_._1) == docs.select("doc_id").as[Long].collect().toSet)
+    val uri = answers("file://" + tmp("idxuri_"))
+    assert(uri._1 == plain._1, "phraseSearch")
+    assert(uri._2 == plain._2, "staleness")
+    assert(uri._3 == plain._3, "bloom index")
+    assert(uri._4 == plain._4, "component assignment")
   }
 
   test("phraseSearch through the lake equals search over raw postings") {

@@ -81,7 +81,7 @@ class LineageModeSpec extends SparkSpec {
     bothModes("bfsHops")(
       GraphOps.bfsHops(edges, "s", "d", sources = Seq(1L), maxHops = 6))
     bothModes("personalizedPageRank")(
-      GraphOps.personalizedPageRank(edges, "s", "d", Seq(1L, 50L), iters = 6))
+      GraphOps.pageRank(edges, "s", "d", iters = 6, seeds = Seq(1L, 50L)))
     bothModes("shortestPathsWeighted")(
       GraphOps.shortestPathsWeighted(
         edges.withColumn("w", pmod(col("s") * 7 + col("d"), lit(5)) + 1),
