@@ -6,7 +6,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.memory.{MemoryConsumer, MemoryMode, TaskMemoryManager}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, BindReferences, BoundReference, Expression, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, BindReferences, BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
@@ -89,7 +89,7 @@ case class CellPartialExec(
     val ordinal = inputs.map(a => BindReferences.bindReference[Expression](a, child.output)
       .asInstanceOf[BoundReference].ordinal)
     val bound = spec.remap(ordinal)
-    child.execute().mapPartitions { rows =>
+    Bridge.mapPartitionsInternal(child.execute()) { rows =>
       val st = new CellState(bound, (_, _) => ())
       val slotBound = math.max(1L, math.min(PartialSlots.toLong, PartialStateBytes / st.slotBytes))
       val writer = new UnsafeRowWriter(2)
@@ -139,7 +139,8 @@ case class CellPartialExec(
 /** Reduce side: merges the partial states of its cells, after the
   * cell-keyed exchange, into one [[CellState]] whose arrays are accounted
   * with the task's memory manager, and produces exactly `cell` plus the
-  * layout columns.
+  * layout columns, one reused binary row per cell
+  * ([[CellState.finalized]]).
   */
 case class CellFinalExec(
     spec: CellAggSpec,
@@ -158,8 +159,7 @@ case class CellFinalExec(
     val peak = longMetric("peakMemory")
     val s = spec
     val partitions = conf.numShufflePartitions
-    val types = output.map(_.dataType)
-    child.execute().mapPartitions { rows =>
+    Bridge.mapPartitionsInternal(child.execute()) { rows =>
       val mem = new StateMemory(Bridge.taskMemoryManager(), partitions)
       TaskContext.get().addTaskCompletionListener[Unit](_ => mem.release())
       val st = new CellState(s, mem.reserve)
@@ -167,12 +167,9 @@ case class CellFinalExec(
       while (rows.hasNext) st.merge(rows.next())
       aggTime += NANOSECONDS.toMillis(System.nanoTime() - t0)
       peak += st.bytes
-      val out = new GenericInternalRow(types.size)
-      val project = UnsafeProjection.create(types.toArray)
-      Iterator.range(0, st.size).map { k =>
-        st.finalizeInto(k, out)
+      Iterator.range(0, st.size).map[InternalRow] { k =>
         numOut += 1
-        project(out)
+        st.finalized(k)
       }
     }
   }

@@ -1,9 +1,10 @@
 package graft.engine
 
+import scala.annotation.switch
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -48,7 +49,7 @@ final case class CellAggSpec(
   *
   * A partial folds input rows ([[update]]) and ships each slot as bytes
   * ([[encode]]); a final folds those bytes ([[merge]]) and produces the
-  * layout columns ([[finalizeInto]]). Semantics equal Spark's built-in
+  * layout columns ([[finalized]]). Semantics equal Spark's built-in
   * aggregates: min/max in Spark's double order (NaN largest, -0.0 == 0.0,
   * ties keep the first value), sums from 0.0 in row then merge order,
   * counts skip only NULL.
@@ -434,78 +435,132 @@ private[engine] final class CellState(spec: CellAggSpec, reserve: (Long, Int) =>
 
   // ----------------------------------------------------- finalize
 
+  import CellState._
+
   private val varIndex: Map[String, Int] = vars.zipWithIndex.toMap
 
-  /** Slot `s` as the layout columns, written to `out(1..)`; `out(0)` = cell. */
-  def finalizeInto(s: Int, out: InternalRow): Unit = {
-    out.setLong(0, cells(s))
-    var cfDone = false
-    var cfLo, cfHi, cfMean = 0.0
+  /** The layout resolved once: each column's finalizer and, for the
+    * per-variable ones, its variable (-1 for the cloud fraction).
+    */
+  private val finalizer: Array[Int] = spec.layout.map(_.stat match {
+    case PixelCounts => FCount
+    case _: HistogramCounts => FHistogram
+    case _: JointHistogram => FJoint
+    case Minimum => FMin
+    case Maximum => FMax
+    case Mean => FMean
+    case StandardDeviation => FStd
+    case CloudFractionPixelCounts => FCfPixels
+    case GranuleCounts => FGranules
+    case CloudFractionMinimum => FCfMin
+    case CloudFractionMaximum => FCfMax
+    case CloudFractionMean => FCfMean
+  }).toArray
+  private val varOf: Array[Int] =
+    spec.layout.map(c => varIndex.getOrElse(c.variable, -1)).toArray
+  private val cfColumns = finalizer.exists(_ >= FCfPixels)
+
+  // the reused output row, and the array writers of its histograms (a
+  // joint histogram is an array of `nx` arrays of `ny` counts)
+  private val out = new UnsafeRowWriter(1 + finalizer.length)
+  private val histOut = new UnsafeArrayWriter(out, 8)
+  private val jointRowOut = new UnsafeArrayWriter(histOut, 8)
+
+  /** Slot `s` as one binary row — `cell`, then the layout columns — each
+    * value written once, straight from the primitive arrays. The row is
+    * reused: it is valid until the next call.
+    */
+  def finalized(s: Int): UnsafeRow = {
+    out.reset()
+    out.zeroOutNullBytes()
+    out.write(0, cells(s))
+    var cfLo = Double.PositiveInfinity
+    var cfHi = Double.NegativeInfinity
     var tot, cld, granules = 0L
+    if (cfColumns) {
+      var e = cfHead(s)
+      while (e >= 0) {
+        tot += cfDet(e)
+        cld += cfCld(e)
+        val fraction = cfCld(e).toDouble / cfDet(e).toDouble
+        if (fraction < cfLo) cfLo = fraction
+        if (fraction > cfHi) cfHi = fraction
+        granules += 1
+        e = cfNext(e)
+      }
+    }
     var k = 0
-    while (k < spec.layout.length) {
-      val c = spec.layout(k)
+    while (k < finalizer.length) {
       val o = k + 1
-      c.stat match {
-        case CloudFractionMinimum | CloudFractionMaximum | CloudFractionMean |
-            CloudFractionPixelCounts | GranuleCounts =>
-          if (!cfDone) {
-            cfLo = Double.PositiveInfinity
-            cfHi = Double.NegativeInfinity
-            var e = cfHead(s)
-            while (e >= 0) {
-              tot += cfDet(e)
-              cld += cfCld(e)
-              val fraction = cfCld(e).toDouble / cfDet(e).toDouble
-              if (fraction < cfLo) cfLo = fraction
-              if (fraction > cfHi) cfHi = fraction
-              granules += 1
-              e = cfNext(e)
-            }
-            cfMean = cld.toDouble / tot.toDouble
-            cfDone = true
+      val v = varOf(k)
+      val lc = if (v < 0) 0 else s * lStride + lOff(v)
+      val n = if (v < 0) 0L else l(lc)
+      val dm = s * dStride + 4 * v
+      (finalizer(k): @switch) match {
+        case FCount => out.write(o, n)
+        case FHistogram =>
+          val at = out.cursor()
+          putLongs(histOut, lc + 1, nBins(v))
+          out.setOffsetAndSizeFromPreviousCursor(o, at)
+        case FJoint =>
+          val at = out.cursor()
+          histOut.initialize(nx(v))
+          var x = 0
+          while (x < nx(v)) {
+            val atX = histOut.cursor()
+            putLongs(jointRowOut, lc + 1 + nBins(v) + x * ny(v), ny(v))
+            histOut.setOffsetAndSizeFromPreviousCursor(x, atX)
+            x += 1
           }
-          c.stat match {
-            case CloudFractionPixelCounts => out.setLong(o, tot)
-            case GranuleCounts => out.setLong(o, granules)
-            case _ if granules == 0 => out.setNullAt(o)
-            case CloudFractionMinimum => out.setDouble(o, cfLo)
-            case CloudFractionMaximum => out.setDouble(o, cfHi)
-            case _ => out.setDouble(o, cfMean)
+          out.setOffsetAndSizeFromPreviousCursor(o, at)
+        case FMin => if (n == 0L) out.setNullAt(o) else out.write(o, d(dm))
+        case FMax => if (n == 0L) out.setNullAt(o) else out.write(o, d(dm + 1))
+        case FMean => if (n == 0L) out.setNullAt(o) else out.write(o, d(dm + 2) / n.toDouble)
+        case FStd =>
+          if (n == 0L) out.setNullAt(o)
+          else {
+            val mean = d(dm + 2) / n.toDouble
+            out.write(o, math.sqrt(d(dm + 3) / n.toDouble - mean * mean))
           }
-        case stat =>
-          val v = varIndex(c.variable)
-          val lc = s * lStride + lOff(v)
-          val dm = s * dStride + 4 * v
-          val n = l(lc)
-          stat match {
-            case PixelCounts => out.setLong(o, n)
-            case _: HistogramCounts =>
-              out.update(o, longs(lc + 1, nBins(v)))
-            case _: JointHistogram =>
-              val j0 = lc + 1 + nBins(v)
-              out.update(o, new GenericArrayData(
-                Array.tabulate[Any](nx(v))(x => longs(j0 + x * ny(v), ny(v)))))
-            case _ if n == 0L => out.setNullAt(o)
-            case Minimum => out.setDouble(o, d(dm))
-            case Maximum => out.setDouble(o, d(dm + 1))
-            case Mean => out.setDouble(o, d(dm + 2) / n.toDouble)
-            case StandardDeviation =>
-              val mean = d(dm + 2) / n.toDouble
-              out.setDouble(o, math.sqrt(d(dm + 3) / n.toDouble - mean * mean))
-            case other => throw new IllegalStateException(s"${c.name}: no finalizer for $other")
-          }
+        case FCfPixels => out.write(o, tot)
+        case FGranules => out.write(o, granules)
+        case FCfMin => if (granules == 0L) out.setNullAt(o) else out.write(o, cfLo)
+        case FCfMax => if (granules == 0L) out.setNullAt(o) else out.write(o, cfHi)
+        case _ =>
+          if (granules == 0L) out.setNullAt(o) else out.write(o, cld.toDouble / tot.toDouble)
       }
       k += 1
     }
+    out.getRow
   }
 
-  private def longs(from: Int, n: Int): UnsafeArrayData =
-    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOfRange(l, from, from + n))
+  /** `n` longs of the long block, from `from`, as the next array of `w`. */
+  private def putLongs(w: UnsafeArrayWriter, from: Int, n: Int): Unit = {
+    w.initialize(n)
+    // the writer reserved the header, then exactly 8n bytes of values
+    Platform.copyMemory(l, Platform.LONG_ARRAY_OFFSET + 8L * from,
+      w.getBuffer, w.cursor() - 8L * n, 8L * n)
+  }
 
   /** Spark's double order: -0.0 == 0.0, NaN above every number. */
   private def compare(a: Double, b: Double): Int =
     if (a == b) 0 else java.lang.Double.compare(a, b)
+}
+
+private[engine] object CellState {
+  // finalizers of the layout columns; the cloud-fraction ones last
+  final val FCount = 0
+  final val FHistogram = 1
+  final val FJoint = 2
+  final val FMin = 3
+  final val FMax = 4
+  final val FMean = 5
+  final val FStd = 6
+  final val FCfPixels = 7
+  final val FGranules = 8
+  final val FCfMin = 9
+  final val FCfMax = 10
+  final val FCfMean = 11
 }
 
 /** The dictionary's key for a NULL granule id. */

@@ -149,7 +149,7 @@ object GridPlot {
   /** The reference's `displayOutput`: take an aggregated grid frame
     * (cell-keyed, like every sink input), pick one value column, and
     * write the contourf-style PNG. The frame is collected and densified
-    * through the same binary-row path as the `.h5`/`.nc` sinks
+    * through the same column-block path as the `.h5`/`.nc` sinks
     * ([[L3Writer.CellRows]]): each row lands at its `cell`
     * (= `lat_idx * gridLon + lon_idx`, at most one row per cell), absent
     * cells and NULL values are NaN. An existing `path` is an error
@@ -174,7 +174,7 @@ object GridPlot {
       grid.select(col("cell").cast("long"), col(valueCol).cast("double")), nLat, nLon)
     val value = rows.doubles(1, Double.NaN)
     rows.fill()
-    val cells = Array.tabulate(nLat)(i => value.out.slice(i * nLon, (i + 1) * nLon))
+    val cells = Array.tabulate(nLat)(i => value.slice(i * nLon, (i + 1) * nLon))
     val img = renderGrid(cells, vmin, vmax, levels, cellPx)
     java.nio.file.Files.write(java.nio.file.Paths.get(path), pngBytes(img))
     cells

@@ -31,11 +31,12 @@ import graft.model.JobConfig
   * lat_center/lon_center`), its final aggregate still spread over the
   * shuffle partitions. The two binary sinks collect the driver-small grid
   * ONCE and share one densifier ([[densify]]); each keeps only its own
-  * encoder. The collect keeps Spark's binary rows ([[CellRows]]): packing
-  * runs in the projection on the executors, and the driver copies each
-  * value into a primitive `Array[Long]`/`Array[Double]` with no external
-  * `Row` and no boxing — the same path [[GridPlot.displayOutput]] reads. A
-  * cell that appears in two rows of the grid is an error.
+  * encoder. The collect moves column blocks ([[CellRows]]): packing runs
+  * in the projection on the executors, each partition becomes one block of
+  * primitive columns there, and the driver scatters the blocks into the
+  * dense `Array[Long]`/`Array[Double]`s with no row decode and no boxing —
+  * the same path [[GridPlot.displayOutput]] reads. A cell that appears in
+  * two rows of the grid is an error.
   *
   * Reference packing/naming rules reproduced:
   *   - int-packing `round(value/scale + offset)` with NaN/Inf/NULL -> fill
@@ -200,67 +201,123 @@ object L3Writer {
 
   private[io] final case class DenseL3(nLat: Int, nLon: Int, vars: Seq[DenseVar])
 
-  /** Writes column `i` of each binary row into a dense row-major
-    * `[lat, lon(, bins...)]` grid `out`, at the row's cell; NULL keeps
-    * the init.
+  /** How column `i` of a cell-keyed frame densifies into `out`, a dense
+    * row-major `[lat, lon(, bins...)]` array of `width` values per cell,
+    * NULL as the init. On the executors it puts each row's values into
+    * one partition's buffer ([[Block]]), int64 and a float64 as its bits;
+    * on the driver it scatters that buffer into `out`, which stays there.
     */
-  private[io] sealed abstract class Filler {
-    def put(r: InternalRow, cell: Int): Unit
+  private[io] sealed abstract class Dense(val i: Int, val width: Int) extends Serializable {
+    /** Row `r`'s values into `buf` at row `n`. */
+    def put(r: InternalRow, buf: Array[Long], n: Int): Unit
+    /** A block's buffer into `out`, its row `k` at `cells(k)`. */
+    def scatter(buf: Array[Long], cells: Array[Int]): Unit
   }
 
-  /** A BIGINT column as int64. */
-  private[io] final class LongFiller(i: Int, val out: Array[Long]) extends Filler {
-    def put(r: InternalRow, cell: Int): Unit = if (!r.isNullAt(i)) out(cell) = r.getLong(i)
+  /** A BIGINT column as int64, or (`bins` non-empty) a 1-D or 2-D
+    * histogram of BIGINT counts as int64 `[bins...]` per cell, a joint
+    * histogram being the row-major `[x][y]` nest; every row's shape must
+    * equal `bins`.
+    */
+  private[io] final class LongDense(i: Int, init: Long, name: String, bins: Seq[Int], size: Int)
+      extends Dense(i, bins.product) {
+    @transient val out: Array[Long] = new Array[Long](size * width)
+    if (init != 0L) java.util.Arrays.fill(out, init)
+    private val ny = if (bins.size == 2) bins(1) else 0
+
+    def put(r: InternalRow, buf: Array[Long], n: Int): Unit =
+      if (r.isNullAt(i)) java.util.Arrays.fill(buf, n * width, (n + 1) * width, init)
+      else if (bins.isEmpty) buf(n) = r.getLong(i)
+      else {
+        val h = r.getArray(i)
+        def shape: String = (if (ny == 0) Seq(h.numElements()) else Seq(h.numElements(),
+          if (h.numElements() == 0) 0 else h.getArray(0).numElements())).mkString(" x ")
+        def want = bins.mkString(" x ")
+        require(h.numElements() == bins.head, s"$name: histogram shape $shape != $want")
+        if (ny == 0) copy(h, buf, n * width)
+        else {
+          var x = 0
+          while (x < bins.head) {
+            val hx = h.getArray(x)
+            require(hx.numElements() == ny, s"$name: histogram shape $shape != $want")
+            copy(hx, buf, n * width + x * ny)
+            x += 1
+          }
+        }
+      }
+
+    private def copy(a: ArrayData, buf: Array[Long], at: Int): Unit = {
+      var x = 0
+      while (x < a.numElements()) { buf(at + x) = a.getLong(x); x += 1 }
+    }
+
+    def scatter(buf: Array[Long], cells: Array[Int]): Unit = {
+      var k = 0
+      if (width == 1) while (k < cells.length) { out(cells(k)) = buf(k); k += 1 }
+      else while (k < cells.length) {
+        System.arraycopy(buf, k * width, out, cells(k) * width, width)
+        k += 1
+      }
+    }
   }
 
   /** A DOUBLE column as float64. */
-  private[io] final class DoubleFiller(i: Int, val out: Array[Double]) extends Filler {
-    def put(r: InternalRow, cell: Int): Unit = if (!r.isNullAt(i)) out(cell) = r.getDouble(i)
+  private[io] final class DoubleDense(i: Int, init: Double, size: Int) extends Dense(i, 1) {
+    @transient val out: Array[Double] = new Array[Double](size)
+    java.util.Arrays.fill(out, init)
+
+    def put(r: InternalRow, buf: Array[Long], n: Int): Unit =
+      buf(n) = java.lang.Double.doubleToRawLongBits(if (r.isNullAt(i)) init else r.getDouble(i))
+
+    def scatter(buf: Array[Long], cells: Array[Int]): Unit = {
+      var k = 0
+      while (k < cells.length) { out(cells(k)) = java.lang.Double.longBitsToDouble(buf(k)); k += 1 }
+    }
   }
 
-  /** A 1-D or 2-D histogram column of BIGINT counts as int64 `[bins...]`
-    * per cell, zero where no pixel fell; a joint histogram is the
-    * row-major `[x][y]` nest. Every row's shape must equal `bins`.
+  /** One partition of a cell-keyed frame, column by column: its cells and,
+    * per [[Dense]] column, the buffer of its rows' values — or, instead,
+    * the message of the first error the partition met.
     */
-  private[io] final class HistogramFiller(c: String, i: Int, bins: Seq[Int], val out: Array[Long])
-      extends Filler {
-    private val nx = bins.head
-    private val ny = if (bins.size == 2) bins(1) else 0
-    private val width = bins.product
-    private val want = bins.mkString(" x ")
-    private def copy(a: ArrayData, base: Int): Unit = {
-      var x = 0
-      while (x < a.numElements()) {
-        out(base + x) = a.getLong(x)
-        x += 1
-      }
-    }
-    def put(r: InternalRow, cell: Int): Unit = if (!r.isNullAt(i)) {
-      val h = r.getArray(i)
-      def shape: String = (if (ny == 0) Seq(h.numElements()) else Seq(h.numElements(),
-        if (h.numElements() == 0) 0 else h.getArray(0).numElements())).mkString(" x ")
-      require(h.numElements() == nx, s"$c: histogram shape $shape != $want")
-      val base = cell * width
-      if (ny == 0) copy(h, base)
-      else {
-        var x = 0
-        while (x < nx) {
-          val hx = h.getArray(x)
-          require(hx.numElements() == ny, s"$c: histogram shape $shape != $want")
-          copy(hx, base + x * ny)
-          x += 1
+  private[io] final class Block(
+      val cells: Array[Long], val values: Array[Array[Long]], val error: String)
+      extends Serializable
+
+  private[io] object Block {
+    /** Read one partition's rows into a block, on its executor. */
+    def of(rows: Iterator[InternalRow], cols: Array[Dense]): Block = try {
+      var cap = 1024
+      var n = 0
+      var cells = new Array[Long](cap)
+      val values = cols.map(c => new Array[Long](cap * c.width))
+      while (rows.hasNext) {
+        val r = rows.next()
+        if (n == cap) {
+          cap *= 2
+          cells = java.util.Arrays.copyOf(cells, cap)
+          for (j <- cols.indices) values(j) = java.util.Arrays.copyOf(values(j), cap * cols(j).width)
         }
+        require(!r.isNullAt(0), "grid cell is NULL")
+        cells(n) = r.getLong(0)
+        var j = 0
+        while (j < cols.length) { cols(j).put(r, values(j), n); j += 1 }
+        n += 1
       }
+      new Block(java.util.Arrays.copyOf(cells, n),
+        cols.indices.map(j => java.util.Arrays.copyOf(values(j), n * cols(j).width)).toArray, null)
+    } catch {
+      case e: IllegalArgumentException => new Block(null, null, e.getMessage)
     }
   }
 
-  /** A cell-keyed frame (column 0 = `cell`, BIGINT) collected ONCE as
-    * Spark's own binary rows, and densified by the [[Filler]]s it hands
-    * out, all in ONE pass over the rows ([[fill]]): nothing is boxed and no
-    * external `Row` is built. Each row lands at its `cell`
-    * (= `lat_idx * gridLon + lon_idx`, checked against the grid, and at
-    * most one row per cell); cells absent from the (possibly sparse) frame
-    * keep the init.
+  /** A cell-keyed frame (column 0 = `cell`, BIGINT) densified: each
+    * column asked for ([[longs]], [[doubles]], [[histogram]]) gets its
+    * dense array, which [[fill]] fills from ONE collect. Each partition
+    * becomes one [[Block]] on its executor, and the driver scatters the
+    * blocks column by column: no row is decoded there and nothing is
+    * boxed. Each row lands at its `cell` (= `lat_idx * gridLon +
+    * lon_idx`, checked against the grid, and at most one row per cell);
+    * cells absent from the (possibly sparse) frame keep the init.
     *
     * The frame is collected to the driver: at most gridLat x gridLon rows
     * (64,800 at 1 degree) — the same driver-small bound the reference's
@@ -269,45 +326,36 @@ object L3Writer {
   private[io] final class CellRows(frame: DataFrame, nLat: Int, nLon: Int) {
     require(frame.schema(0).dataType == LongType,
       s"grid cell column has type ${frame.schema(0).dataType.simpleString}, not bigint")
-    private val rows: Array[InternalRow] = Bridge.collectInternal(frame)
     private val size = nLat * nLon
-    private val cells: Array[Int] = {
-      val seen = new java.util.BitSet(size)
-      rows.map { r =>
-        require(!r.isNullAt(0), "grid cell is NULL")
-        val cell = r.getLong(0)
-        require(cell >= 0 && cell < size.toLong, s"grid cell $cell outside ${nLat}x$nLon")
-        require(!seen.get(cell.toInt), s"grid cell $cell appears in more than one grid row")
-        seen.set(cell.toInt)
-        cell.toInt
-      }
-    }
-    private val fillers = scala.collection.mutable.ArrayBuffer.empty[Filler]
-    private def add[F <: Filler](f: F): F = { fillers += f; f }
+    private val cols = scala.collection.mutable.ArrayBuffer.empty[Dense]
 
-    def longs(i: Int, init: Long): LongFiller = {
-      val out = new Array[Long](size)
-      if (init != 0L) java.util.Arrays.fill(out, init)
-      add(new LongFiller(i, out))
-    }
-    def doubles(i: Int, init: Double): DoubleFiller = {
-      val out = new Array[Double](size)
-      java.util.Arrays.fill(out, init)
-      add(new DoubleFiller(i, out))
-    }
-    def histogram(c: String, i: Int, bins: Seq[Int]): HistogramFiller =
-      add(new HistogramFiller(c, i, bins, new Array[Long](size * bins.product)))
+    private def add[D <: Dense](d: D): D = { cols += d; d }
 
-    /** Run every filler handed out so far, in one pass over the rows. */
+    def longs(i: Int, init: Long): Array[Long] =
+      add(new LongDense(i, init, frame.columns(i), Nil, size)).out
+    def doubles(i: Int, init: Double): Array[Double] = add(new DoubleDense(i, init, size)).out
+    def histogram(c: String, i: Int, bins: Seq[Int]): Array[Long] =
+      add(new LongDense(i, 0L, c, bins, size)).out
+
+    /** Collect the frame and fill every array handed out so far. */
     def fill(): Unit = {
-      val fs = fillers.toArray
-      var k = 0
-      while (k < rows.length) {
-        val r = rows(k)
-        val cell = cells(k)
+      val dense = cols.toArray
+      val blocks = Bridge.collectPartitions(frame)(Block.of(_, dense))
+      for (b <- blocks if b.error != null) throw new IllegalArgumentException(b.error)
+      val seen = new java.util.BitSet(size)
+      for (b <- blocks) {
+        val cells = new Array[Int](b.cells.length)
+        var k = 0
+        while (k < cells.length) {
+          val cell = b.cells(k)
+          require(cell >= 0 && cell < size.toLong, s"grid cell $cell outside ${nLat}x$nLon")
+          require(!seen.get(cell.toInt), s"grid cell $cell appears in more than one grid row")
+          seen.set(cell.toInt)
+          cells(k) = cell.toInt
+          k += 1
+        }
         var j = 0
-        while (j < fs.length) { fs(j).put(r, cell); j += 1 }
-        k += 1
+        while (j < dense.length) { dense(j).scatter(b.values(j), cells); j += 1 }
       }
     }
   }
@@ -315,8 +363,8 @@ object L3Writer {
   /** Collect the grid ONCE and densify every layout column, in layout
     * order, under its output name. The projection holds `cell`, the packed
     * columns and the unrounded packing of each cloud-fraction statistic;
-    * it is collected as binary rows and read with primitive getters, one
-    * [[Filler]] per dense array, in one pass ([[CellRows]]).
+    * it is collected as one block of primitive columns per partition and
+    * scattered into one dense array per column ([[CellRows]]).
     *
     * Each column's stat decides its dense form: cells absent from the
     * grid frame surface as `_FillValue` for statistics and 0 for
@@ -337,7 +385,7 @@ object L3Writer {
         .as(s"__unrounded_${c.name}")): _*)
     val rows = new CellRows(projection, cfg.grid.gridLat, cfg.grid.gridLon)
 
-    // the dense arrays are allocated here and filled in place below
+    // the dense arrays are allocated here and filled in place by `fill`
     val vars = layout.zipWithIndex.map { case (gc, k) =>
       val c = outputName(gc.name)
       val i = k + 1
@@ -345,12 +393,12 @@ object L3Writer {
       (gc.stat, packingOf(gc, packings)) match {
         case (_: CloudFraction, Some(p)) =>
           val unrounded = 1 + layout.size + cloudFractions.indexOf(gc)
-          DenseCloudFraction(c, attrs, rows.longs(i, p.fill).out,
-            rows.doubles(unrounded, p.fill.toDouble).out)
-        case (h: Histogram, _) => DenseLongs(c, attrs, h.bins, rows.histogram(c, i, h.bins).out)
-        case (_: Count, _) => DenseLongs(c, attrs, Nil, rows.longs(i, 0L).out)
-        case (_, Some(p)) => DenseLongs(c, attrs, Nil, rows.longs(i, p.fill).out)
-        case _ => DenseDoubles(c, attrs, rows.doubles(i, attrs.scaling.get.fill).out)
+          DenseCloudFraction(c, attrs, rows.longs(i, p.fill),
+            rows.doubles(unrounded, p.fill.toDouble))
+        case (h: Histogram, _) => DenseLongs(c, attrs, h.bins, rows.histogram(c, i, h.bins))
+        case (_: Count, _) => DenseLongs(c, attrs, Nil, rows.longs(i, 0L))
+        case (_, Some(p)) => DenseLongs(c, attrs, Nil, rows.longs(i, p.fill))
+        case _ => DenseDoubles(c, attrs, rows.doubles(i, attrs.scaling.get.fill))
       }
     }
     rows.fill()

@@ -1,8 +1,9 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.ops.Lineage.LineageOps
 
@@ -118,6 +119,7 @@ object IndexOps {
     // (and a near-single-partition input serializes the encode on one
     // task). One file per bucket per segment.
     SearchOps.positionalPostings(docs, idCol, textCol)
+      .withColumn("doc_id", col("doc_id").cast(LongType))
       .withColumn("tb", postingsBucket(col("token")))
       .repartition(col("tb"))
       .write.partitionBy("tb").mode("append").parquet(s"$indexDir/postings")
@@ -177,13 +179,19 @@ object IndexOps {
     found
   }
 
+  /** The postings lake's columns, as [[refreshPostings]] writes them and
+    * partition discovery types them (`tb` is the partition column). Read
+    * with it, the lake needs no schema-inference job.
+    */
+  private val PostingsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("pos", IntegerType),
+    StructField("token", StringType), StructField("tb", IntegerType)))
+
   def readPostings(spark: SparkSession, indexDir: String): DataFrame =
     if (hasParquet(spark, s"$indexDir/postings"))
-      spark.read.parquet(s"$indexDir/postings")
-    else { // empty lake (all segments token-free) — degrade totally
-      import spark.implicits._
-      Seq.empty[(Long, Int, String, Long)].toDF("doc_id", "pos", "token", "tb")
-    }
+      spark.read.schema(PostingsSchema).parquet(s"$indexDir/postings")
+    else // empty lake (all segments token-free) — degrade totally
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), PostingsSchema)
 
   def readBloom(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.parquet(s"$indexDir/bloom")

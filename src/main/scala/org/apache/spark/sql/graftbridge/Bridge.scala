@@ -50,19 +50,28 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `df.collect()` without the external-row decode: the executed plan's
-    * own binary rows, run as ONE SQL execution named "collect" — so the
-    * job still shows as one collect to the UI, the SQL listeners and every
-    * `QueryExecutionListener`, exactly as `Dataset.collect` does.
+  /** `f` over every partition of the frame's executed plan, on the
+    * executors, collected as one result per partition: ONE SQL execution
+    * named "collect", so the job still shows as one collect to the UI, the
+    * SQL listeners and every `QueryExecutionListener`, exactly as
+    * `Dataset.collect` does.
     */
-  def collectInternal(df: org.apache.spark.sql.DataFrame)
-      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+  def collectPartitions[T: scala.reflect.ClassTag](df: org.apache.spark.sql.DataFrame)(
+      f: Iterator[org.apache.spark.sql.catalyst.InternalRow] => T): Array[T] = {
     val qe = df.queryExecution
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
       qe.executedPlan.resetMetrics()
-      qe.executedPlan.executeCollect()
+      qe.executedPlan.execute().mapPartitionsInternal(rows => Iterator.single(f(rows))).collect()
     }
   }
+
+  /** `rdd.mapPartitions` without the closure-cleaner pass, as Spark's own
+    * execs run their per-partition code (`RDD.mapPartitionsInternal` is
+    * `private[spark]`); `f` must capture nothing unserializable.
+    */
+  def mapPartitionsInternal[T, U: scala.reflect.ClassTag](rdd: org.apache.spark.rdd.RDD[T])(
+      f: Iterator[T] => Iterator[U]): org.apache.spark.rdd.RDD[U] =
+    rdd.mapPartitionsInternal(f)
 
   /** The running task's memory manager (`TaskContext.taskMemoryManager`
     * is `private[spark]`), for operators that account their own state.

@@ -201,4 +201,59 @@ class CellAggregateSpec extends SparkSpec {
     mem.release()
     assert(mem.getUsed == 0L)
   }
+
+  test("finalized writes every stat of a slot: histograms, NULL statistics, cloud fraction") {
+    val spec = CellAggSpec(GridAggregation.layout(cfg), cellInput = 0,
+      varInputs = Map("a" -> 1, "b" -> 2), flagInput = 3, granuleInput = 4, stringIds = true)
+    val st = new CellState(spec, (_, _) => ())
+    def row(cell: Long, a: Any, b: Any, flag: Any, g: String) = new GenericInternalRow(
+      Array[Any](cell, a, b, flag, org.apache.spark.unsafe.types.UTF8String.fromString(g)))
+    // cell 7: two determined granules; cell 9: `a` all NULL, no determined pixel
+    Seq(row(7L, 1.0, 210.0, 0.0, "g1"), row(7L, 3.0, 260.0, 2.0, "g1"),
+      row(7L, -5.0, null, 3.0, "g2"), row(7L, null, 330.0, null, "g2"),
+      row(9L, null, 250.0, 5.0, "g3"), row(9L, null, null, Double.NaN, "g3"))
+      .foreach(st.update)
+    def finalized(s: Int): Map[String, Any] = {
+      val r = st.finalized(s)
+      assert(r.numFields == 1 + spec.layout.size)
+      spec.layout.zipWithIndex.map { case (c, k) =>
+        val o = k + 1
+        c.name -> (if (r.isNullAt(o)) null else c.stat match {
+          case _: HistogramCounts => r.getArray(o).toLongArray.toSeq
+          case _: JointHistogram =>
+            val h = r.getArray(o)
+            (0 until h.numElements()).map(x => h.getArray(x).toLongArray.toSeq)
+          case _: Count => r.getLong(o)
+          case _ => r.getDouble(o)
+        })
+      }.toMap + ("cell" -> r.getLong(0))
+    }
+    val aMean = (1.0 + 3.0 - 5.0) / 3
+    val bMean = (210.0 + 260.0 + 330.0) / 3
+    assert(finalized(0) == Map(
+      "cell" -> 7L,
+      "a_Minimum" -> -5.0, "a_Maximum" -> 3.0, "a_Mean" -> aMean, "a_Pixel_Counts" -> 3L,
+      "a_Standard_Deviation" -> math.sqrt((1.0 + 9.0 + 25.0) / 3 - aMean * aMean),
+      "a_Histogram_Counts" -> Seq(1L, 2L, 0L),
+      "a_Jhisto_vs_b" -> Seq(Seq(0L, 0L), Seq(1L, 1L), Seq(0L, 0L)),
+      "b_Minimum" -> 210.0, "b_Maximum" -> 330.0, "b_Mean" -> bMean, "b_Pixel_Counts" -> 3L,
+      "b_Standard_Deviation" ->
+        math.sqrt((210.0 * 210.0 + 260.0 * 260.0 + 330.0 * 330.0) / 3 - bMean * bMean),
+      "b_Histogram_Counts" -> Seq(1L, 1L, 0L),
+      // g1: 1 of 2 determined pixels cloudy, g2: 0 of 1
+      "cloud_fraction_Minimum" -> 0.0, "cloud_fraction_Maximum" -> 0.5,
+      "cloud_fraction_Mean" -> 1.0 / 3, "cloud_fraction_Pixel_Counts" -> 3L,
+      "GRID_Counts" -> 2L))
+    assert(finalized(1) == Map(
+      "cell" -> 9L,
+      "a_Minimum" -> null, "a_Maximum" -> null, "a_Mean" -> null, "a_Pixel_Counts" -> 0L,
+      "a_Standard_Deviation" -> null, "a_Histogram_Counts" -> Seq(0L, 0L, 0L),
+      "a_Jhisto_vs_b" -> Seq(Seq(0L, 0L), Seq(0L, 0L), Seq(0L, 0L)),
+      "b_Minimum" -> 250.0, "b_Maximum" -> 250.0, "b_Mean" -> 250.0, "b_Pixel_Counts" -> 1L,
+      "b_Standard_Deviation" -> 0.0, "b_Histogram_Counts" -> Seq(0L, 1L, 0L),
+      "cloud_fraction_Minimum" -> null, "cloud_fraction_Maximum" -> null,
+      "cloud_fraction_Mean" -> null, "cloud_fraction_Pixel_Counts" -> 0L, "GRID_Counts" -> 0L))
+    // the row is reused: finalizing slot 0 again gives the same values
+    assert(finalized(0)("a_Jhisto_vs_b") == Seq(Seq(0L, 0L), Seq(1L, 1L), Seq(0L, 0L)))
+  }
 }

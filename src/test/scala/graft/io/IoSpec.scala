@@ -598,4 +598,74 @@ class IoSpec extends SparkSpec {
       assert("grid cell (21|42) appears in more than one grid row".r
         .findFirstIn(e.getMessage).nonEmpty, e.getMessage)
   }
+
+  test("one grid densifies and writes the same from one, several and mostly empty partitions") {
+    val cfg = JobConfig(
+      grid = GridSpec(Region(-90, 90, -180, 180), 30.0, 30.0),
+      stats = StatSwitches.All,
+      vars = Seq(
+        VarSpec("v", binEdges = Seq(0.0, 1.0, 2.0, 3.0),
+          joint = Some(JointSpec("w", Seq(0.0, 1.0, 2.0)))),
+        VarSpec("w"),
+        VarSpec(graft.engine.GridAggregation.CloudFractionVar)))
+    // the southern half of the 6 x 12 grid: 36 cells present, 36 absent
+    val px = spark.range(600).select(
+      (pmod($"id" * 37, lit(90)) - 89.5).as("lat"),
+      (pmod($"id" * 91, lit(360)) - 179.5).as("lon"),
+      when($"id" % 11 =!= 0, pmod($"id", lit(4)) * 0.9).as("v"),
+      (pmod($"id", lit(3)) * 0.8).as("w"),
+      pmod($"id", lit(5)).cast("double").as("cm_flag"),
+      concat(lit("g"), ($"id" % 3).cast("string")).as("granule_id"))
+    val grid = graft.engine.GridAggregation.aggregate(px, cfg)
+    val byCell = grid.collect().map(r => r.getLong(0).toInt -> r).toMap
+    assert(byCell.size == 36)
+
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    val one = L3Writer.densify(grid.repartition(1), cfg, Map.empty, Map.empty)
+    // every dense value is the grid row's at its cell, or the init
+    for (dv <- one.vars) {
+      val i = grid.schema.fieldIndex(dv.name)
+      def value(cell: Int) = byCell.get(cell).filterNot(_.isNullAt(i))
+      for (cell <- 0 until 72) dv match {
+        case L3Writer.DenseLongs(name, _, bins, data) =>
+          val w = bins.product
+          val want = value(cell).fold(Seq.fill(w)(0L))(r => bins.size match {
+            case 0 => Seq(r.getLong(i))
+            case 1 => r.getSeq[Long](i)
+            case _ => r.getSeq[Seq[Long]](i).flatten
+          })
+          assert(data.slice(cell * w, (cell + 1) * w).toSeq == want, s"$name at $cell")
+        case L3Writer.DenseDoubles(name, a, data) =>
+          assert(bits(data(cell)) == bits(value(cell).fold(a.scaling.get.fill)(_.getDouble(i))),
+            s"$name at $cell")
+        case L3Writer.DenseCloudFraction(name, a, packed, unrounded) =>
+          val want = value(cell).fold(a.scaling.get.fill)(_.getDouble(i) / 1e-4 + 0.0)
+          assert(bits(unrounded(cell)) == bits(want), s"$name at $cell")
+          assert((packed(cell) == -9999L) == value(cell).isEmpty, s"$name at $cell")
+      }
+    }
+
+    def arrays(l3: L3Writer.DenseL3): Seq[(String, Seq[Long])] = l3.vars.flatMap {
+      case L3Writer.DenseLongs(name, _, _, data) => Seq(name -> data.toSeq)
+      case L3Writer.DenseDoubles(name, _, data) => Seq(name -> data.toSeq.map(bits))
+      case L3Writer.DenseCloudFraction(name, _, packed, unrounded) =>
+        Seq(name -> packed.toSeq, name -> unrounded.toSeq.map(bits))
+    }
+    val dir = Files.createTempDirectory("l3parts")
+    def h5(g: DataFrame, name: String): Seq[Byte] = {
+      val path = dir.resolve(name).toString
+      L3Writer.writeH5(g, cfg, path)
+      Files.readAllBytes(java.nio.file.Paths.get(path)).toSeq
+    }
+    val several = grid.repartition(5)
+    val sparse = grid.repartition(96)
+    val sizes = sparse.rdd.mapPartitions(rows => Iterator(rows.size)).collect()
+    assert(sizes.length == 96 && sizes.count(_ == 0) >= 60)
+    assert(several.rdd.mapPartitions(rows => Iterator(rows.size)).collect().count(_ > 0) > 1)
+    for (g <- Seq(several, sparse))
+      assert(arrays(L3Writer.densify(g, cfg, Map.empty, Map.empty)) == arrays(one))
+    val bytes = h5(grid.repartition(1), "one.h5")
+    assert(h5(several, "several.h5") == bytes)
+    assert(h5(sparse, "sparse.h5") == bytes)
+  }
 }

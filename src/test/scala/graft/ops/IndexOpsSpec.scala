@@ -95,9 +95,9 @@ class IndexOpsSpec extends SparkSpec {
   }
 
   test("coveredSegments survives a crash between the first marker and the first append") {
-    // recordSegment wrote its first marker, then died before the parquet
-    // append: segments/ holds only the ledger dir (a marker named like a
-    // parquet file included), and no parquet the reader could infer from
+    // the store holds nothing but the first marker of one kind, named like
+    // a parquet file: the ledger reads marker names only, and each kind
+    // sees only its own markers
     val idx = tmp("idxcrash_")
     val ledger = java.nio.file.Paths.get(s"$idx/segments/.ledger/postings")
     java.nio.file.Files.createDirectories(ledger)
@@ -175,12 +175,37 @@ class IndexOpsSpec extends SparkSpec {
     val idx = tmp("idxq_")
     IndexOps.refreshPostings(docs.filter(col("doc_id") % 3 =!= 0), idx, "base")
     IndexOps.refreshPostings(docs.filter(col("doc_id") % 3 === 0), idx, "delta1")
-    val phrase = Seq("slow", "hash", "batch")
+    val phrase = Seq("spark", "window", "join")
     val viaLake = IndexOps.phraseSearch(spark, idx, phrase)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val direct = SearchOps.phraseSearch(
       SearchOps.positionalPostings(docs, "doc_id", "text"), phrase)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(viaLake.nonEmpty)
     assert(viaLake == direct)
+  }
+
+  test("phraseSearch reads the lake with its schema: no parquet schema-inference job") {
+    val idx = tmp("idxjobs_")
+    IndexOps.refreshPostings(docs, idx, "base")
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(st => sites.add(st.name))
+    }
+    org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val hits = try {
+      val found = IndexOps.phraseSearch(spark, idx, Seq("spark", "window", "join")).count()
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      found
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(hits > 0)
+    assert(!sites.isEmpty, "no job seen")
+    val parquetJobs = sites.toArray.map(_.toString).filter(_.startsWith("parquet at IndexOps"))
+    assert(parquetJobs.isEmpty, parquetJobs.mkString(", "))
+    // the partition column keeps the type partition discovery gives it
+    assert(IndexOps.readPostings(spark, idx).schema ==
+      spark.read.parquet(s"$idx/postings").schema)
   }
 }
