@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric","value","unit","queries","sf","steal_s","stolen"}`.
@@ -60,20 +58,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // TypedImperativeAggregate (histogram buffers) groups routinely exceed
-      // the 128-group default before falling back to sort-based agg; the
-      // buffers are small (bins x 8B), so stay hash-based far longer
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(defaultCpus = 4)
 
     /** (elapsed s, steal s during the rep); elapsed -1 on failure. */
     def execOnce(name: String): (Double, Double) = {

@@ -29,4 +29,29 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     RefQueries.oracleSql ++ PipelineQueries.oracleSql
+
+  /** The local session the catalog entry points ([[Bench]], [[Verify]],
+    * `examples.PlanDump`) run the queries in: `local[SPARK_GRAFT_CPUS]`
+    * (default `defaultCpus`) with as many shuffle partitions, AQE on, the
+    * legacy nanosecond parquet timestamps read as longs ([[RefQueries.events]]),
+    * UTC, no UI and WARN logging, plus any `extra` settings.
+    */
+  def localSession(defaultCpus: Int, extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // TypedImperativeAggregate (histogram buffers) groups routinely exceed
+      // the 128-group default before falling back to sort-based agg; the
+      // buffers are small (bins x 8B), so stay hash-based far longer
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(extra.toMap)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

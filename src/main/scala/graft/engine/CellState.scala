@@ -15,16 +15,14 @@ import graft.agg.StatsPlan._
   * output order, and where the input row holds what they read — the cell
   * (BIGINT), each variable read (data variables and joint partners, as
   * DOUBLE) by name, the cloud-mask flag (DOUBLE) and the granule id (a
-  * string when `stringIds`, else a long); `flagInput`/`granuleInput` are
-  * -1 without a cloud fraction.
+  * string); `flagInput`/`granuleInput` are -1 without a cloud fraction.
   */
 final case class CellAggSpec(
     layout: Seq[GridColumn],
     cellInput: Int,
     varInputs: Map[String, Int],
     flagInput: Int,
-    granuleInput: Int,
-    stringIds: Boolean) {
+    granuleInput: Int) {
 
   /** The same aggregate over rows that hold input column `i` at `to(i)`. */
   def remap(to: Int => Int): CellAggSpec = {
@@ -44,8 +42,8 @@ final case class CellAggSpec(
   *     joint bins in ONE `Array[Long]` at `slot * lStride + lOff(v)`;
   *   - cloud fraction as per-slot linked entries `(granule, determined,
   *     cloudy)` in primitive arrays; granule ids go through a per-task
-  *     dictionary that keeps the exact id (a string copy, a long, or NULL),
-  *     never only its hash.
+  *     dictionary that keeps the exact id (a string copy, or NULL), never
+  *     only its hash.
   *
   * A partial folds input rows ([[update]]) and ships each slot as bytes
   * ([[encode]]); a final folds those bytes ([[merge]]) and produces the
@@ -225,8 +223,7 @@ private[engine] final class CellState(spec: CellAggSpec, reserve: (Long, Int) =>
 
   private def granuleOf(row: InternalRow): Int =
     if (row.isNullAt(gIn)) idFor(NullId, NullId)
-    else if (spec.stringIds) { val u = row.getUTF8String(gIn); idFor(u, u.copy()) }
-    else { val b = java.lang.Long.valueOf(row.getLong(gIn)); idFor(b, b) }
+    else { val u = row.getUTF8String(gIn); idFor(u, u.copy()) }
 
   // ----------------------------------------------------- partial: fold rows
 
@@ -333,8 +330,7 @@ private[engine] final class CellState(spec: CellAggSpec, reserve: (Long, Int) =>
     pos += 1
   }
 
-  // string ids: varint (byte length + 1) then the bytes, 0 = NULL;
-  // long ids: 1 then 8 bytes, 0 = NULL
+  // varint (byte length + 1) then the bytes, 0 = NULL
   private def putGranule(id: AnyRef): Unit = id match {
     case NullId => putVar(0L)
     case u: UTF8String =>
@@ -342,11 +338,6 @@ private[engine] final class CellState(spec: CellAggSpec, reserve: (Long, Int) =>
       ensure(u.numBytes)
       u.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + pos)
       pos += u.numBytes
-    case b: java.lang.Long =>
-      putVar(1L)
-      ensure(8)
-      Platform.putLong(buf, Platform.BYTE_ARRAY_OFFSET + pos, b.longValue)
-      pos += 8
   }
 
   // ----------------------------------------------------- final: fold bytes
@@ -370,21 +361,15 @@ private[engine] final class CellState(spec: CellAggSpec, reserve: (Long, Int) =>
 
   private def getDouble(): Double = { val x = Platform.getDouble(base, at); at += 8; x }
 
-  private def getGranule(): Int =
-    if (spec.stringIds) {
-      val n = getVar().toInt
-      if (n == 0) idFor(NullId, NullId)
-      else {
-        val u = UTF8String.fromAddress(base, at, n - 1)
-        at += n - 1
-        idFor(u, u.copy())
-      }
-    } else if (getVar() == 0L) idFor(NullId, NullId)
+  private def getGranule(): Int = {
+    val n = getVar().toInt
+    if (n == 0) idFor(NullId, NullId)
     else {
-      val b = java.lang.Long.valueOf(Platform.getLong(base, at))
-      at += 8
-      idFor(b, b)
+      val u = UTF8String.fromAddress(base, at, n - 1)
+      at += n - 1
+      idFor(u, u.copy())
     }
+  }
 
   /** Fold one partial row `(cell, state bytes)` into this state. */
   def merge(row: InternalRow): Unit = {

@@ -65,7 +65,9 @@ object GridAggregation {
     * Every data variable and joint partner is read as DOUBLE (so
     * Minimum/Maximum of an integral or decimal variable are DOUBLE, as the
     * histograms always were), the cloud-mask flag as DOUBLE and the
-    * granule id as a string or BIGINT.
+    * granule id as a string: an integral id as its decimal digits, which
+    * keeps id equality — all that the cloud fraction and `GRID_Counts`
+    * read — and NULL as NULL. Any other granule id type is rejected.
     */
   def aggregate(pixels: DataFrame, cfg: JobConfig): DataFrame = {
     val columns = layout(cfg)
@@ -74,10 +76,9 @@ object GridAggregation {
     val values = (columns.map(_.variable).filterNot(_ == CloudFractionVar) ++ partners).distinct
     val withCf = wantsCloudFraction(cfg)
     val cells = withCell(pixels, cfg)
-    val granuleType = if (withCf) cells.schema("granule_id").dataType else StringType
-    val granule = granuleType match {
+    def granule = cells.schema("granule_id").dataType match {
       case StringType => col("granule_id")
-      case ByteType | ShortType | IntegerType | LongType => col("granule_id").cast(LongType)
+      case ByteType | ShortType | IntegerType | LongType => col("granule_id").cast(StringType)
       case t => throw new IllegalArgumentException(
         s"cloud_fraction needs a string or integral granule id, got ${t.simpleString}")
     }
@@ -89,8 +90,7 @@ object GridAggregation {
       cellInput = 0,
       varInputs = values.zipWithIndex.map { case (n, i) => n -> (1 + i) }.toMap,
       flagInput = if (withCf) 1 + values.size else -1,
-      granuleInput = if (withCf) 2 + values.size else -1,
-      stringIds = granuleType == StringType)
+      granuleInput = if (withCf) 2 + values.size else -1)
     val spark = pixels.sparkSession
     Bridge.injectStrategy(spark, CellAggregateStrategy)
     val child = Bridge.analyzed(input)

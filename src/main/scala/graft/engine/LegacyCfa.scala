@@ -3,6 +3,8 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.expr.GridExprs
+
 /** Legacy fixed-grid cloud-fraction pipeline (P8 + A11) — exact semantics
   * of the reference's deleted `cfa.py` (recovered from bytecode, SURVEY
   * §2.2 P8 / §2.4 A11; `cfa.py:37-50` `aggregateOneFileData`, `:8-35`
@@ -47,7 +49,7 @@ object LegacyCfa {
       .groupBy(col("lat_idx"), col("lon_idx"))
       .agg(
         count(lit(1)).as("total_pix"),
-        count(when(shiftright(col(cmByteCol).bitwiseAND(6), 1) === 0, 1))
+        count(when(GridExprs.bitsStripping(1, 2, col(cmByteCol)) === 0, 1))
           .as("cloud_pix"))
     // dense grid: every cell exists; untouched cells get 0/1 = 0
     val dense = spark.range(GridLat.toLong * GridLon)

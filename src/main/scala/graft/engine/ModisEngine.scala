@@ -41,8 +41,7 @@ object ModisEngine {
     // the ListMap keeps the column order of a fold of withColumn calls
     pixels.withColumns(ListMap(varNames.distinct.map { v =>
       v -> GridExprs.dayDefinitionNullOut(
-        col(v), col("day_of_year"), col("hour"), col("lon"),
-        d0, d1, cfg.shiftHour)
+        col(v), col("day_of_year"), col("hour"), col("lon"), d0, d1)
     }: _*))
   }
 
@@ -70,7 +69,7 @@ object ModisEngine {
     * MODIS_Aggregation_Local_Commands.sh:31`). The reference's date loop
     * (`aggregate_functions.py:573-604`) expands every day of
     * `[dStart, dEnd]` at all 24 hours and, for the END day only, appends the
-    * first `shiftHour` hours of day `dEnd + 1` (the orbit-gap spill); the
+    * first [[GridExprs.ShiftHour]] hours of day `dEnd + 1` (the orbit-gap spill); the
     * day-definition null-out then runs with `day_in_year = [dEnd, dEnd+1]`
     * — the LAST loop iteration's pair is what reaches `run_modis_aggre`
     * (`:595`, `:682`), so interior days are never nulled.
@@ -87,7 +86,7 @@ object ModisEngine {
     val doy = col("day_of_year")
     val inRange =
       (doy >= dStart && doy <= dEnd) ||
-        (doy === dEnd + 1 && col("hour") < cfg.shiftHour)
+        (doy === dEnd + 1 && col("hour") < GridExprs.ShiftHour)
     dailyL3(pixels.filter(inRange), cfg, Some((dEnd, dEnd + 1)))
   }
 }

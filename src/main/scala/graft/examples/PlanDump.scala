@@ -2,7 +2,6 @@ package graft.examples
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Executed-plan dumper for the optimization rounds: runs each named
@@ -26,18 +25,8 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.maxMetadataStringLength", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(defaultCpus = 32,
+      "spark.sql.maxMetadataStringLength" -> "2000")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       spark.catalog.clearCache()

@@ -82,11 +82,24 @@ object GridExprs {
       rowOff: Int = 2, colOff: Int = 3): Column =
     if (n <= 1) lit(true) else row % n === rowOff && col % n === colOff
 
+  /** The "definition of day" grace: a daily L3 aggregate for day D reads
+    * the granules of D plus those of the first `ShiftHour` hours of day D+1
+    * (reference `aggregate_functions.py:317-350` and `:573-606`, fixed at
+    * 3 there).
+    */
+  final val ShiftHour = 3
+
+  /** The longitudes that, in a granule of the first [[ShiftHour]] hours of
+    * a day, belong to the day before: [-180,-90] and [0,90].
+    */
+  def previousDayBand(lon: Column): Column =
+    (lon >= -180 && lon <= -90) || (lon >= 0 && lon <= 90)
+
   /** "Definition of day" correction (reference
     * `aggregate_functions.py:317-350`; rationale `examples/README.md:8`).
     *
     * A daily L3 aggregate for day D consumes granules of D plus the first
-    * `shiftHour` (=3) hours of day D+1. Within those early granules, only
+    * [[ShiftHour]] hours of day D+1. Within those early granules, only
     * specific longitude quadrants belong to each local day:
     *
     *   - granule of day D,   hour < shift: pixels with lon in [-180,-90] or
@@ -109,10 +122,9 @@ object GridExprs {
       hour: Column,
       lon: Column,
       d0: Int,
-      d1: Int,
-      shiftHour: Int = 3): Column = {
-    val early = hour < shiftHour
-    val cutD0 = (lon >= -180 && lon <= -90) || (lon >= 0 && lon <= 90)
+      d1: Int): Column = {
+    val early = hour < ShiftHour
+    val cutD0 = previousDayBand(lon)
     val cutD1 = (lon >= 90 && lon <= 180) || (lon >= -90 && lon <= 0)
     when(early && ((dayOfYear === d0 && cutD0) || (dayOfYear === d1 && cutD1)),
       lit(null)).otherwise(value)

@@ -6,13 +6,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.expr.GridExprs
+
 /** Granule-catalog construction: the reference's file-list scan (S1,
   * `aggregate_functions.py:55-97`) + data/geolocation pairing (J1, `:294`)
   * as a driver-side catalog DataFrame.
   *
   * Reference semantics reproduced:
   *   - a daily aggregate for day D scans granules of D plus the first
-  *     `shiftHour` hours of day D+1 (`:573-606`);
+  *     [[GridExprs.ShiftHour]] hours of day D+1 (`:573-606`);
   *   - per (year, day-of-year, hour) the two product directories are
   *     globbed with prefix `<PREFIX>.AYYYYDDD.HH*`;
   *   - data and geolocation files are paired by their `AYYYYDDD.HHMM`
@@ -36,10 +38,11 @@ object GranuleCatalog {
     keyRe.findFirstMatchIn(fileName).map(m => (m.group(1), m.group(2)))
 
   /** (year, day-of-year, hour-prefix) triples covering [start, end] plus the
-    * `shiftHour` spill into the day after `end` (reference `:573-604`:
-    * hours "00".."23" per day, then the extra early hours of end+1).
+    * [[GridExprs.ShiftHour]] spill into the day after `end` (reference
+    * `:573-604`: hours "00".."23" per day, then the extra early hours of
+    * end+1).
     */
-  def hourPrefixes(start: LocalDate, end: LocalDate, shiftHour: Int = 3): Seq[(Int, Int, String)] = {
+  def hourPrefixes(start: LocalDate, end: LocalDate): Seq[(Int, Int, String)] = {
     require(!end.isBefore(start), s"end $end before start $start")
     val days = Iterator.iterate(start)(_.plusDays(1)).takeWhile(!_.isAfter(end)).toSeq
     val full = for {
@@ -47,7 +50,7 @@ object GranuleCatalog {
       h <- 0 until 24
     } yield (d.getYear, d.getDayOfYear, f"$h%02d")
     val spillDay = end.plusDays(1)
-    val spill = (0 until shiftHour)
+    val spill = (0 until GridExprs.ShiftHour)
       .map(h => (spillDay.getYear, spillDay.getDayOfYear, f"$h%02d"))
     full ++ spill
   }
@@ -61,10 +64,9 @@ object GranuleCatalog {
       dir: String,
       prefix: String,
       start: LocalDate,
-      end: LocalDate,
-      shiftHour: Int = 3): Seq[(String, String, String)] = {
+      end: LocalDate): Seq[(String, String, String)] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    hourPrefixes(start, end, shiftHour).flatMap { case (y, doy, hh) =>
+    hourPrefixes(start, end).flatMap { case (y, doy, hh) =>
       val pattern = new Path(dir, f"$prefix$y%04d$doy%03d.$hh*")
       val statuses = Option(fs.globStatus(pattern)).map(_.toSeq).getOrElse(Nil)
       statuses.flatMap { st =>
@@ -84,12 +86,11 @@ object GranuleCatalog {
       dataDir: String, dataPrefix: String,
       geoDir: String, geoPrefix: String,
       start: LocalDate, end: LocalDate,
-      shiftHour: Int = 3,
       strict: Boolean = true): DataFrame = {
     import spark.implicits._
-    val data = globProduct(spark, dataDir, dataPrefix, start, end, shiftHour)
+    val data = globProduct(spark, dataDir, dataPrefix, start, end)
       .toDF("data_path", "adoy", "hhmm")
-    val geo = globProduct(spark, geoDir, geoPrefix, start, end, shiftHour)
+    val geo = globProduct(spark, geoDir, geoPrefix, start, end)
       .toDF("geo_path", "adoy", "hhmm")
     if (strict) {
       // pair-wise validation, not just count equality — a data granule

@@ -43,7 +43,10 @@ import graft.model.JobConfig
   *     (`:428-435`);
   *   - counts and histograms stay integer (scale 1, `:424-427`);
   *   - cloud-fraction statistics are forced to scale 1e-4, offset 0,
-  *     fill -9999 (`:741-744`);
+  *     fill -9999 (`:741-744`); each sink's projection computes them once,
+  *     in the one form its file holds: int-packed for `.nc` and Parquet,
+  *     the reference's unrounded `value/scale + offset` float64 for `.h5`
+  *     (`:438-444`);
   *   - `_1km` is stripped from output dataset names (`:745-748`);
   *   - an existing output path is a hard error ([[requireAbsent]], the
   *     reference's output-exists shell guard, S5, `:610-617`).
@@ -59,12 +62,6 @@ object L3Writer {
     */
   def pack(v: Column, p: Packing): Column =
     when(nonFinite(v), lit(p.fill)).otherwise(round(v / p.scale + p.offset).cast("long"))
-
-  /** A cloud-fraction statistic as the reference's `.h5` holds it:
-    * `v/scale + offset` unrounded, non-finite and NULL to `fill`.
-    */
-  private def packUnrounded(v: Column, p: Packing): Column =
-    when(nonFinite(v), lit(p.fill.toDouble)).otherwise(v / p.scale + p.offset)
 
   private def nonFinite(v: Column): Column =
     v.isNull || isnan(v) || v === Double.PositiveInfinity || v === Double.NegativeInfinity
@@ -110,6 +107,20 @@ object L3Writer {
 
   private def packed(c: GridColumn, packings: Map[String, Packing]): Column =
     packingOf(c, packings).fold(col(c.name))(pack(col(c.name), _)).as(outputName(c.name))
+
+  /** The `.h5` form of a cloud-fraction statistic (the reference's CF
+    * branch, `:438-444`, assigns before its integer cast): `value/scale +
+    * offset` unrounded, non-finite and NULL to `fill`. Every other column,
+    * and every column of the other sinks, is [[packed]].
+    */
+  private def h5Form(c: GridColumn, packings: Map[String, Packing]): Column = c.stat match {
+    case _: CloudFraction =>
+      val p = packingOf(c, packings).get
+      val v = col(c.name)
+      when(nonFinite(v), lit(p.fill.toDouble)).otherwise(v / p.scale + p.offset)
+        .as(outputName(c.name))
+    case _ => packed(c, packings)
+  }
 
   /** Write the L3 grid as one Parquet file of packed grid rows. */
   def write(
@@ -189,14 +200,8 @@ object L3Writer {
   /** Integers: packed statistics, counts, histograms (`bins` = their extra dims). */
   private[io] final case class DenseLongs(
       name: String, attrs: CfAttrs, bins: Seq[Int], data: Array[Long]) extends DenseVar
-  /** Unpacked floating statistics (no packing listed). */
+  /** Floating statistics: unpacked ones, and the `.h5`'s cloud fractions. */
   private[io] final case class DenseDoubles(name: String, attrs: CfAttrs, data: Array[Double])
-      extends DenseVar
-  /** A cloud-fraction statistic both int-packed and as the reference's
-    * unrounded `value/scale + offset` (non-finite and absent -> fill).
-    */
-  private[io] final case class DenseCloudFraction(
-      name: String, attrs: CfAttrs, packed: Array[Long], unrounded: Array[Double])
       extends DenseVar
 
   private[io] final case class DenseL3(nLat: Int, nLon: Int, vars: Seq[DenseVar])
@@ -361,29 +366,30 @@ object L3Writer {
   }
 
   /** Collect the grid ONCE and densify every layout column, in layout
-    * order, under its output name. The projection holds `cell`, the packed
-    * columns and the unrounded packing of each cloud-fraction statistic;
-    * it is collected as one block of primitive columns per partition and
-    * scattered into one dense array per column ([[CellRows]]).
+    * order, under its output name. The projection holds `cell` and each
+    * column in the one form the sink's file holds ([[packed]], or
+    * [[h5Form]] when `h5`); it is collected as one block of primitive
+    * columns per partition and scattered into one dense array per column
+    * ([[CellRows]]).
     *
     * Each column's stat decides its dense form: cells absent from the
     * grid frame surface as `_FillValue` for statistics and 0 for
     * counts/histograms — the reference's init values (`+inf -> fill` /
     * zeros) after packing. Histograms take their bin counts from the
-    * stat's edges, and every row's shape is checked against them. A packed
-    * statistic is int64, an unpacked one float64.
+    * stat's edges, and every row's shape is checked against them. An
+    * int-packed statistic is int64, any other float64.
     */
   private[io] def densify(
       grid: DataFrame,
       cfg: JobConfig,
       packings: Map[String, Packing],
-      varAttrs: Map[String, PixelSource.VarAttrs]): DenseL3 = {
+      varAttrs: Map[String, PixelSource.VarAttrs],
+      h5: Boolean): DenseL3 = {
     val layout = layoutOf(grid, cfg)
-    val cloudFractions = layout.filter(_.stat.isInstanceOf[CloudFraction])
-    val projection = grid.select((col("cell") +: layout.map(packed(_, packings))) ++
-      cloudFractions.map(c => packUnrounded(col(c.name), packingOf(c, packings).get)
-        .as(s"__unrounded_${c.name}")): _*)
-    val rows = new CellRows(projection, cfg.grid.gridLat, cfg.grid.gridLon)
+    val form: GridColumn => Column =
+      if (h5) h5Form(_, packings) else packed(_, packings)
+    val rows = new CellRows(grid.select(col("cell") +: layout.map(form): _*),
+      cfg.grid.gridLat, cfg.grid.gridLon)
 
     // the dense arrays are allocated here and filled in place by `fill`
     val vars = layout.zipWithIndex.map { case (gc, k) =>
@@ -391,13 +397,10 @@ object L3Writer {
       val i = k + 1
       val attrs = cfAttrs(gc, packings, varAttrs)
       (gc.stat, packingOf(gc, packings)) match {
-        case (_: CloudFraction, Some(p)) =>
-          val unrounded = 1 + layout.size + cloudFractions.indexOf(gc)
-          DenseCloudFraction(c, attrs, rows.longs(i, p.fill),
-            rows.doubles(unrounded, p.fill.toDouble))
         case (h: Histogram, _) => DenseLongs(c, attrs, h.bins, rows.histogram(c, i, h.bins))
         case (_: Count, _) => DenseLongs(c, attrs, Nil, rows.longs(i, 0L))
-        case (_, Some(p)) => DenseLongs(c, attrs, Nil, rows.longs(i, p.fill))
+        case (stat, Some(p)) if !(h5 && stat.isInstanceOf[CloudFraction]) =>
+          DenseLongs(c, attrs, Nil, rows.longs(i, p.fill))
         case _ => DenseDoubles(c, attrs, rows.doubles(i, attrs.scaling.get.fill))
       }
     }
@@ -434,7 +437,7 @@ object L3Writer {
       varAttrs: Map[String, PixelSource.VarAttrs] = Map.empty): Unit = {
     import NetCDF3._
     requireAbsent(path)
-    val l3 = densify(grid, cfg, packings, varAttrs)
+    val l3 = densify(grid, cfg, packings, varAttrs, h5 = false)
 
     val dims = scala.collection.mutable.ArrayBuffer(
       Dim("lat_bnd", l3.nLat), Dim("lon_bnd", l3.nLon))
@@ -467,8 +470,6 @@ object L3Writer {
         Var(c, Seq(0, 1) ++ binDims.map(dimId), NcInt, atts(a, fillAsInt = true), ints(c, data))
       case DenseDoubles(c, a, data) =>
         Var(c, Seq(0, 1), NcDouble, atts(a, fillAsInt = false), data)
-      case DenseCloudFraction(c, a, packed, _) =>
-        Var(c, Seq(0, 1), NcInt, atts(a, fillAsInt = true), ints(c, packed))
     }
 
     val axisVars = Seq(
@@ -525,7 +526,7 @@ object L3Writer {
       varAttrs: Map[String, PixelSource.VarAttrs] = Map.empty): Unit = {
     import HDF5._
     requireAbsent(path)
-    val l3 = densify(grid, cfg, packings, varAttrs)
+    val l3 = densify(grid, cfg, packings, varAttrs, h5 = true)
     val latLon = Seq(l3.nLat, l3.nLon)
 
     def atts(a: CfAttrs, rank: Int, fillAsLong: Boolean): Seq[Att] =
@@ -542,8 +543,6 @@ object L3Writer {
         Dataset(c, latLon ++ bins, H5Int64, atts(a, 2 + bins.size, fillAsLong = true), data)
       case DenseDoubles(c, a, data) =>
         Dataset(c, latLon, H5Float64, atts(a, 2, fillAsLong = false), data)
-      case DenseCloudFraction(c, a, _, unrounded) =>
-        Dataset(c, latLon, H5Float64, atts(a, 2, fillAsLong = false), unrounded)
     }
 
     val axes = Seq(

@@ -81,14 +81,15 @@ final case class JointSpec(jointVar: String, jointEdges: Seq[Double])
 /** Complete grid-aggregation job: what the reference's 15-16 CLI args +
   * three CSVs describe (`aggregate_functions.py:459-515`).
   *
+  * The "definition of day" grace hours are not part of it: the reference
+  * fixes them at 3 (`:317-350`), and so does the engine
+  * (`graft.expr.GridExprs.ShiftHour`).
+  *
   * @param sampling systematic decimation factor n: keep `row % n == 2 &&
   *   col % n == 3` (reference `:120`); 1 = keep all.
-  * @param shiftHour "definition of day" grace hours (reference `:317-350`,
-  *   fixed 3 in the reference).
   */
 final case class JobConfig(
     grid: GridSpec = GridSpec.Global1Deg,
     stats: StatSwitches = StatSwitches(),
     vars: Seq[VarSpec] = Nil,
-    sampling: Int = 1,
-    shiftHour: Int = 3)
+    sampling: Int = 1)

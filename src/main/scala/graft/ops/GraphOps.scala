@@ -202,13 +202,14 @@ object GraphOps {
     * once; each iteration is ONE shuffle of the (node-sized) rank table by
     * `src` to meet the pre-partitioned edges plus ONE map-side-combined
     * `groupBy(dst)` sum — the edge list itself is hash-partitioned once
-    * and reused, never re-shuffled. Lineage is cut with a local checkpoint
+    * and reused, never re-shuffled. Lineage is cut ([[Lineage.cut]])
     * every 4 iterations so the plan stays O(1) per round (same discipline
-    * as [[connectedComponents]]). The edge/node caches stay alive for the
-    * caller's action and are released by session cache eviction — an
-    * eager materialize-then-unpersist epilogue was measured at ~2x the
-    * query cost (one full extra pass, and it un-pipelines the final
-    * iteration) and rejected.
+    * as [[connectedComponents]]), and every iteration in dangling mode,
+    * whose share reads the rank table a second time. The edge/node caches
+    * stay alive for the caller's action and are released by session
+    * cache eviction — an eager materialize-then-unpersist epilogue was
+    * measured at ~2x the query cost (one full extra pass, and it
+    * un-pipelines the final iteration) and rejected.
     *
     * Returns `(node, rank_fp)` with `rank_fp` in `scale` units.
     */
@@ -270,10 +271,6 @@ object GraphOps {
 
     var ranks = nodes.select(col("node"), teleport(init).as("rank"))
     for (i <- 1 to iters) {
-      // dangling mode consumes the rank table TWICE per iteration (edge
-      // contributions + the dangling scalar); without a cache the second
-      // consumer re-computes the whole lineage — exponential in iters
-      if (redistributeDangling) ranks = ranks.cache()
       // shuffle_hash on the node-sized rank side: the rank table inherits
       // hash(node) partitioning from the cached `nodes` frame, so the join
       // needs no exchange — but that also means NO shuffle stage exists
@@ -288,26 +285,24 @@ object GraphOps {
         .select(col("dst"), expr("rank div outdeg").as("c"))
         .groupBy(col("dst"))
         .agg(sum(col("c")).as("s"))
-      val next =
-        if (redistributeDangling) {
+      val joined = nodes.join(sums, nodes("node") === sums("dst"), "left")
+      // dangling mode adds each node's share of the dangling rank mass
+      val (received, mass) =
+        if (!redistributeDangling) (joined, "coalesce(s, 0L)")
+        else {
           val share = danglingNodes.join(ranks, "node")
             .agg(coalesce(sum(col("rank")), lit(0L)).as("d"))
             .select(expr(s"d div $n").as("share"))
-          nodes
-            .join(sums, nodes("node") === sums("dst"), "left")
-            .crossJoin(broadcast(share)) // 1 row: BNLJ attach, no shuffle
-            .select(col("node"),
-              (lit(base) +
-                expr(s"($dampNum * (coalesce(s, 0L) + share)) div $dampDen"))
-                .as("rank"))
-        } else {
-          nodes
-            .join(sums, nodes("node") === sums("dst"), "left")
-            .select(col("node"),
-              (teleport(base) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
-                .as("rank"))
+          // 1 row: BNLJ attach, no shuffle
+          (joined.crossJoin(broadcast(share)), "(coalesce(s, 0L) + share)")
         }
-      ranks = if (i % 4 == 0 && i < iters) next.cutLineage() else next
+      val next = received.select(col("node"),
+        (teleport(base) + expr(s"($dampNum * $mass) div $dampDen")).as("rank"))
+      // dangling mode consumes the rank table TWICE per iteration (edge
+      // contributions + the dangling share), so each iteration's table is
+      // cut: a cached one would still carry its whole lineage in its plan
+      val cut = i < iters && (redistributeDangling || i % 4 == 0)
+      ranks = if (cut) next.cutLineage() else next
     }
     ranks.select(col("node"), col("rank").as("rank_fp"))
   }

@@ -85,6 +85,10 @@ object RefQueries {
   private def cfg(stats: StatSwitches, vars: VarSpec*): JobConfig =
     JobConfig(grid = grid, stats = stats, vars = vars)
 
+  /** Every statistic switched off: the histogram queries switch theirs on. */
+  private val statsOff =
+    StatSwitches(min = false, max = false, mean = false, count = false, std = false)
+
   // ---------------------------------------------------------------- queries
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -169,23 +173,24 @@ object RefQueries {
           .as("value_corrected"))
     }),
 
-    // A6: 1-D fixed-bin histogram — scalable plan: codegen'd bin-index
-    // expression + groupBy(cell, bin).count() (map-side partial agg).
+    // A6: 1-D fixed-bin histogram — the cell aggregate with only the
+    // histogram switch on, its per-cell bin array exploded to one row per
+    // non-empty (cell, bin).
     "q_a6_histogram" -> ((s, dir) =>
-      GridAggregation.withCell(pixels(s, dir), cfg(StatSwitches()))
-        .withColumn("bin", Binning.binIndex(col("l_quantity"), histEdgesQty))
-        .filter(col("bin").isNotNull)
-        .groupBy(col("cell"), col("bin"))
-        .agg(count(lit(1)).as("bin_count"))),
+      GridAggregation.aggregate(pixels(s, dir),
+        cfg(statsOff.copy(hist = true), VarSpec("l_quantity", histEdgesQty)))
+        .select(col("cell"),
+          posexplode(col("l_quantity_Histogram_Counts")).as(Seq("bin", "bin_count")))
+        .filter(col("bin_count") > 0)),
 
-    // A7: 2-D joint histogram, same exploded shape.
+    // A7: 2-D joint histogram, the same plan, exploded per (cell, xbin, ybin).
     "q_a7_jhist" -> ((s, dir) =>
-      GridAggregation.withCell(pixels(s, dir), cfg(StatSwitches()))
-        .withColumn("xbin", Binning.binIndex(col("l_quantity"), histEdgesQty))
-        .withColumn("ybin", Binning.binIndex(col("lon"), histEdgesDisc))
-        .filter(col("xbin").isNotNull && col("ybin").isNotNull)
-        .groupBy(col("cell"), col("xbin"), col("ybin"))
-        .agg(count(lit(1)).as("bin_count"))),
+      GridAggregation.aggregate(pixels(s, dir),
+        cfg(statsOff.copy(jhist = true),
+          VarSpec("l_quantity", histEdgesQty, Some(JointSpec("lon", histEdgesDisc)))))
+        .select(col("cell"), posexplode(col("l_quantity_Jhisto_vs_lon")).as(Seq("xbin", "ys")))
+        .select(col("cell"), col("xbin"), posexplode(col("ys")).as(Seq("ybin", "bin_count")))
+        .filter(col("bin_count") > 0)),
 
     // A6 quirk-parity variant: reference skips histogram accumulation for
     // granule-cells with exactly one pixel (aggregate_functions.py:259-260).

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util
 
+import scala.annotation.switch
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -250,26 +252,29 @@ private[sources] class GranulePixelReader(p: GranulePartition, required: StructT
   private def unit(k: Long): Double = // in [0,1)
     (mix(seed * 1315423911L + k) >>> 11).toDouble / (1L << 53).toDouble
 
-  private def valueAt(field: String): Any = field match {
-    case "granule_id" => gidUtf8
-    case "day_of_year" => meta.dayOfYear
-    case "hour" => meta.hour
-    case "row" => i / p.cols
-    case "col" => i % p.cols
-    case "lat" => unit(i * 4L) * 180.0 - 90.0
-    case "lon" => unit(i * 4L + 1) * 360.0 - 180.0
-    case "cm_byte" => (mix(seed + i) & 0x7).toInt
-    case "Cloud_Top_Pressure" =>
+  // each pruned field resolved once to its ordinal in the source schema
+  private val fields: Array[Int] =
+    required.fields.map(f => GranuleSource.schema.fieldIndex(f.name))
+  // one row buffer per reader (Spark copies rows it retains — standard
+  // PartitionReader contract)
+  private val rowBuf =
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fields.length)
+
+  // the fields in `GranuleSource.schema` order
+  private def valueAt(field: Int): Any = (field: @switch) match {
+    case 0 => gidUtf8 // granule_id
+    case 1 => meta.dayOfYear
+    case 2 => meta.hour
+    case 3 => i / p.cols // row
+    case 4 => i % p.cols // col
+    case 5 => unit(i * 4L) * 180.0 - 90.0 // lat
+    case 6 => unit(i * 4L + 1) * 360.0 - 180.0 // lon
+    case 7 => (mix(seed + i) & 0x7).toInt // cm_byte
+    case 8 => // Cloud_Top_Pressure
       if (unit(i * 4L + 2) < 0.02) null else unit(i * 4L + 2) * 900.0 + 200.0
-    case "Cloud_Top_Temperature" =>
+    case 9 => // Cloud_Top_Temperature
       if (unit(i * 4L + 3) < 0.02) null else unit(i * 4L + 3) * 130.0 + 180.0
   }
-
-  // pre-resolve the pruned fields once; reuse one row buffer per reader
-  // (Spark copies rows it retains — standard PartitionReader contract)
-  private val fieldNames: Array[String] = required.fields.map(_.name)
-  private val rowBuf =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fieldNames.length)
 
   override def next(): Boolean = {
     i += 1
@@ -278,8 +283,8 @@ private[sources] class GranulePixelReader(p: GranulePartition, required: StructT
 
   override def get(): InternalRow = {
     var j = 0
-    while (j < fieldNames.length) {
-      rowBuf.update(j, valueAt(fieldNames(j)))
+    while (j < fields.length) {
+      rowBuf.update(j, valueAt(fields(j)))
       j += 1
     }
     rowBuf

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.GridAggregation
 import graft.expr.GridExprs
 import graft.model.JobConfig
 
@@ -12,11 +13,11 @@ import graft.model.JobConfig
   * assignment. Here that becomes literal Structured Streaming:
   *
   *   - [[dayAssignedTs]] shifts a pixel's event time back one day when it
-  *     arrives in the first `shiftHour` hours AND lies in the longitude
-  *     bands the reference reassigns ([-180,-90] or [0,90],
-  *     `aggregate_functions.py:317-350`) — window assignment replaces the
-  *     batch null-out;
-  *   - the watermark of `shiftHour` hours finalizes each day's grid once
+  *     arrives in the first [[GridExprs.ShiftHour]] hours AND lies in the
+  *     longitude bands the reference reassigns
+  *     ([[GridExprs.previousDayBand]], `aggregate_functions.py:317-350`) —
+  *     window assignment replaces the batch null-out;
+  *   - the watermark of [[GridExprs.ShiftHour]] hours finalizes each day's grid once
   *     the spill period has passed — the streaming twin of the reference
   *     needing "1 day + 3 h of granules" per daily product
   *     (`examples/README.md:8-10`).
@@ -29,10 +30,8 @@ import graft.model.JobConfig
 object ModisStream {
 
   /** Event time adjusted by the day-definition rule. */
-  def dayAssignedTs(ts: Column, lon: Column, shiftHour: Int = 3): Column =
-    when(
-      hour(ts) < shiftHour &&
-        ((lon >= -180 && lon <= -90) || (lon >= 0 && lon <= 90)),
+  def dayAssignedTs(ts: Column, lon: Column): Column =
+    when(hour(ts) < GridExprs.ShiftHour && GridExprs.previousDayBand(lon),
       ts - expr("INTERVAL 1 DAY")).otherwise(ts)
 
   /** Per (day-window, cell) statistics of `varName`. Works on a streaming
@@ -43,15 +42,11 @@ object ModisStream {
       cfg: JobConfig,
       varName: String,
       tsCol: String = "ts",
-      watermark: Option[String] = Some("3 hours")): DataFrame = {
+      watermark: Option[String] = Some(s"${GridExprs.ShiftHour} hours")): DataFrame = {
     val assigned = pixels
-      .withColumn("event_day_ts", dayAssignedTs(col(tsCol), col("lon"), cfg.shiftHour))
+      .withColumn("event_day_ts", dayAssignedTs(col(tsCol), col("lon")))
     val marked = watermark.fold(assigned)(w => assigned.withWatermark("event_day_ts", w))
-    val g = cfg.grid
-    marked
-      .filter(GridExprs.inRegion(col("lat"), col("lon"), g.region))
-      .withColumn("cell", GridExprs.cellId(col("lat"), col("lon"), g))
-      .filter(GridExprs.cellInGrid(col("cell"), g))
+    GridAggregation.withCell(marked, cfg)
       .groupBy(window(col("event_day_ts"), "1 day").as("win"), col("cell"))
       .agg(
         min(col(varName)).as(s"${varName}_Minimum"),

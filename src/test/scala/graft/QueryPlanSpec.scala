@@ -364,6 +364,20 @@ class QueryPlanSpec extends SparkSpec {
       s"iterative joins must stay hash-based:\n$plan")
   }
 
+  test("q_a6_histogram / q_a7_jhist: CellPartial -> one Exchange -> CellFinal") {
+    for (q <- Seq("q_a6_histogram", "q_a7_jhist")) {
+      val plan = finalPlan(q).split("== Initial Plan ==").head
+      assert(!plan.contains("HashAggregate"), s"$q binned outside the cell aggregate:\n$plan")
+      val lines = plan.linesIterator.toSeq
+      def at(node: String): Seq[Int] = lines.indices.filter(lines(_).contains(node))
+      assert(at("CellPartial").size == 1 && at("Exchange").size == 1 && at("CellFinal").size == 1,
+        s"$q:\n$plan")
+      assert(at("CellFinal").head < at("Exchange").head &&
+        at("Exchange").head < at("CellPartial").head, s"$q:\n$plan")
+      assert(lines(at("Exchange").head).contains("hashpartitioning(cell#"), s"$q:\n$plan")
+    }
+  }
+
   test("q_merge_upsert: CDC apply is ONE key shuffle with partial max_by — no join") {
     val plan = finalPlan("q_merge_upsert")
     assert(!plan.contains("Join"),

@@ -73,14 +73,4 @@ class HistogramAggSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getSeq[Seq[Long]](1)).toMap
     assert(run(1) == run(8))
   }
-
-  test("Column binIndex agrees with binIndexScala") {
-    val rnd = new scala.util.Random(3)
-    val vals = (1 to 2000).map(_ => rnd.nextDouble() * 12 - 1)
-    val got = vals.toDF("v")
-      .select(Binning.binIndex($"v", edges).as("b"))
-      .collect().map(r => if (r.isNullAt(0)) -1 else r.getInt(0))
-    val want = vals.map(v => Binning.binIndexScala(v, edges.toArray))
-    assert(got.toSeq == want)
-  }
 }

@@ -182,8 +182,7 @@ class CellAggregateSpec extends SparkSpec {
     val tmm = new org.apache.spark.memory.TaskMemoryManager(
       org.apache.spark.memory.UnifiedMemoryManager(conf, 1), 0L)
     val spec = CellAggSpec(GridAggregation.layout(JobConfig(vars = Seq(VarSpec("a")))),
-      cellInput = 0, varInputs = Map("a" -> 1), flagInput = -1, granuleInput = -1,
-      stringIds = false)
+      cellInput = 0, varInputs = Map("a" -> 1), flagInput = -1, granuleInput = -1)
     val partial = new CellState(spec, (_, _) => ())
     (0 until 50000).foreach(c => partial.update(new GenericInternalRow(Array[Any](c.toLong, 1.0))))
     val mem = new StateMemory(tmm, 7)
@@ -204,7 +203,7 @@ class CellAggregateSpec extends SparkSpec {
 
   test("finalized writes every stat of a slot: histograms, NULL statistics, cloud fraction") {
     val spec = CellAggSpec(GridAggregation.layout(cfg), cellInput = 0,
-      varInputs = Map("a" -> 1, "b" -> 2), flagInput = 3, granuleInput = 4, stringIds = true)
+      varInputs = Map("a" -> 1, "b" -> 2), flagInput = 3, granuleInput = 4)
     val st = new CellState(spec, (_, _) => ())
     def row(cell: Long, a: Any, b: Any, flag: Any, g: String) = new GenericInternalRow(
       Array[Any](cell, a, b, flag, org.apache.spark.unsafe.types.UTF8String.fromString(g)))

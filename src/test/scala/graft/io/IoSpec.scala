@@ -621,12 +621,27 @@ class IoSpec extends SparkSpec {
     assert(byCell.size == 36)
 
     def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
-    val one = L3Writer.densify(grid.repartition(1), cfg, Map.empty, Map.empty)
+    val cloudFractions = graft.engine.GridAggregation.layout(cfg).collect {
+      case c if c.stat.isInstanceOf[graft.agg.StatsPlan.CloudFraction] => c.name
+    }.toSet
+    // the .nc form of a cloud fraction is int-packed, the .h5 form unrounded
+    def densify(g: DataFrame, asH5: Boolean) =
+      L3Writer.densify(g, cfg, Map.empty, Map.empty, asH5)
+    def arrays(l3: L3Writer.DenseL3): Seq[(String, Seq[Long])] = l3.vars.map {
+      case L3Writer.DenseLongs(name, _, _, data) => name -> data.toSeq
+      case L3Writer.DenseDoubles(name, _, data) => name -> data.toSeq.map(bits)
+    }
+    val ones = Seq(false, true).map(asH5 => asH5 -> densify(grid.repartition(1), asH5)).toMap
     // every dense value is the grid row's at its cell, or the init
-    for (dv <- one.vars) {
+    for ((asH5, one) <- ones; dv <- one.vars) {
       val i = grid.schema.fieldIndex(dv.name)
       def value(cell: Int) = byCell.get(cell).filterNot(_.isNullAt(i))
+      val cf = cloudFractions(dv.name)
       for (cell <- 0 until 72) dv match {
+        case L3Writer.DenseLongs(name, _, _, data) if cf =>
+          assert(!asH5, name)
+          assert(value(cell).fold(data(cell) == -9999L)(r =>
+            math.abs(data(cell) - r.getDouble(i) / 1e-4) <= 0.5), s"$name at $cell")
         case L3Writer.DenseLongs(name, _, bins, data) =>
           val w = bins.product
           val want = value(cell).fold(Seq.fill(w)(0L))(r => bins.size match {
@@ -636,21 +651,13 @@ class IoSpec extends SparkSpec {
           })
           assert(data.slice(cell * w, (cell + 1) * w).toSeq == want, s"$name at $cell")
         case L3Writer.DenseDoubles(name, a, data) =>
-          assert(bits(data(cell)) == bits(value(cell).fold(a.scaling.get.fill)(_.getDouble(i))),
-            s"$name at $cell")
-        case L3Writer.DenseCloudFraction(name, a, packed, unrounded) =>
-          val want = value(cell).fold(a.scaling.get.fill)(_.getDouble(i) / 1e-4 + 0.0)
-          assert(bits(unrounded(cell)) == bits(want), s"$name at $cell")
-          assert((packed(cell) == -9999L) == value(cell).isEmpty, s"$name at $cell")
+          assert(!cf || asH5, name)
+          val scaled = (v: Double) => if (cf) v / 1e-4 + 0.0 else v
+          assert(bits(data(cell)) == bits(value(cell).fold(a.scaling.get.fill)(r =>
+            scaled(r.getDouble(i)))), s"$name at $cell")
       }
     }
 
-    def arrays(l3: L3Writer.DenseL3): Seq[(String, Seq[Long])] = l3.vars.flatMap {
-      case L3Writer.DenseLongs(name, _, _, data) => Seq(name -> data.toSeq)
-      case L3Writer.DenseDoubles(name, _, data) => Seq(name -> data.toSeq.map(bits))
-      case L3Writer.DenseCloudFraction(name, _, packed, unrounded) =>
-        Seq(name -> packed.toSeq, name -> unrounded.toSeq.map(bits))
-    }
     val dir = Files.createTempDirectory("l3parts")
     def h5(g: DataFrame, name: String): Seq[Byte] = {
       val path = dir.resolve(name).toString
@@ -662,8 +669,8 @@ class IoSpec extends SparkSpec {
     val sizes = sparse.rdd.mapPartitions(rows => Iterator(rows.size)).collect()
     assert(sizes.length == 96 && sizes.count(_ == 0) >= 60)
     assert(several.rdd.mapPartitions(rows => Iterator(rows.size)).collect().count(_ > 0) > 1)
-    for (g <- Seq(several, sparse))
-      assert(arrays(L3Writer.densify(g, cfg, Map.empty, Map.empty)) == arrays(one))
+    for (g <- Seq(several, sparse); (asH5, one) <- ones)
+      assert(arrays(densify(g, asH5)) == arrays(one))
     val bytes = h5(grid.repartition(1), "one.h5")
     assert(h5(several, "several.h5") == bytes)
     assert(h5(sparse, "sparse.h5") == bytes)
